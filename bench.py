@@ -638,6 +638,11 @@ def main() -> None:
         print("# retry skipped: first pass exceeded the wall budget",
               file=sys.stderr)
     elif loaded_box:
+        # every retry's timed_median calls overwrite query_steal rows;
+        # keep the contended first pass's per-query evidence (taken ONCE,
+        # before any retry) so an adopted capture still explains WHY the
+        # first pass read high
+        fp_query_steal = {n: query_steal.get(n) for n in BENCH_QUERIES}
         for attempt in range(1, RETRY_MAX_ATTEMPTS + 1):
             if (time.time() - bench_t0) > RETRY_WALL_BUDGET_SEC:
                 retry_attempts.append({
@@ -671,12 +676,6 @@ def main() -> None:
                     file=sys.stderr,
                 )
                 continue
-            # the retry's timed_median calls overwrite query_steal rows;
-            # keep the contended first pass's per-query evidence so an
-            # adopted capture still explains WHY the first pass read high
-            fp_query_steal = {
-                n: query_steal.get(n) for n in BENCH_QUERIES
-            }
             r_timings: dict[str, float] = {}
             for i, name in enumerate(BENCH_QUERIES):
                 r_timings[name] = timed_median(name, n_runs=3)

@@ -6370,6 +6370,38 @@ def test_gopher_flags_zero_shuffle_plan(spark):
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
 
 
+def test_gopher_flags_quoted_column_and_numeric_thresholds(spark):
+    """The text column is quoted as an identifier (a name with a space
+    or a backtick still resolves) and every threshold renders as a finite
+    DOUBLE literal, whatever real number type it arrives as."""
+    from decimal import Decimal
+
+    import numpy as np
+
+    from w4h_integrated_toolkit_spark.operators.text import gopher_quality_flags
+
+    text = "the cat\nthe cat\nbird x"
+    plain = gopher_quality_flags(
+        spark.createDataFrame([(1, text)], "doc_id long, text string")
+    ).collect()
+    for name in ("body text", "odd`name"):
+        df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        got = gopher_quality_flags(df.withColumnRenamed("text", name), text=name)
+        assert got.collect() == plain
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    for kw in (
+        {"min_mean_word_len": np.float64(2.5), "max_dup_line_frac": np.float64(0.5)},
+        {"min_mean_word_len": Decimal("2.5"), "max_dup_line_frac": np.float32(0.5)},
+    ):
+        r = gopher_quality_flags(df, min_words=np.int64(6), **kw).collect()[0]
+        # 6 words, mean 2.83 >= 2.5 and 1/3 dup lines <= 0.5 now pass;
+        # stop words and dup chars still fail
+        assert sorted(r["fail_reasons"]) == ["dup_line_chars", "stopwords"]
+    for bad in (float("nan"), float("inf"), np.float64("-inf")):
+        with pytest.raises(ValueError, match="max_symbol_word_ratio"):
+            gopher_quality_flags(df, max_symbol_word_ratio=bad)
+
+
 # --------------------------------------------------------------------------
 # c4_clean_lines — the published C4 cleaning pass (Raffel et al. 2020)
 # --------------------------------------------------------------------------

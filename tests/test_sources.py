@@ -531,6 +531,136 @@ def test_versioned_vacuum_keeps_retained_versions_working(spark, tmp_path):
     assert len(data_dirs) >= 2
 
 
+def _three_partition_table(spark, t):
+    """Three versions over dt partitions d0..d2; the third write widens
+    ``v`` from int to long, so the carried partitions keep int files."""
+    from w4h_integrated_toolkit_spark.sources.versioned import upsert_parquet
+
+    upsert_parquet(
+        spark,
+        t,
+        spark.createDataFrame(
+            [(i, f"d{i % 2}", i) for i in range(10)], "id long, dt string, v int"
+        ),
+        key="id",
+        partition_col="dt",
+    )
+    upsert_parquet(
+        spark,
+        t,
+        spark.createDataFrame([(0, "d0", 100)], "id long, dt string, v int"),
+        key="id",
+        partition_col="dt",
+    )
+    upsert_parquet(
+        spark,
+        t,
+        spark.createDataFrame(
+            [(20, "d2", 2**40), (21, "d2", 7)], "id long, dt string, v long"
+        ),
+        key="id",
+        partition_col="dt",
+    )
+    return {**{i: i for i in range(10)}, 0: 100, 20: 2**40, 21: 7}
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_versioned_read_launches_no_job(spark, tmp_path):
+    """Opening a version pins every scan to the manifest's recorded
+    schema: no schema-inference job per partition."""
+    from w4h_integrated_toolkit_spark.sources.versioned import read_versioned
+
+    t = str(tmp_path / "tbl")
+    want = _three_partition_table(spark, t)
+    df, jobs = _jobs_in(spark, "w4h_rv_open", lambda: read_versioned(spark, t))
+    assert jobs == [], f"read_versioned launched jobs {jobs}"
+    _, jobs = _jobs_in(
+        spark, "w4h_rv_open_v1", lambda: read_versioned(spark, t, version=1)
+    )
+    assert jobs == []
+    assert {r["id"]: r["v"] for r in df.collect()} == want
+    assert dict(df.dtypes)["v"] == "bigint"
+
+
+def test_versioned_manifest_schema_matches_every_partition(spark, tmp_path):
+    """The schema recorded for each partition's write batch is exactly
+    what an inferred parquet read of that data dir returns — including
+    carried partitions written before a later write widened a type."""
+    from w4h_integrated_toolkit_spark.sources.versioned import list_versions
+
+    t = str(tmp_path / "tbl")
+    _three_partition_table(spark, t)
+    checked = 0
+    for v in list_versions(t):
+        with open(os.path.join(t, "_manifests", f"v{v}.json")) as f:
+            m = json.load(f)
+        batches = {rel.split(os.sep)[1] for rel in m["partitions"].values()}
+        assert set(m["schema"]) == batches  # no stale batches carried
+        for rel in m["partitions"].values():
+            recorded = T.StructType.fromJson(m["schema"][rel.split(os.sep)[1]])
+            assert recorded == spark.read.parquet(os.path.join(t, rel)).schema
+            checked += 1
+    assert checked == 2 + 2 + 3
+    with open(os.path.join(t, "_manifests", "v3.json")) as f:
+        schemas = json.load(f)["schema"]
+    assert sorted(
+        dict((fl["name"], fl["type"]) for fl in s["fields"])["v"]
+        for s in schemas.values()
+    ) == ["integer", "integer", "long"]
+
+
+def test_versioned_manifests_without_schema_fall_back_to_inference(
+    spark, tmp_path
+):
+    """Manifests written before schemas were recorded read back
+    row-for-row the same, and an upsert on top of them works (its new
+    batch is recorded, the carried legacy batches still infer)."""
+    import shutil
+
+    from w4h_integrated_toolkit_spark.sources.versioned import (
+        list_versions,
+        read_versioned,
+        upsert_parquet,
+    )
+
+    t = str(tmp_path / "tbl")
+    legacy = str(tmp_path / "legacy")
+    _three_partition_table(spark, t)
+    shutil.copytree(t, legacy)
+    for v in list_versions(legacy):
+        path = os.path.join(legacy, "_manifests", f"v{v}.json")
+        with open(path) as f:
+            m = json.load(f)
+        del m["schema"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+
+    def rows(table, version=None):
+        df = read_versioned(spark, table, version)
+        return df.schema, sorted(df.collect())
+
+    for v in list_versions(t):
+        assert rows(legacy, v) == rows(t, v)
+
+    upd = spark.createDataFrame([(1, "d1", 5)], "id long, dt string, v long")
+    for table in (t, legacy):
+        upsert_parquet(spark, table, upd, key="id", partition_col="dt")
+    assert rows(legacy) == rows(t)
+    with open(os.path.join(legacy, "_manifests", "v4.json")) as f:
+        assert len(json.load(f)["schema"]) == 1  # only the new batch
+
+
 def test_model_store_replace_params_and_time_travel(spark, tmp_path):
     """save_model/load_model contract: each save FULLY replaces the
     previous model's rows (a refit with fewer rows must not leak stale

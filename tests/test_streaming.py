@@ -1568,3 +1568,113 @@ def test_ephemeral_checkpoint_override_and_cleanup(spark, tmp_path, monkeypatch)
     assert leftovers == [], (
         f"ephemeral checkpoints leaked on the pin-conflict path: {leftovers}"
     )
+
+
+def test_ephemeral_checkpoint_defaults_to_shm_only_on_a_local_master(
+    tmp_path, monkeypatch
+):
+    """/dev/shm is node-local, so it is the default checkpoint base only
+    when the master is local[...]; on a cluster master the engine picks
+    the location unless $W4H_EPHEMERAL_CKPT names one, which still wins
+    on any master."""
+    import os as _os
+    import shutil as _shutil
+
+    from w4h_integrated_toolkit_spark.streaming.replay import (
+        _ephemeral_checkpoint_dir,
+    )
+
+    monkeypatch.delenv("W4H_EPHEMERAL_CKPT", raising=False)
+    assert _ephemeral_checkpoint_dir("spark://head:7077") is None
+    assert _ephemeral_checkpoint_dir("yarn") is None
+    local = _ephemeral_checkpoint_dir("local[4]")
+    if _os.path.isdir("/dev/shm") and _os.access("/dev/shm", _os.W_OK):
+        assert local is not None and local.startswith("/dev/shm/")
+        _shutil.rmtree(local)
+    else:
+        assert local is None
+
+    base = str(tmp_path / "ckpt_base")
+    _os.makedirs(base)
+    monkeypatch.setenv("W4H_EPHEMERAL_CKPT", base)
+    explicit = _ephemeral_checkpoint_dir("spark://head:7077")
+    assert explicit is not None and explicit.startswith(base)
+    _shutil.rmtree(explicit)
+
+
+def _stage_tasks_between(spark, run):
+    """Task count of every stage of every job launched while ``run()``
+    executes, on any thread (streaming micro-batches run on the query's
+    own thread, under its own job group): job ids are sequential, so the
+    jobs between two probe jobs are exactly the ones ``run`` caused."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe(tag):
+        sc.setJobGroup(tag, tag)
+        try:
+            sc.parallelize([0], 1).count()
+            return max(tracker.getJobIdsForGroup(tag))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    before = probe("w4h_fanout_before")
+    result = run()
+    after = probe("w4h_fanout_after")
+    tasks = []
+    for jid in range(before + 1, after):
+        job = tracker.getJobInfo(jid)
+        assert job is not None, f"job {jid} info not retained"
+        for sid in job.stageIds:
+            stage = tracker.getStageInfo(sid)
+            if stage is not None:
+                tasks.append((jid, sid, stage.name, stage.numTasks))
+    return result, tasks
+
+
+def test_catch_up_drain_listing_is_bounded_to_the_cores(spark, tmp_path):
+    """A catch-up replay over more than 32 files (the listing threshold)
+    resolves its files with a Spark listing job; its fan-out is bounded
+    to the cores, not one task per file. Every stage the drain launches
+    stays within defaultParallelism, and the drain equals the batch
+    computation over the same files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from w4h_integrated_toolkit_spark.streaming.replay import (
+        drain_memory_sink,
+        file_stream,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    n_files = 40
+    for k in range(n_files):
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array([k], pa.int64()),
+                "value": pa.array([float(k)], pa.float64()),
+                "ts": pa.array([_ts(k)], pa.timestamp("us", tz="UTC")),
+            }),
+            str(src / f"part-{k:05d}.parquet"),
+        )
+    cores = spark.sparkContext.defaultParallelism
+
+    def drain():
+        stream, stage = file_stream(spark, str(src), state_partitions=cores)
+        agg = windowed_kpis_stream(stream, ts="ts", value="value", window="10 minutes")
+        return drain_memory_sink(
+            agg, "complete", name_prefix="w4h_fanout_", stage_dir=stage
+        ).collect()
+
+    drained, tasks = _stage_tasks_between(spark, drain)
+    assert tasks, "no jobs observed during the drain"
+    wide = [t for t in tasks if t[3] > cores]
+    assert wide == [], f"stages wider than {cores} cores: {wide}"
+
+    batch = windowed_kpis_stream(
+        spark.read.parquet(str(src)), ts="ts", value="value", window="10 minutes"
+    ).collect()
+    assert len(batch) == 4
+    assert sorted(drained) == sorted(batch)

@@ -7,6 +7,8 @@ Designed for a ``documents(doc_id, text, ...)`` table.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -535,9 +537,10 @@ def gopher_quality_flags(
     # same places); output equality and executed-plan shape stay pinned
     # by the hand-model/attribution/plan tests plus the randomized
     # text_gates stress section.
+    col = "`" + text.replace("`", "``") + "`"
     t = (
         "regexp_replace(regexp_replace("
-        f"{text}, '^\\\\s+', ''), '\\\\s+$', '')"
+        f"{col}, '^\\\\s+', ''), '\\\\s+$', '')"
     )
     words = f"filter(split({t}, '\\\\s+'), x_ -> x_ != '')"
     n_words = (
@@ -562,7 +565,7 @@ def gopher_quality_flags(
     # line rules over non-empty fully-trimmed lines (tab-only lines are
     # blank, not one-char lines — the _ws_trim regexes, not trim())
     lines = (
-        f"filter(transform(split({text}, '\\\\n'), "
+        f"filter(transform(split({col}, '\\\\n'), "
         "l_ -> regexp_replace(regexp_replace(l_, '^\\\\s+', ''), "
         "'\\\\s+$', '')), x_ -> x_ != '')"
     )
@@ -616,6 +619,27 @@ def gopher_quality_flags(
         f"{line_chars} ELSE 0.0D END"
     )
 
+    # thresholds render as DOUBLE literals of their float value, so any
+    # real number type (numpy, Decimal) gives valid SQL; a non-finite one
+    # would not parse as a literal and raises here instead
+    th = {}
+    for name, x in (
+        ("min_words", min_words), ("max_words", max_words),
+        ("min_mean_word_len", min_mean_word_len),
+        ("max_mean_word_len", max_mean_word_len),
+        ("max_symbol_word_ratio", max_symbol_word_ratio),
+        ("max_bullet_line_frac", max_bullet_line_frac),
+        ("max_ellipsis_line_frac", max_ellipsis_line_frac),
+        ("min_alpha_word_frac", min_alpha_word_frac),
+        ("min_stopword_hits", min_stopword_hits),
+        ("max_dup_line_frac", max_dup_line_frac),
+        ("max_dup_line_char_frac", max_dup_line_char_frac),
+    ):
+        v = float(x)
+        if not math.isfinite(v):
+            raise ValueError(f"{name} must be a finite number, got {x!r}")
+        th[name] = f"{v!r}D"
+
     stats = df.select(
         id_col,
         F.expr(f"{n_words} AS n_words"),
@@ -628,29 +652,23 @@ def gopher_quality_flags(
         F.expr(f"{dup_line_frac} AS dup_line_frac"),
         F.expr(f"{dup_char_frac} AS dup_line_char_frac"),
     )
+
     rules = [
-        ("word_count", f"n_words BETWEEN {min_words} AND {max_words}"),
-        (
-            "mean_word_len",
-            f"mean_word_len BETWEEN {min_mean_word_len!r}D "
-            f"AND {max_mean_word_len!r}D",
-        ),
-        (
-            "symbol_word_ratio",
-            f"symbol_word_ratio <= {max_symbol_word_ratio!r}D",
-        ),
-        ("bullet_lines", f"bullet_line_frac <= {max_bullet_line_frac!r}D"),
-        (
-            "ellipsis_lines",
-            f"ellipsis_line_frac <= {max_ellipsis_line_frac!r}D",
-        ),
-        ("alpha_words", f"alpha_word_frac >= {min_alpha_word_frac!r}D"),
-        ("stopwords", f"stopword_hits >= {min_stopword_hits}"),
-        ("dup_lines", f"dup_line_frac <= {max_dup_line_frac!r}D"),
-        (
-            "dup_line_chars",
-            f"dup_line_char_frac <= {max_dup_line_char_frac!r}D",
-        ),
+        ("word_count",
+         f"n_words BETWEEN {th['min_words']} AND {th['max_words']}"),
+        ("mean_word_len",
+         f"mean_word_len BETWEEN {th['min_mean_word_len']} "
+         f"AND {th['max_mean_word_len']}"),
+        ("symbol_word_ratio",
+         f"symbol_word_ratio <= {th['max_symbol_word_ratio']}"),
+        ("bullet_lines", f"bullet_line_frac <= {th['max_bullet_line_frac']}"),
+        ("ellipsis_lines",
+         f"ellipsis_line_frac <= {th['max_ellipsis_line_frac']}"),
+        ("alpha_words", f"alpha_word_frac >= {th['min_alpha_word_frac']}"),
+        ("stopwords", f"stopword_hits >= {th['min_stopword_hits']}"),
+        ("dup_lines", f"dup_line_frac <= {th['max_dup_line_frac']}"),
+        ("dup_line_chars",
+         f"dup_line_char_frac <= {th['max_dup_line_char_frac']}"),
     ]
     reasons = ", ".join(
         f"CASE WHEN NOT ({cond}) THEN '{name}' ELSE CAST(NULL AS STRING) END"

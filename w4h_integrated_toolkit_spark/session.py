@@ -12,6 +12,14 @@ for tests and on a large cluster unchanged:
   and the DuckDB oracle compares naive-UTC values.
 - Arrow enabled for the pandas-UDF escape hatches (grouped calibration,
   geometry codecs).
+- File-listing fan-out bounded to the cores: a scan over more than
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) explicit
+  paths is listed by a Spark job whose task count defaults to one per path
+  (capped at 10,000). A streaming catch-up batch of ~650 small files paid a
+  650-task job just to stat them; the parallelism is derived from the core
+  count (``cpus`` here, ``defaultParallelism`` in :func:`prepare_session`),
+  like the shuffle partitions, so it is not a separate knob. Scans of 32
+  paths or fewer are still listed on the driver.
 """
 
 from __future__ import annotations
@@ -21,6 +29,8 @@ import os
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "prepare_session"]
+
+_LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
 
 def get_spark(
@@ -40,6 +50,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(_LISTING_PARALLELISM, str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -77,4 +88,8 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     # treat naive parquet timestamps as UTC instants, not NTZ (see get_spark)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    # listing fan-out sized to the cores (see the module docstring)
+    spark.conf.set(
+        _LISTING_PARALLELISM, str(spark.sparkContext.defaultParallelism)
+    )
     return spark

@@ -22,18 +22,27 @@ external table format:
 Layout (all immutable except the two atomically-replaced pointer files)::
 
     table/
-      _manifests/v{N}.json   # {"partitions": {part_value: data_rel_path}}
+      _manifests/v{N}.json   # {"partitions": {part_value: data_rel_path},
+                             #  "schema": {write_uuid: spark_schema_json}}
       _LATEST                # "N" — os.replace'd, atomic on POSIX
       data/{write_uuid}/...  # parquet, partitionBy(partition_col) dirs
 
+``schema`` holds, for every write batch the version references, the
+schema of that batch's data files exactly as a parquet read returns it
+(partition column left out, every field nullable). Each scan opens with
+``spark.read.schema(...)``, so resolving a version launches no Spark job:
+an inferred parquet scan runs one schema-inference job per path. Keying by
+write batch keeps the record exact when a later write widens a column type
+while older partitions are carried. Manifests written before the field
+existed, and batches they carried, have no entry and fall back to
+inference.
+
 Scale notes: the manifest is O(partitions) JSON — thousands of date
 partitions is a few hundred KB; the read plan unions one parquet scan per
-RETAINED WRITE BATCH (not per partition): paths sharing a write uuid are
-read together with ``basePath`` so Spark's own partition discovery and
-partition PRUNING apply within each batch. `vacuum_versions` deletes data
-dirs referenced only by dropped manifests. Concurrent WRITERS are not
-arbitrated (single-writer assumption, like Delta without a lock service);
-concurrent readers are always safe.
+partition, with the partition value restored as a literal column.
+`vacuum_versions` deletes data dirs referenced only by dropped manifests.
+Concurrent WRITERS are not arbitrated (single-writer assumption, like
+Delta without a lock service); concurrent readers are always safe.
 """
 
 from __future__ import annotations
@@ -44,6 +53,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["upsert_parquet", "read_versioned", "list_versions", "vacuum_versions"]
 
@@ -61,6 +71,36 @@ def _latest_path(table: str) -> str:
 def _load_manifest(table: str, version: int) -> dict:
     with open(os.path.join(_manifest_dir(table), f"v{version}.json")) as f:
         return json.load(f)
+
+
+def _write_batch(rel: str) -> str:
+    """``data/<write_uuid>[/<col>=<value>]`` -> ``<write_uuid>``."""
+    return rel.split(os.sep)[1]
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, element and value nullable: Spark writes
+    parquet that way, so it is the type a read of the files returns."""
+    if isinstance(t, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _scan(spark: SparkSession, table: str, rel: str, schemas: dict) -> DataFrame:
+    """One parquet scan of a manifest data path: with the schema recorded
+    for its write batch when there is one, else inferred."""
+    schema = schemas.get(_write_batch(rel))
+    reader = spark.read if schema is None else spark.read.schema(
+        T.StructType.fromJson(schema)
+    )
+    return reader.parquet(os.path.join(table, rel))
 
 
 def latest_version(table: str) -> int | None:
@@ -106,11 +146,9 @@ def upsert_parquet(
 
     os.makedirs(_manifest_dir(table), exist_ok=True)
     cur_version = latest_version(table)
-    cur_parts: dict[str, str] = (
-        dict(_load_manifest(table, cur_version)["partitions"])
-        if cur_version is not None
-        else {}
-    )
+    cur = _load_manifest(table, cur_version) if cur_version is not None else {}
+    cur_parts: dict[str, str] = dict(cur.get("partitions", {}))
+    cur_schemas: dict[str, dict] = cur.get("schema", {})
 
     write_id = uuid.uuid4().hex[:12]
     out_dir = os.path.join(table, "data", write_id)
@@ -119,7 +157,7 @@ def upsert_parquet(
         affected = [_ALL]
         merged = updates
         if _ALL in cur_parts:
-            current = spark.read.parquet(os.path.join(table, cur_parts[_ALL]))
+            current = _scan(spark, table, cur_parts[_ALL], cur_schemas)
             merged = updates.unionByName(
                 current.join(updates.select(*keys).distinct(), keys, "left_anti")
             )
@@ -142,8 +180,10 @@ def upsert_parquet(
             currents = []
             for p in part_vals:
                 if p in cur_parts:
-                    cur = spark.read.parquet(os.path.join(table, cur_parts[p]))
-                    currents.append(cur.withColumn(partition_col, F.lit(p)))
+                    currents.append(
+                        _scan(spark, table, cur_parts[p], cur_schemas)
+                        .withColumn(partition_col, F.lit(p))
+                    )
             current = currents[0]
             for c in currents[1:]:
                 current = current.unionByName(c)
@@ -160,6 +200,11 @@ def upsert_parquet(
                 "data", write_id, f"{partition_col}={p}"
             )
 
+    written = _nullable(T.StructType(
+        [f for f in merged.schema.fields if f.name != partition_col]
+    ))
+    schemas = {**cur_schemas, write_id: written.jsonValue()}
+    referenced = {_write_batch(rel) for rel in new_parts.values()}
     new_version = (cur_version or 0) + 1
     manifest = {
         "version": new_version,
@@ -168,6 +213,7 @@ def upsert_parquet(
         "write_id": write_id,
         "affected": affected,
         "partitions": new_parts,
+        "schema": {w: s for w, s in schemas.items() if w in referenced},
     }
     mpath = os.path.join(_manifest_dir(table), f"v{new_version}.json")
     tmp = mpath + ".tmp"
@@ -186,20 +232,22 @@ def read_versioned(
 ) -> DataFrame:
     """Snapshot read: resolves the manifest ONCE (version pinned at call
     time — concurrent upserts cannot shift this reader), then unions one
-    parquet scan per retained write batch. Partition values are restored
-    from the manifest, so partition-pruning filters work as column
-    predicates."""
+    parquet scan per partition. Partition values are restored from the
+    manifest, so partition-pruning filters work as column predicates.
+    Scans open with the manifest's recorded schema, so this launches no
+    Spark job (see the module docstring for the fallback)."""
     v = latest_version(table) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no versions at {table}")
     m = _load_manifest(table, v)
     partition_col = m["partition_col"]
+    schemas = m.get("schema", {})
     if partition_col is None:
-        return spark.read.parquet(os.path.join(table, m["partitions"][_ALL]))
-    dfs = []
-    for p, rel in sorted(m["partitions"].items()):
-        df = spark.read.parquet(os.path.join(table, rel))
-        dfs.append(df.withColumn(partition_col, F.lit(p)))
+        return _scan(spark, table, m["partitions"][_ALL], schemas)
+    dfs = [
+        _scan(spark, table, rel, schemas).withColumn(partition_col, F.lit(p))
+        for p, rel in sorted(m["partitions"].items())
+    ]
     out = dfs[0]
     for d in dfs[1:]:
         out = out.unionByName(d)

@@ -255,10 +255,19 @@ def python_state_partitions(spark: SparkSession, cap: int = 32) -> int:
     return max(1, min(cap, spark.sparkContext.defaultParallelism))
 
 
-def _ephemeral_checkpoint_dir() -> str | None:
+def _ephemeral_checkpoint_dir(master: str | None = None) -> str | None:
     """A fresh checkpoint dir for ONE bounded availableNow replay, on a
     RAM-backed filesystem when one is available (``$W4H_EPHEMERAL_CKPT``
-    overrides; ``/dev/shm`` default; None → engine temp-dir behavior).
+    overrides; ``/dev/shm`` default when ``master`` is ``local[...]``;
+    None → engine temp-dir behavior). Returns a plain local path: the
+    caller hands Spark its ``file://`` URI (a scheme-less path would
+    resolve against ``fs.defaultFS``, e.g. HDFS) and removes the plain
+    path afterwards.
+
+    ``/dev/shm`` is node-local, so it is only a default when the driver
+    and every executor share the node: on a cluster master the
+    checkpoint is left to the engine unless ``$W4H_EPHEMERAL_CKPT``
+    names a location explicitly.
 
     The bounded replays behind the gate/bench/oracle surface return
     their result synchronously and their checkpoint is deleted before
@@ -271,8 +280,11 @@ def _ephemeral_checkpoint_dir() -> str | None:
     import tempfile
 
     base = os.environ.get("W4H_EPHEMERAL_CKPT")
-    if base is None and os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
+    if (
+        base is None
+        and (master or "").startswith("local")
+        and os.path.isdir("/dev/shm")
+        and os.access("/dev/shm", os.W_OK)
     ):
         base = "/dev/shm"
     if not base:
@@ -434,6 +446,12 @@ def drain_memory_sink(
     the blocks are small; they are freed by the context cleaner when the
     returned DataFrame is garbage-collected.
 
+    A micro-batch over more than 32 new files (a catch-up replay of a
+    backlog) resolves its files with a Spark listing job; the session's
+    ``parallelPartitionDiscovery.parallelism`` (pinned to the cores by
+    ``session.get_spark``/``prepare_session``) bounds that job to the
+    core count rather than one task per file.
+
     ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
     streaming query only (see :data:`BOUNDED_REPLAY_STATE_PARTITIONS`);
     the session value is restored before the sink is read. Safe because
@@ -486,7 +504,7 @@ def drain_memory_sink(
     elif state_partitions is _PIN_DEFAULT:
         state_partitions = BOUNDED_REPLAY_STATE_PARTITIONS
     try:
-        ckpt_dir = _ephemeral_checkpoint_dir()
+        ckpt_dir = _ephemeral_checkpoint_dir(spark.sparkContext.master)
         # the lock serializes the set->start->restore conf window ON A
         # SHARED-CONF SESSION: a state_partitions=None drain racing a
         # pinned drain on the same session must not let its start()
@@ -509,7 +527,10 @@ def drain_memory_sink(
                     .trigger(availableNow=True)
                 )
                 if ckpt_dir is not None:
-                    writer = writer.option("checkpointLocation", ckpt_dir)
+                    writer = writer.option(
+                        "checkpointLocation",
+                        "file://" + os.path.abspath(ckpt_dir),
+                    )
                 q = writer.start()
             finally:
                 # the query cloned the conf at start(); restore the
@@ -631,6 +652,13 @@ def file_stream(
     stay on the clone automatically (they derive from the returned
     DataFrame); callers that need to JOIN the stream against
     shared-session static DataFrames should not use this constructor.
+
+    A micro-batch that picks up more than 32 files is listed by a Spark
+    job bounded to the cores: the clone inherits the parent's
+    ``parallelPartitionDiscovery.parallelism`` (see ``session.py``),
+    so a catch-up batch of ~650 small files costs a few listing tasks,
+    not one per file. Batches of 32 files or fewer are listed on the
+    driver.
 
     ``state_partitions`` is baked into the clone (default: the module's
     JVM-state-store-sized constant); drains whose stateful operator is a
