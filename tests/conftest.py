@@ -48,3 +48,27 @@ def half_away_1e9(x: float) -> int:
 
     y = x * 1e9
     return int(math.floor(y + 0.5) if y >= 0 else -math.floor(-y + 0.5))
+
+
+def jobs_in(spark, fn):
+    """Run ``fn()``; return ``(its result, ids of the Spark jobs it launched)``.
+
+    Counts jobs on any thread (a streaming query runs its micro-batches on
+    its own thread, under its own job group): job ids are sequential, so
+    the jobs between two probe jobs are exactly the ones ``fn`` caused."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe(tag):
+        sc.setJobGroup(tag, tag)
+        try:
+            sc.parallelize([0], 1).count()
+            return max(tracker.getJobIdsForGroup(tag))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    before = probe("w4h_jobs_in_before")
+    result = fn()
+    after = probe("w4h_jobs_in_after")
+    return result, list(range(before + 1, after))

@@ -1077,6 +1077,25 @@ def test_partitioned_layout_prunes(spark, tmp_path):
     assert back.select("user_id").distinct().count() == 20
 
 
+def test_read_parquet_opens_fact_table_layout(spark, tmp_path):
+    """catalog.read_parquet opens write_fact_table's dt-partitioned tree
+    (it inspects the first data file, past _SUCCESS and the dt= dirs):
+    every row and the dt column come back."""
+    from w4h_integrated_toolkit_spark.catalog import read_parquet, write_fact_table
+
+    days = [dt.datetime(2016, 8, d, h) for d in (1, 2, 3) for h in (0, 12)]
+    rows = [(f"u{i % 3}", ts, float(i)) for i, ts in enumerate(days)]
+    df = spark.createDataFrame(rows, "user_id string, timestamp timestamp, value double")
+    path = str(tmp_path / "facts")
+    write_fact_table(df, path)
+    back = read_parquet(spark, path)
+    assert set(back.columns) == {"user_id", "timestamp", "value", "dt"}
+    got = sorted(
+        (r["user_id"], r["timestamp"], r["value"], r["dt"]) for r in back.collect()
+    )
+    assert got == sorted((u, ts, v, ts.date()) for u, ts, v in rows)
+
+
 def test_rollup_cascade_matches_direct_aggregation(spark):
     """The cascade invariant: every coarser level, folded from finer
     partials, equals aggregating the raw rows at that resolution
@@ -1461,6 +1480,213 @@ def test_point_in_polygon_random_convex_vs_halfplane(spark):
     ).collect()
     bad = [(r["want"], r["got"]) for r in got if r["got"] != r["want"]]
     assert not bad, f"{len(bad)}/{len(got)} disagreements: {bad[:5]}"
+
+
+def test_sql_literal_parses_to_lit_type_and_value(spark):
+    """functions.sql.literal(v) parses to the Spark type and value
+    F.lit(v) gives, over a table of edge values; non-finite numbers raise."""
+    from decimal import Decimal
+
+    import numpy as np
+
+    from w4h_integrated_toolkit_spark.functions.sql import literal
+
+    values = [
+        None, True, False,
+        0, 1, -1, 2**31 - 1, -(2**31), 2**31, -(2**31) - 1, 2**63 - 1, -(2**63),
+        0.0, -0.0, 1.5, -2.5, 0.1, 1e16, -1e-05, 1e-300, 5e-324,
+        1.7976931348623157e308,
+        "", "abc", "it's", "back\\slash", "\\'", "new\nline", "tab\t",
+        "é ∑ 😀", "a`b", "%_",
+        dt.date(2016, 8, 1), dt.date(1970, 1, 1), dt.date(9999, 12, 31),
+        dt.datetime(2016, 8, 1, 12, 0), dt.datetime(2016, 8, 1, 12, 0, 0, 123456),
+        dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+        dt.datetime(2016, 8, 1, 12, tzinfo=dt.timezone.utc),
+        dt.datetime(2016, 8, 1, 12, tzinfo=dt.timezone(dt.timedelta(hours=-7))),
+        Decimal("2.5"), Decimal("-0.001"), Decimal("1E+3"), Decimal("0"),
+        Decimal("123456789012345678901234567890"),
+        np.int8(-3), np.int16(300), np.int32(-7), np.int64(2**40),
+        np.float32(0.1), np.float64(-2.5), np.bool_(True), np.str_("np"),
+    ]
+    df = spark.range(1).select(
+        *[F.expr(literal(v)).alias(f"e{i}") for i, v in enumerate(values)],
+        *[F.lit(v).alias(f"l{i}") for i, v in enumerate(values)],
+    )
+    row = df.collect()[0]
+    for i, v in enumerate(values):
+        got, want = df.schema[f"e{i}"].dataType, df.schema[f"l{i}"].dataType
+        assert got == want, (v, literal(v), got, want)
+        a, b = row[f"e{i}"], row[f"l{i}"]
+        assert (type(a), repr(a)) == (type(b), repr(b)), (v, literal(v), a, b)
+    for bad in (math.nan, math.inf, -math.inf, np.float64("nan"),
+                np.float32("inf"), Decimal("NaN"), Decimal("-Infinity"), 2**63):
+        with pytest.raises(ValueError):
+            literal(bad)
+    with pytest.raises(TypeError):
+        literal(object())
+
+
+def test_sql_ident_quotes_any_name(spark):
+    """functions.sql.ident resolves exactly the named column, whatever
+    characters the name holds."""
+    from w4h_integrated_toolkit_spark.functions.sql import ident
+
+    names = ["plain", "with space", "odd`name", "a.b", "``", "sum(x)"]
+    df = spark.createDataFrame([tuple(range(len(names)))], [*names])
+    out = df.selectExpr(*(f"{ident(n)} + 10 AS {ident(n + '!')}" for n in names))
+    assert out.columns == [n + "!" for n in names]
+    assert list(out.collect()[0]) == [10 + i for i in range(len(names))]
+
+
+# Pure-Python twin of the even-odd rule, in Spark's comparison semantics:
+# NULL compares to NULL (the CASE then yields 0) and NaN sorts above every
+# number. IEEE operation order is the one geo.point_in_polygon has always
+# used: ax + (bx - ax) * (lat - ay) / (by - ay).
+def _spark_gt(a, b):
+    if a is None or b is None:
+        return None
+    if math.isnan(a):
+        return not math.isnan(b)
+    if math.isnan(b):
+        return False
+    return a > b
+
+
+def _pip_reference(lon, lat, ring):
+    count = 0
+    for i, a in enumerate(ring):
+        b = ring[(i + 1) % len(ring)]
+        above_a, above_b = _spark_gt(a[1], lat), _spark_gt(b[1], lat)
+        if above_a is None or above_b is None or above_a == above_b:
+            continue
+        if None in (a[0], b[0], lon):
+            continue
+        xcross = a[0] + (b[0] - a[0]) * (lat - a[1]) / (b[1] - a[1])
+        if _spark_gt(xcross, lon):
+            count += 1
+    return count % 2 == 1
+
+
+def _cell_range(vals, cell):
+    """Spark's cells for one ring axis: sequence(floor(array_min / c),
+    floor(array_max / c)) with NULLs skipped, NaN the largest value and
+    FLOOR(NaN) = 0; sequence runs downwards when start > stop."""
+    vals = [v for v in vals if v is not None]
+    nan = [v for v in vals if math.isnan(v)]
+    finite = [v for v in vals if not math.isnan(v)]
+    lo = min(finite) if finite else math.nan
+    hi = math.nan if nan else max(finite)
+    f = lambda v: 0 if math.isnan(v) else math.floor(v / cell)  # noqa: E731
+    return min(f(lo), f(hi)), max(f(lo), f(hi))
+
+
+_GEO_RINGS = {
+    "square_open": [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)],
+    "tri_closed": [(20.0, 0.0), (30.0, 0.0), (25.0, 8.0), (20.0, 0.0)],
+    # concave, straddles the prime meridian, with a horizontal edge
+    "meridian": [(-3.5, 40.1), (2.25, 39.9), (1.0, 41.3), (0.0, 40.5),
+                 (-0.75, 40.5), (-1.75, 41.7)],
+    # hugs the antimeridian from both sides (planar rings, not wrapping)
+    "east_180": [(179.2, -16.8), (179.999999, -16.1), (179.7, -15.2),
+                 (179.31, -15.9), (179.2, -16.8)],
+    "west_180": [(-179.999999, 10.0), (-179.1, 10.3), (-179.5, 11.0)],
+    # a NaN and a NULL vertex: the longitude band must stand aside
+    "nan_vertex": [(1.0, -9.0), (5.0, -9.0), (math.nan, -7.0), (5.0, -5.0),
+                   (1.0, -5.0)],
+    "null_vertex": [(11.0, -9.0), (15.0, -9.0), (None, -7.0), (15.0, -5.0),
+                    (11.0, -5.0)],
+}
+
+
+def _geo_adversarial_points():
+    """Every vertex, points on every edge, on and just past every bbox
+    side, on the horizontal through every vertex, plus NaN/NULL points."""
+    pts = []
+    for ring in _GEO_RINGS.values():
+        good = [(x, y) for x, y in ring if x is not None and not math.isnan(x)]
+        xs, ys = [x for x, _ in good], [y for _, y in ring]
+        x0, x1, y0, y1 = min(xs), max(xs), min(ys), max(ys)
+        pts += good
+        for (ax, ay), (bx, by) in zip(ring, ring[1:] + ring[:1]):
+            if ax is None or bx is None or math.isnan(ax) or math.isnan(bx):
+                continue
+            pts += [(ax + (bx - ax) * t, ay + (by - ay) * t) for t in (0.5, 1 / 3, 0.9)]
+        for t in (0.0, 0.2, 0.5, 0.7, 1.0):
+            x, y = x0 + (x1 - x0) * t, y0 + (y1 - y0) * t
+            pts += [(x, y0), (x, y1), (x0, y), (x1, y)]
+            pts += [(math.nextafter(x0, -math.inf), y), (math.nextafter(x1, math.inf), y),
+                    (x0 - 1e-12, y), (x1 + 1e-12, y),
+                    (x, math.nextafter(y0, -math.inf)), (x, math.nextafter(y1, -math.inf))]
+        for vy in ys:
+            pts += [(x0 + (x1 - x0) * t, vy) for t in (0.1, 0.45, 0.8)]
+    pts += [(math.nan, 5.0), (5.0, math.nan), (math.nan, math.nan),
+            (None, 5.0), (5.0, None), (None, None)]
+    return [(i, x, y) for i, (x, y) in enumerate(pts)]
+
+
+def test_point_in_polygon_matches_even_odd_reference(spark):
+    """point_in_polygon agrees row for row with the Python twin of the
+    even-odd formula on adversarial points: vertices, edges, bbox sides,
+    vertex horizontals, NaN and NULL coordinates; open and closed rings,
+    rings at longitude 0 and at ±180, rings with a NaN or NULL vertex."""
+    from w4h_integrated_toolkit_spark.operators.geo import point_in_polygon
+
+    pts = _geo_adversarial_points()
+    rows = [(pid, rid, x, y, [(a, b) for a, b in ring])
+            for rid, ring in _GEO_RINGS.items() for pid, x, y in pts]
+    df = spark.createDataFrame(
+        rows,
+        "pid int, rid string, lon double, lat double, "
+        "ring array<struct<lon double, lat double>>",
+    )
+    got = {
+        (r["pid"], r["rid"]): r["inside"]
+        for r in df.select(
+            "pid", "rid",
+            point_in_polygon(F.col("lon"), F.col("lat"), F.col("ring")).alias("inside"),
+        ).collect()
+    }
+    want = {
+        (pid, rid): _pip_reference(x, y, ring)
+        for rid, ring in _GEO_RINGS.items() for pid, x, y in pts
+    }
+    bad = {k: (got[k], want[k]) for k in want if got[k] != want[k]}
+    assert not bad, f"{len(bad)}/{len(want)} disagreements: {list(bad.items())[:5]}"
+    assert sum(want.values()) > 50  # the set exercises the inside branch
+
+
+def test_geofence_join_filter_and_refine_is_exact(spark):
+    """geofence_join's bbox bands never change an answer: the joined pairs
+    are exactly the (point, polygon) pairs that share a grid cell and pass
+    the Python twin of the even-odd formula — including the points on and
+    a hair past each bbox side that the padded longitude band lets through
+    to the exact test."""
+    from w4h_integrated_toolkit_spark.operators.geo import geofence_join
+
+    cell = 2.0
+    pts = _geo_adversarial_points()
+    points = spark.createDataFrame(pts, "pid int, lon double, lat double")
+    polys = spark.createDataFrame(
+        [(rid, ring) for rid, ring in _GEO_RINGS.items()],
+        "polygon_id string, ring array<struct<lon double, lat double>>",
+    )
+    out = geofence_join(points, polys, cell_deg=cell)
+    assert out.columns == ["pid", "lon", "lat", "polygon_id"]
+    got = sorted((r["pid"], r["polygon_id"]) for r in out.collect())
+    want = []
+    for rid, ring in _GEO_RINGS.items():
+        cx = _cell_range([v[0] for v in ring], cell)
+        cy = _cell_range([v[1] for v in ring], cell)
+        for pid, x, y in pts:
+            if x is None or y is None:
+                continue
+            px = 0 if math.isnan(x) else math.floor(x / cell)
+            py = 0 if math.isnan(y) else math.floor(y / cell)
+            if (cx[0] <= px <= cx[1] and cy[0] <= py <= cy[1]
+                    and _pip_reference(x, y, ring)):
+                want.append((pid, rid))
+    assert got == sorted(want)
+    assert {rid for _, rid in want} == set(_GEO_RINGS)  # every ring hit
 
 
 def test_fuzzy_token_sort_reordered_names():

@@ -12,6 +12,7 @@ import re
 import pytest
 
 from w4h_integrated_toolkit_spark.plans import QUERIES
+from tests.conftest import jobs_in
 
 SF_DIR = os.environ.get("W4H_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -1744,3 +1745,112 @@ def test_table_plan_cache_invalidates_on_rewrite(spark, tmp_path):
     spark.range(5).toDF("x").write.parquet(p)
     assert _t(spark, d, "events").count() == 5
     assert _tw(spark, d, "events").count() == 5
+
+
+# --------------------------------------------------------------------------
+# Job budgets for the dashboard operators (cohort-vs-control requests):
+# building a request launches no job, and executing one stays within the
+# job count it has today. A job-count regression fails here instead of
+# hiding in benchmark noise.
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def dashboard_tables(spark, tmp_path_factory):
+    """A small GeoMTS lake in the dashboard's layout: users as a flat
+    parquet, facts through catalog.write_fact_table (dt partitions) scanned
+    on a two-day range."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from w4h_integrated_toolkit_spark.catalog import read_parquet, write_fact_table
+
+    base = tmp_path_factory.mktemp("dashboard")
+    users = [(f"u{i}", 20 + 7 * i, ["CA", "NY", "TX"][i % 3]) for i in range(6)]
+    t0 = dt.datetime(2016, 8, 1)
+    facts = [
+        (u, t0 + dt.timedelta(minutes=17 * k), 60.0 + (k * 7 + j) % 41,
+         -118.3 + 0.01 * ((k + j) % 13), 34.0 + 0.01 * ((2 * k + j) % 11))
+        for j, (u, _, _) in enumerate(users) for k in range(3 * 24 * 60 // 17)
+    ]
+    spark.createDataFrame(users, "user_id string, age int, state string").write.parquet(
+        str(base / "users"))
+    rows = spark.createDataFrame(
+        facts, "user_id string, timestamp timestamp, value double, lon double, lat double")
+    write_fact_table(rows, str(base / "facts"))
+    lo, hi = F.to_date(F.lit("2016-08-01")), F.to_date(F.lit("2016-08-02"))
+    polys = spark.createDataFrame(
+        [(1, [(-118.31, 33.99), (-118.25, 33.99), (-118.25, 34.05), (-118.31, 34.05)]),
+         (2, [(-118.28, 34.02), (-118.2, 34.02), (-118.24, 34.2)])],
+        "polygon_id int, ring array<struct<lon:double,lat:double>>",
+    )
+    return {
+        "users": read_parquet(spark, str(base / "users")),
+        "facts": spark.read.parquet(str(base / "facts")).filter(F.col("dt").between(lo, hi)),
+        "polygons": polys,
+    }
+
+
+def _dashboard_builders(t):
+    """Every dashboard builder on the fixture, as (name, zero-arg build)."""
+    from pyspark.sql import functions as F
+
+    from w4h_integrated_toolkit_spark.operators import cohort as C
+    from w4h_integrated_toolkit_spark.operators import geo as G
+    from w4h_integrated_toolkit_spark.operators import kpi as K
+    from w4h_integrated_toolkit_spark.operators import safeband as S
+    from w4h_integrated_toolkit_spark.operators import timeseries as TS
+
+    specs = [C.FilterSpec("age", "int", (25, 50)),
+             C.FilterSpec("state", "string", ["CA", "TX"])]
+    facts = t["facts"]
+    cohort = C.filter_users(t["users"], specs)
+    subj = C.cohort_semi_join(facts, cohort)
+    stats = ["avg_value", "max_value", "min_value", "n"]
+    return {
+        "compile_filter": lambda: C.compile_filter(specs[0]),
+        "compile_filters": lambda: C.compile_filters(specs),
+        "filter_users": lambda: C.filter_users(t["users"], specs),
+        "cohort_semi_join": lambda: C.cohort_semi_join(facts, cohort),
+        "kpi_compare": lambda: C.cohort_compare(
+            K.signal_stats(subj), K.signal_stats(facts), stats),
+        "safe_band": lambda: S.safe_band(subj, k=2.5),
+        "breach_histogram": lambda: S.breach_histogram(subj, k=2.5).select(
+            "bucket", "n_total", "n_unsafe"),
+        "resample_mean": lambda: TS.resample_mean(subj, "1 hour"),
+        "calibrate": lambda: TS.calibrate(
+            facts.filter(F.col("user_id").isin("u1", "u2")).select(
+                "user_id", "timestamp", "value")),
+        "trajectories": lambda: G.trajectories(subj),
+        "geofence_count": lambda: G.geofence_join(subj, t["polygons"]).groupBy(
+            "polygon_id").agg(F.count(F.lit(1)).alias("n_points"),
+                              F.countDistinct("user_id").alias("n_users")),
+    }
+
+
+def test_dashboard_builders_launch_no_job(spark, dashboard_tables):
+    """Building any dashboard operator is lazy: no Spark job."""
+    for name, build in _dashboard_builders(dashboard_tables).items():
+        _, jobs = jobs_in(spark, build)
+        assert jobs == [], f"{name} launched jobs {jobs} while building"
+
+
+# measured at this fixture's scale; the semi join's broadcast side carries
+# no distinct (one shuffle stage and one job fewer per request)
+DASHBOARD_JOB_BUDGETS = {
+    "kpi_compare": 5,
+    "safe_band": 3,
+    "breach_histogram": 5,
+    "trajectories": 3,
+    "geofence_count": 5,
+}
+
+
+@pytest.mark.parametrize("name", sorted(DASHBOARD_JOB_BUDGETS))
+def test_dashboard_operator_job_budget(spark, dashboard_tables, name):
+    df = _dashboard_builders(dashboard_tables)[name]()
+    rows, jobs = jobs_in(spark, df.collect)
+    assert rows, f"{name}: the fixture must produce rows"
+    assert len(jobs) <= DASHBOARD_JOB_BUDGETS[name], (
+        f"{name} ran {len(jobs)} jobs, budget {DASHBOARD_JOB_BUDGETS[name]}")

@@ -19,6 +19,7 @@ from w4h_integrated_toolkit_spark.sources import (
     sensor_batch_from_json,
     write_csv,
 )
+from tests.conftest import jobs_in
 
 
 def test_csv_roundtrip(spark, tmp_path):
@@ -564,18 +565,6 @@ def _three_partition_table(spark, t):
     return {**{i: i for i in range(10)}, 0: 100, 20: 2**40, 21: 7}
 
 
-def _jobs_in(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return (result, job ids)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-        return out, list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 def test_versioned_read_launches_no_job(spark, tmp_path):
     """Opening a version pins every scan to the manifest's recorded
     schema: no schema-inference job per partition."""
@@ -583,11 +572,9 @@ def test_versioned_read_launches_no_job(spark, tmp_path):
 
     t = str(tmp_path / "tbl")
     want = _three_partition_table(spark, t)
-    df, jobs = _jobs_in(spark, "w4h_rv_open", lambda: read_versioned(spark, t))
+    df, jobs = jobs_in(spark, lambda: read_versioned(spark, t))
     assert jobs == [], f"read_versioned launched jobs {jobs}"
-    _, jobs = _jobs_in(
-        spark, "w4h_rv_open_v1", lambda: read_versioned(spark, t, version=1)
-    )
+    _, jobs = jobs_in(spark, lambda: read_versioned(spark, t, version=1))
     assert jobs == []
     assert {r["id"]: r["v"] for r in df.collect()} == want
     assert dict(df.dtypes)["v"] == "bigint"

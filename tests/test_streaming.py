@@ -13,6 +13,7 @@ from w4h_integrated_toolkit_spark.streaming.replay import (
     run_windowed_kpis_batchmode,
     windowed_kpis_stream,
 )
+from tests.conftest import jobs_in
 
 T0 = dt.datetime(2016, 8, 1, 12, 0, 0)
 
@@ -1602,37 +1603,6 @@ def test_ephemeral_checkpoint_defaults_to_shm_only_on_a_local_master(
     _shutil.rmtree(explicit)
 
 
-def _stage_tasks_between(spark, run):
-    """Task count of every stage of every job launched while ``run()``
-    executes, on any thread (streaming micro-batches run on the query's
-    own thread, under its own job group): job ids are sequential, so the
-    jobs between two probe jobs are exactly the ones ``run`` caused."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def probe(tag):
-        sc.setJobGroup(tag, tag)
-        try:
-            sc.parallelize([0], 1).count()
-            return max(tracker.getJobIdsForGroup(tag))
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
-    before = probe("w4h_fanout_before")
-    result = run()
-    after = probe("w4h_fanout_after")
-    tasks = []
-    for jid in range(before + 1, after):
-        job = tracker.getJobInfo(jid)
-        assert job is not None, f"job {jid} info not retained"
-        for sid in job.stageIds:
-            stage = tracker.getStageInfo(sid)
-            if stage is not None:
-                tasks.append((jid, sid, stage.name, stage.numTasks))
-    return result, tasks
-
-
 def test_catch_up_drain_listing_is_bounded_to_the_cores(spark, tmp_path):
     """A catch-up replay over more than 32 files (the listing threshold)
     resolves its files with a Spark listing job; its fan-out is bounded
@@ -1668,7 +1638,16 @@ def test_catch_up_drain_listing_is_bounded_to_the_cores(spark, tmp_path):
             agg, "complete", name_prefix="w4h_fanout_", stage_dir=stage
         ).collect()
 
-    drained, tasks = _stage_tasks_between(spark, drain)
+    drained, jobs = jobs_in(spark, drain)
+    tracker = spark.sparkContext.statusTracker()
+    tasks = []
+    for jid in jobs:
+        job = tracker.getJobInfo(jid)
+        assert job is not None, f"job {jid} info not retained"
+        for sid in job.stageIds:
+            stage = tracker.getStageInfo(sid)
+            if stage is not None:
+                tasks.append((jid, sid, stage.name, stage.numTasks))
     assert tasks, "no jobs observed during the drain"
     wide = [t for t in tasks if t[3] > cores]
     assert wide == [], f"stages wider than {cores} cores: {wide}"

@@ -139,8 +139,29 @@ GEO_SCHEMA = T.StructType(
 )
 
 
+def _first_data_file(path: str) -> str | None:
+    """``path`` itself if it is a file, else the first data file under it in
+    name order, descending through partition directories (``dt=.../``).
+    Names starting with ``_`` or ``.`` (``_SUCCESS``, ``_manifests``,
+    ``.crc`` files) are metadata, as Spark treats them; None if no data file."""
+    import os
+
+    if not os.path.isdir(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            return os.path.join(root, data[0])
+    return None
+
+
 def ns_timestamp_columns(path: str) -> list[str]:
     """Names of TIMESTAMP(NANOS) columns in a parquet file (footer-only read).
+
+    ``path`` may be a file, a flat directory of parquet files or a
+    partitioned directory tree such as :func:`write_fact_table` writes; a
+    directory is inspected through its first data file.
 
     Spark refuses INT64 TIMESTAMP(NANOS) parquet columns outright; DuckDB
     truncates them to microseconds. We match DuckDB: read them as longs
@@ -149,14 +170,9 @@ def ns_timestamp_columns(path: str) -> list[str]:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    first = path
-    if "*" not in path:
-        import os
-
-        if os.path.isdir(path):
-            files = [f for f in sorted(os.listdir(path)) if f.endswith(".parquet")]
-            if files:
-                first = os.path.join(path, files[0])
+    first = path if "*" in path else _first_data_file(path)
+    if first is None:  # no data file: Spark reports the empty table itself
+        return []
     schema = pq.read_schema(first)
     return [
         f.name

@@ -3,11 +3,18 @@
 The reference's "query language" is a filter-spec dict built from dashboard
 widgets (viz.py:402-410) applied per-type with null-tolerance
 (``filter_users``, viz.py:413-430). Here the spec is a dataclass compiled to
-a single Column predicate — Catalyst then pushes it into the user-table scan.
+a single SQL predicate — Catalyst then pushes it into the user-table scan.
 
 Cohort application to fact tables is a semi join on ``user_id``
 (viz.py:761-764 does it as ``isin`` client-side); we broadcast the cohort —
 at 100 TB the fact side never shuffles for cohort restriction.
+
+The builders write their expressions as parsed SQL (``filter(str)``,
+``selectExpr``) with every column name backtick-quoted and every literal
+rendered by :mod:`..functions.sql`: one JVM parse per expression instead of
+several py4j round trips per Column-API node, which is most of a dashboard
+request's driver-side cost. The Catalyst expressions, literal types and
+results are the ones the Column API builds.
 """
 
 from __future__ import annotations
@@ -17,6 +24,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.sql import ident, literal
 
 __all__ = [
     "FilterSpec",
@@ -116,35 +125,41 @@ def spec_from_nl_payload(payload: dict[str, Any]) -> NLQuerySpec:
     )
 
 
-def compile_filter(spec: FilterSpec) -> Column:
-    c = F.col(spec.name)
+def _filter_sql(spec: FilterSpec) -> str:
+    c = ident(spec.name)
     if spec.type in ("int", "float", "datetime"):
         lo, hi = spec.value
-        pred = c.between(F.lit(lo), F.lit(hi))
+        # Column.between's own form: (c >= lo) AND (c <= hi)
+        pred = f"{c} >= {literal(lo)} AND {c} <= {literal(hi)}"
     elif spec.type == "string":
         vals = list(spec.value or [])
         if not vals:  # empty selection = no restriction (viz.py:388-390)
-            return F.lit(True)
-        pred = c.isin(vals)
+            return "true"
+        pred = f"{c} IN ({', '.join(literal(v) for v in vals)})"
     elif spec.type == "boolean":
-        pred = c == F.lit(bool(spec.value))
+        pred = f"{c} = {literal(bool(spec.value))}"
     else:
         raise ValueError(f"unknown filter type {spec.type!r}")
     if spec.ignore_nulls:
-        pred = pred | c.isNull()
+        pred = f"({pred}) OR {c} IS NULL"
     return pred
+
+
+def _filters_sql(specs: list[FilterSpec]) -> str:
+    return " AND ".join(["true", *(f"({_filter_sql(s)})" for s in specs)])
+
+
+def compile_filter(spec: FilterSpec) -> Column:
+    return F.expr(_filter_sql(spec))
 
 
 def compile_filters(specs: list[FilterSpec]) -> Column:
-    pred = F.lit(True)
-    for s in specs:
-        pred = pred & compile_filter(s)
-    return pred
+    return F.expr(_filters_sql(specs))
 
 
 def filter_users(users: DataFrame, specs: list[FilterSpec]) -> DataFrame:
     """viz.py:413-430 re-expressed: one declarative predicate, pushed down."""
-    return users.filter(compile_filters(specs))
+    return users.filter(_filters_sql(specs))
 
 
 def cohort_semi_join(facts: DataFrame, cohort: DataFrame, key: str = "user_id") -> DataFrame:
@@ -152,12 +167,23 @@ def cohort_semi_join(facts: DataFrame, cohort: DataFrame, key: str = "user_id") 
 
     ``left_semi`` + broadcast: the big fact side streams map-side; no shuffle
     of the facts at any scale as long as the cohort fits in a broadcast.
+
+    The cohort's key column is broadcast as given, without ``distinct``: a
+    semi join's result does not depend on duplicate keys, and deduplicating
+    would cost a shuffle stage and a job on every request. A cohort with
+    many duplicate keys (say, one drawn from a fact table) should be
+    deduplicated by the caller to keep the broadcast small.
     """
-    return facts.join(F.broadcast(cohort.select(key).distinct()), key, "left_semi")
+    return facts.join(cohort.select(key).hint("broadcast"), key, "left_semi")
 
 
 def cohort_anti_join(left: DataFrame, existing: DataFrame, key: str = "user_id") -> DataFrame:
-    """J2: new-user detection (w4h_db_utils.py:160-173's set difference)."""
+    """J2: new-user detection (w4h_db_utils.py:160-173's set difference).
+
+    Unlike :func:`cohort_semi_join`, ``existing`` is deduplicated before
+    the broadcast: callers pass fact-sized tables here (``anti_join_new_users``
+    passes ``orders``), whose key column repeats every key many times over.
+    """
     return left.join(F.broadcast(existing.select(key).distinct()), key, "left_anti")
 
 
@@ -169,9 +195,14 @@ def cohort_compare(
     Both inputs are 1-row aggregate frames; a 1x1 cross join is trivially
     broadcast. Output columns: ``<m>_subject, <m>_control, <m>_delta``.
     """
-    s = subject_agg.select([F.col(m).alias(f"{m}_subject") for m in metrics])
-    c = control_agg.select([F.col(m).alias(f"{m}_control") for m in metrics])
-    out = s.crossJoin(F.broadcast(c))
-    for m in metrics:
-        out = out.withColumn(f"{m}_delta", F.col(f"{m}_subject") - F.col(f"{m}_control"))
-    return out
+    s = subject_agg.selectExpr(
+        *(f"{ident(m)} AS {ident(m + '_subject')}" for m in metrics)
+    )
+    c = control_agg.selectExpr(
+        *(f"{ident(m)} AS {ident(m + '_control')}" for m in metrics)
+    )
+    deltas = (
+        f"{ident(m + '_subject')} - {ident(m + '_control')} AS {ident(m + '_delta')}"
+        for m in metrics
+    )
+    return s.crossJoin(c.hint("broadcast")).selectExpr("*", *deltas)

@@ -12,6 +12,12 @@ reference ultimately extracts anyway (viz.py:818 reads ``.x``/``.y``).
   same Earth radius).
 - trajectory: per-user time-ordered [[lat, lon], ...] path arrays
   (viz.py:814-821) via collect_list over an ordered window.
+
+``trajectories`` and ``geofence_join`` write their expressions as parsed SQL
+over quoted identifiers (:mod:`..functions.sql`), so a dashboard map request
+costs a few py4j round trips per call rather than several per Column-API
+node. The even-odd ring test stays Column math: ``point_in_polygon`` takes
+arbitrary Columns, and ``geofence_join`` folds the very same expression.
 """
 
 from __future__ import annotations
@@ -23,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.sql import ident, literal
 
 __all__ = [
     "wkt_point",
@@ -108,12 +116,47 @@ def trajectories(
     sort_array over structs keyed by timestamp keeps the whole thing one
     hash aggregate (no global sort): collect unordered, order in-place.
     """
-    pt = F.struct(F.col(ts).alias("ts"), F.array(F.col(lat), F.col(lon)).alias("p"))
+    u = ident(user)
+    pt = f"struct({ident(ts)} AS ts, array({ident(lat)}, {ident(lon)}) AS p)"
     return (
-        locations.groupBy(user)
-        .agg(F.sort_array(F.collect_list(pt)).alias("pts"))
-        .select(user, F.transform(F.col("pts"), lambda s: s["p"]).alias("path"))
+        locations.groupBy(u)
+        .agg(F.expr(f"sort_array(collect_list({pt}), true) AS pts"))
+        .selectExpr(u, "transform(pts, s_ -> s_.p) AS path")
     )
+
+
+def _ring_edges(ring: Column) -> Column:
+    """A ring's edges as ``array<struct<ax, ay, by, dx, dy>>``: vertex i
+    paired with vertex (i+1) mod n, with ``dx = bx - ax`` and
+    ``dy = by - ay`` computed once per edge. The wraparound edge closes an
+    open ring; on a closed ring it is degenerate (a == b, never straddles)."""
+    nxt = F.concat(F.slice(ring, 2, F.size(ring)), F.slice(ring, 1, 1))
+    return F.zip_with(
+        ring,
+        nxt,
+        lambda a, b: F.struct(
+            a["lon"].alias("ax"),
+            a["lat"].alias("ay"),
+            b["lat"].alias("by"),
+            (b["lon"] - a["lon"]).alias("dx"),
+            (b["lat"] - a["lat"]).alias("dy"),
+        ),
+    )
+
+
+def _even_odd(lon: Column, lat: Column, edges: Column) -> Column:
+    """The even-odd rule over :func:`_ring_edges`: an edge crosses the ray
+    from (lon, lat) towards +lon when it straddles ``lat`` and the point lies
+    left of the edge's x at ``lat``, ``ax + dx * (lat - ay) / dy`` — the
+    IEEE operation order of ``ax + (bx - ax) * (lat - ay) / (by - ay)``.
+    The only copy of the rule: both spatial entry points fold it."""
+
+    def crosses(acc: Column, e: Column) -> Column:
+        straddles = (e["ay"] > lat) != (e["by"] > lat)
+        xcross = e["ax"] + e["dx"] * (lat - e["ay"]) / e["dy"]
+        return acc + F.when(straddles & (lon < xcross), 1).otherwise(0)
+
+    return F.pmod(F.aggregate(edges, F.lit(0), crosses), F.lit(2)) == 1
 
 
 def point_in_polygon(lon: Column, lat: Column, ring: Column) -> Column:
@@ -132,23 +175,7 @@ def point_in_polygon(lon: Column, lat: Column, ring: Column) -> Column:
     trajectories, viz.py:814-821); this is the north-star spatial-join
     primitive built the Spark-first way.
     """
-    n = F.size(ring)
-    # wraparound edge (i -> (i+1) mod n) closes an open ring; on a closed
-    # ring the wrap edge is degenerate (a == b, never straddles) — harmless
-    ax = lambda i: F.element_at(ring, i + 1)["lon"]  # noqa: E731
-    ay = lambda i: F.element_at(ring, i + 1)["lat"]  # noqa: E731
-    bx = lambda i: F.element_at(ring, F.pmod(i + 1, n) + 1)["lon"]  # noqa: E731
-    by = lambda i: F.element_at(ring, F.pmod(i + 1, n) + 1)["lat"]  # noqa: E731
-
-    def crosses(i: Column) -> Column:
-        straddles = (ay(i) > lat) != (by(i) > lat)
-        xcross = ax(i) + (bx(i) - ax(i)) * (lat - ay(i)) / (by(i) - ay(i))
-        return F.when(straddles & (lon < xcross), F.lit(1)).otherwise(F.lit(0))
-
-    count = F.aggregate(
-        F.sequence(F.lit(0), n - 1), F.lit(0), lambda acc, i: acc + crosses(i)
-    )
-    return F.pmod(count, F.lit(2)) == 1
+    return _even_odd(lon, lat, _ring_edges(ring))
 
 
 def geofence_join(
@@ -171,42 +198,70 @@ def geofence_join(
     share a cell. The fact side never shuffles: cell assignment and the
     ring test are map-side expressions over the broadcast index.
 
+    Filter and refine: each polygon's bounding box ``[x0, x1] × [y0, y1]``
+    and edge list are computed once, on the broadcast side. A candidate
+    must first pass the exact latitude band ``y0 <= lat < y1`` and the
+    padded longitude band ``x0 - pad <= lon <= x1 + pad``, with
+    ``pad = 1e-9 * greatest(1, |x0|, |x1|)``; only then does it fold the
+    even-odd rule (the one :func:`point_in_polygon` folds) over the
+    precomputed edges. The filter never changes an answer:
+
+    - below ``y0`` or at/above ``y1`` every vertex lies on the same side of
+      ``lat`` in the straddle test, so no edge straddles;
+    - right of ``x1 + pad`` the point is right of every crossing x, which
+      interpolates between an edge's endpoints and so lies within a few
+      ulps of ``[x0, x1]`` — the pad is many orders of magnitude larger;
+    - left of ``x0 - pad`` the point is left of every crossing x, so every
+      straddling edge counts; walking a closed ring (the wraparound edge
+      closes an open one) flips above/below once per straddling edge and
+      ends where it started, so that count is even: outside.
+
+    A ring with a NULL or NaN vertex coordinate skips the longitude band:
+    an edge touching that vertex has a NULL or NaN crossing x, which
+    breaks both longitude arguments (the latitude one still holds). A NaN
+    or NULL point is never inside, in the bands as in the fold.
+
     ``cell_deg`` trades index size against candidate precision; cells per
     polygon ~ (bbox area / cell_deg²), so size it to the typical geofence.
     """
-    xs = F.transform(F.col(ring), lambda v: v["lon"])
-    ys = F.transform(F.col(ring), lambda v: v["lat"])
-    cellify = lambda c: F.floor(c / F.lit(float(cell_deg))).cast("long")  # noqa: E731
-    fences = polygons.select(
-        polygon_id,
-        ring,
-        F.explode(
-            F.sequence(cellify(F.array_min(xs)), cellify(F.array_max(xs)))
-        ).alias("_cx"),
-        F.col(ring).alias("_r"),
-    ).select(
-        polygon_id,
-        ring,
-        "_cx",
-        F.explode(
-            F.sequence(
-                cellify(
-                    F.array_min(F.transform(F.col("_r"), lambda v: v["lat"]))
-                ),
-                cellify(
-                    F.array_max(F.transform(F.col("_r"), lambda v: v["lat"]))
-                ),
-            )
-        ).alias("_cy"),
+    r, pid = ident(ring), ident(polygon_id)
+    cell = lambda v: f"CAST(FLOOR({v} / {literal(float(cell_deg))}) AS BIGINT)"  # noqa: E731
+    bound = lambda agg, c: f"{agg}(transform({r}, v_ -> v_.{c}))"  # noqa: E731
+    pad = "1e-9D * greatest(1.0D, abs(_x0), abs(_x1))"
+    boxes = polygons.selectExpr(
+        pid,
+        f"{r} AS _r",
+        f"{bound('array_min', 'lon')} AS _x0",
+        f"{bound('array_max', 'lon')} AS _x1",
+        f"{bound('array_min', 'lat')} AS _y0",
+        f"{bound('array_max', 'lat')} AS _y1",
+        f"exists({r}, v_ -> v_.lon IS NULL OR v_.lat IS NULL "
+        "OR isnan(v_.lon) OR isnan(v_.lat)) AS _no_xband",
     )
-    pts = points.withColumn("_cx", cellify(F.col(lon))).withColumn(
-        "_cy", cellify(F.col(lat))
+    fences = boxes.select(
+        F.col(pid),
+        _ring_edges(F.col("_r")).alias("_e"),
+        "_y0",
+        "_y1",
+        F.expr(f"IF(_no_xband, CAST('-Infinity' AS DOUBLE), _x0 - {pad}) AS _xlo"),
+        F.expr(f"IF(_no_xband, CAST('Infinity' AS DOUBLE), _x1 + {pad}) AS _xhi"),
+        # one row per grid cell of the bbox: the (_cx, _cy) cross product
+        F.expr(
+            f"inline(flatten(transform(sequence({cell('_x0')}, {cell('_x1')}), "
+            f"i_ -> transform(sequence({cell('_y0')}, {cell('_y1')}), "
+            "j_ -> struct(i_ AS _cx, j_ AS _cy)))))"
+        ),
     )
-    return (
-        pts.join(F.broadcast(fences), ["_cx", "_cy"])
-        .filter(point_in_polygon(F.col(lon), F.col(lat), F.col(ring)))
-        .drop("_cx", "_cy", ring)
+    x, y = ident(lon), ident(lat)
+    # equi keys on the point's cell (broadcast hash join), then the bands,
+    # then the fold; And evaluates left to right and stops at the first false
+    candidate = F.expr(
+        f"_cx = {cell(x)} AND _cy = {cell(y)} "
+        f"AND {y} >= _y0 AND {y} < _y1 AND {x} >= _xlo AND {x} <= _xhi"
     )
+    return points.join(
+        fences.hint("broadcast"), candidate & _even_odd(F.col(x), F.col(y), F.col("_e"))
+    ).drop("_e", "_y0", "_y1", "_xlo", "_xhi", "_cx", "_cy")
 
 
 def grid_density(

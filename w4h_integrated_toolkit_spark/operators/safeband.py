@@ -4,6 +4,11 @@ The reference computes the band client-side then loops over ≤600 buckets in
 Python; here both are two declarative aggregations: one scalar agg for the
 band/span, one bucketized groupBy. The scalar frame is broadcast — the big
 fact scan happens once, map-side, no driver loop.
+
+``safe_band`` and ``breach_histogram`` write their expressions as parsed SQL
+over quoted identifiers, with literals rendered to the types ``F.lit`` gives
+(:mod:`..functions.sql`), so building a dashboard request costs a few py4j
+round trips instead of several per Column-API node.
 """
 
 from __future__ import annotations
@@ -11,15 +16,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql import ident, literal
+
 __all__ = ["safe_band", "fixed_point_band", "breach_histogram", "alerts"]
+
+
+def _band_sql(v: str, k: float) -> tuple[str, str]:
+    # ``avg - k * stddev`` in the Column API is avg - (stddev * k)
+    sd = f"stddev_samp({v}) * {literal(k)}"
+    return f"avg({v}) - {sd} AS band_lo", f"avg({v}) + {sd} AS band_hi"
 
 
 def safe_band(df: DataFrame, value: str = "value", k: float = 2.0) -> DataFrame:
     """A8 (viz.py:192-196): band = mean ± k·stddev (sample) over ALL users."""
-    return df.agg(
-        (F.avg(value) - k * F.stddev_samp(value)).alias("band_lo"),
-        (F.avg(value) + k * F.stddev_samp(value)).alias("band_hi"),
-    )
+    return df.selectExpr(*_band_sql(ident(value), k))
 
 
 def fixed_point_band(
@@ -84,27 +94,28 @@ def breach_histogram(
     into the fact scan, then a hash aggregate on the bucket index.
     """
     # cast keeps sub-second precision and matches DuckDB's epoch() exactly
-    e = F.col(ts).cast("double")
-    scalars = df.agg(
-        F.min(e).alias("t0"),
-        F.max(e).alias("t1"),
-        (F.avg(value) - k * F.stddev_samp(value)).alias("band_lo"),
-        (F.avg(value) + k * F.stddev_samp(value)).alias("band_hi"),
-    ).withColumn(
-        "bucket_w",
-        F.greatest((F.col("t1") - F.col("t0")) / max_buckets, F.lit(min_bucket_seconds)),
+    e, v = f"CAST({ident(ts)} AS DOUBLE)", ident(value)
+    scalars = df.selectExpr(
+        f"min({e}) AS t0",
+        *_band_sql(v, k),
+        f"greatest((max({e}) - min({e})) / {literal(max_buckets)}, "
+        f"{literal(min_bucket_seconds)}) AS bucket_w",
     )
-    unsafe = (F.col(value) < F.col("band_lo")) | (F.col(value) > F.col("band_hi"))
     return (
-        df.join(F.broadcast(scalars))
-        .withColumn("bucket", F.floor((e - F.col("t0")) / F.col("bucket_w")).cast("long"))
-        .groupBy("bucket")
+        df.join(scalars.hint("broadcast"))
+        .groupBy(F.expr(f"CAST(FLOOR(({e} - t0) / bucket_w) AS BIGINT) AS bucket"))
         .agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.when(unsafe, 1).otherwise(0)).alias("n_unsafe"),
+            F.expr("count(1) AS n_total"),
+            F.expr(
+                f"sum(CASE WHEN ({v} < band_lo) OR ({v} > band_hi) "
+                "THEN 1 ELSE 0 END) AS n_unsafe"
+            ),
         )
-        .withColumn("unsafe_ratio", F.col("n_unsafe") / F.col("n_total"))
-        .withColumn("opacity", 0.7 * F.col("unsafe_ratio") + 0.2)
+        .selectExpr(
+            "*",
+            "n_unsafe / n_total AS unsafe_ratio",
+            "n_unsafe / n_total * 0.7D + 0.2D AS opacity",
+        )
     )
 
 
@@ -132,10 +143,7 @@ def alerts(
     """
     e = F.col(ts).cast("double")
     if band is None:
-        band = df.agg(
-            (F.avg(value) - k * F.stddev_samp(value)).alias("band_lo"),
-            (F.avg(value) + k * F.stddev_samp(value)).alias("band_hi"),
-        )
+        band = df.selectExpr(*_band_sql(ident(value), k))
     unsafe = (F.col(value) < F.col("band_lo")) | (F.col(value) > F.col("band_hi"))
     return (
         df.join(F.broadcast(band))

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import rolling_hash, portable_hash31, portable_hash32
+from ..functions.sql import ident, literal
 
 __all__ = [
     "token_count",
@@ -537,7 +538,7 @@ def gopher_quality_flags(
     # same places); output equality and executed-plan shape stay pinned
     # by the hand-model/attribution/plan tests plus the randomized
     # text_gates stress section.
-    col = "`" + text.replace("`", "``") + "`"
+    col = ident(text)
     t = (
         "regexp_replace(regexp_replace("
         f"{col}, '^\\\\s+', ''), '\\\\s+$', '')"
@@ -621,7 +622,7 @@ def gopher_quality_flags(
 
     # thresholds render as DOUBLE literals of their float value, so any
     # real number type (numpy, Decimal) gives valid SQL; a non-finite one
-    # would not parse as a literal and raises here instead
+    # has no literal and raises here instead
     th = {}
     for name, x in (
         ("min_words", min_words), ("max_words", max_words),
@@ -635,10 +636,10 @@ def gopher_quality_flags(
         ("max_dup_line_frac", max_dup_line_frac),
         ("max_dup_line_char_frac", max_dup_line_char_frac),
     ):
-        v = float(x)
-        if not math.isfinite(v):
-            raise ValueError(f"{name} must be a finite number, got {x!r}")
-        th[name] = f"{v!r}D"
+        try:
+            th[name] = literal(float(x))
+        except ValueError:
+            raise ValueError(f"{name} must be a finite number, got {x!r}") from None
 
     stats = df.select(
         id_col,

@@ -9,6 +9,11 @@ disappears.
 
 ``calibrate_pandas`` is the applyInPandas parity variant kept for testing
 exact pandas semantics (SURVEY §2.9 U3).
+
+``resample_mean`` and ``calibrate`` (the dashboard's time-series panel) write
+their expressions as parsed SQL over quoted identifiers, with literals
+rendered to the types ``F.lit`` gives (:mod:`..functions.sql`): a few py4j
+round trips per call instead of several per Column-API node.
 """
 
 from __future__ import annotations
@@ -16,6 +21,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.sql import ident, literal
 
 __all__ = [
     "activity_span",
@@ -80,19 +87,24 @@ def resample_mean(
     (empty buckets simply don't exist in groupBy output, matching dropna).
     ``stable_decimals`` switches to the order-independent decimal mean.
     """
-    mean = (
-        stable_mean(value, stable_decimals)
-        if stable_decimals is not None
-        else F.avg(value)
-    )
+    u, d = ident(user), literal(duration)
     return (
-        df.groupBy(user, F.window(ts, duration).alias("w"))
-        .agg(mean.alias("mean_value"))
-        .select(
-            user,
-            F.col("w.start").alias("bucket_start"),
-            "mean_value",
-        )
+        df.groupBy(u, F.expr(f"window({ident(ts)}, {d}, {d}, '0 second') AS w"))
+        .agg(F.expr(f"{_mean_sql(ident(value), stable_decimals)} AS mean_value"))
+        .selectExpr(u, "w.start AS bucket_start", "mean_value")
+    )
+
+
+def _mean_sql(v: str, stable_decimals: int | None, over: str = "") -> str:
+    """SQL of ``avg(v)``, or of :func:`stable_mean` when ``stable_decimals``
+    is set, with the same IEEE operation order; ``over`` (e.g.
+    ``" OVER (PARTITION BY u)"``) turns both aggregates into windows."""
+    if stable_decimals is None:
+        return f"avg({v}){over}"
+    sc = literal(float(10**stable_decimals))
+    return (
+        f"CAST(sum(CAST(round({v} * {sc}, 0) AS BIGINT)){over} AS DOUBLE)"
+        f" / {sc} / count({v}){over}"
     )
 
 
@@ -254,27 +266,24 @@ def calibrate(
     ``stable_decimals`` makes the per-user baseline mean order-independent
     (see :func:`stable_mean`).
     """
-    w_user = Window.partitionBy(user)
-    w_ord = w_user.orderBy(ts)
+    u, t, v = ident(user), ident(ts), ident(value)
+    w_user = f" OVER (PARTITION BY {u})"
     # cast-to-double keeps sub-second precision (unix_timestamp truncates)
-    days = (
-        F.col(ts).cast("double") - F.min(F.col(ts).cast("double")).over(w_user)
-    ) / 86400.0
-    if stable_decimals is not None:
-        sc = F.lit(float(10**stable_decimals))
-        mu = (
-            F.sum(F.round(F.col(value) * sc, 0).cast("long")).over(w_user).cast("double")
-            / sc
-            / F.count(value).over(w_user)
-        )
-    else:
-        mu = F.avg(value).over(w_user)
-    scaled = F.col(value) / mu
-    out = df.withColumn("days_since_start", days).withColumn("scaled_value", scaled)
-    gap_to_next = F.lead("days_since_start", 1).over(w_ord) - F.col("days_since_start")
+    e = f"CAST({t} AS DOUBLE)"
+    out = df.withColumns({
+        "days_since_start": F.expr(f"({e} - min({e}){w_user}) / {literal(86400.0)}"),
+        "scaled_value": F.expr(f"{v} / ({_mean_sql(v, stable_decimals, w_user)})"),
+    })
+    gap_to_next = (
+        f"lead(days_since_start, 1) OVER (PARTITION BY {u} ORDER BY {t})"
+        " - days_since_start"
+    )
     return out.withColumn(
         "scaled_value",
-        F.when(gap_to_next > gap_days, F.lit(None)).otherwise(F.col("scaled_value")),
+        F.expr(
+            f"CASE WHEN {gap_to_next} > {literal(gap_days)} THEN NULL "
+            "ELSE scaled_value END"
+        ),
     )
 
 
