@@ -12,7 +12,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from w4h_integrated_toolkit_spark.plans import QUERIES  # noqa: E402
-from w4h_integrated_toolkit_spark.plans.queries import R17_CANDIDATES  # noqa: E402
+from w4h_integrated_toolkit_spark.plans.queries import GATE_CANDIDATES  # noqa: E402
 from w4h_integrated_toolkit_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("W4H_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -153,9 +153,9 @@ GALLERY = [
      "bytewise param sort, rebuild) is JVM Column expressions inside "
      "one codegen stage over the scan; the ONLY exchange is the "
      "canonical-key rollup."),
-    # --- gate-candidate family: gopher_flags + duplicated_spans were
-    #     PROMOTED into the registry at r15; the entries after them are
-    #     the pre-built R17_CANDIDATES, not yet registered ---
+    # --- gate-candidate family: hashed_clf_scores and
+    #     phash_hamming_pairs are the pre-built GATE_CANDIDATES, not yet
+    #     registered; the others here are registered ---
     ("gopher_flags", "Gopher rule set: all nine published rules — word/"
      "line splits, sorted-predecessor duplicate-line compare, per-rule "
      "fail_reasons assembly — are ONE codegen'd projection over the "
@@ -195,7 +195,7 @@ GALLERY = [
      "exchange + array verify — only (id, 4-byte fp) rows ever move."),
 ]
 
-QUERIES = dict(QUERIES) | dict(R17_CANDIDATES)
+QUERIES = dict(QUERIES) | dict(GATE_CANDIDATES)
 
 
 def main() -> None:

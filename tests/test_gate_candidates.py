@@ -1,11 +1,9 @@
 """Spark-vs-DuckDB parity for the pre-built gate candidates — the
 SAME canonical compare the registered parity sweep uses, run against
-queries that are deliberately NOT in the registry yet (the rotation
-throttle in plans/queries.py admits at most ~2 promotions per round).
-When a candidate is promoted, it arrives with this evidence standing.
-r15 promoted duplicated_spans + gopher_flags out of this file into
-the registry; r16 promoted dsir_resample + audio_fingerprint_pairs;
-the remaining two entries wait for the r17 window."""
+queries that are deliberately NOT in the registry yet (each promotion
+takes a slot in the 50-entry gate window, so they enter a few at a
+time). When a candidate is promoted, it arrives with this evidence
+standing."""
 
 from __future__ import annotations
 
@@ -13,19 +11,18 @@ import pytest
 
 from tests.conftest import SF_DIR
 from tests.test_parity import _canon
-from w4h_integrated_toolkit_spark.plans.queries import R17_CANDIDATES
+from w4h_integrated_toolkit_spark.plans.queries import GATE_CANDIDATES
 
-CASES = [(n, fn, sql) for n, (fn, sql) in R17_CANDIDATES.items()]
+CASES = [(n, fn, sql) for n, (fn, sql) in GATE_CANDIDATES.items()]
 
 
 def test_candidates_stay_out_of_the_registry():
     from w4h_integrated_toolkit_spark.plans import QUERIES
 
-    overlap = set(R17_CANDIDATES) & set(QUERIES)
+    overlap = set(GATE_CANDIDATES) & set(QUERIES)
     assert not overlap, (
-        f"R17 candidates {overlap} leaked into the registry — the r16 "
-        "window admits only the 2 planned promotions; promote the rest "
-        "at r17 per the plan"
+        f"gate candidates {overlap} are also registered — promoting one "
+        "means moving it from GATE_CANDIDATES into QUERIES"
     )
 
 

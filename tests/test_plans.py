@@ -6,6 +6,8 @@ the plan shape itself."""
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import re
 
@@ -1377,340 +1379,154 @@ def test_wave17_plan_shapes(spark):
     assert n_shuffles(p) == 1, p[:800]
 
 
-def test_r12_gate_window_composition_recomputed_from_driver_rows():
-    """The judge's standing caution: the builder schedules the gate
-    window, so every round's rotation honesty must be re-verifiable.
-    This test RECOMPUTES the prescribed r12 composition from the
-    CORRECTNESS_r*.json driver records themselves — the 44 r8-stale
-    rows first in r8-file order, then the 2 never-driver-gated late-r11
-    additions (url_canonicalize, idna_hosts — their first hash), then
-    the 4 stalest r9 rows in r9-file order — and asserts _R12_WINDOW
-    equals it name-for-name, so the window cannot drift from the
-    written plan without this failing. This is the round the rotation
-    debt hits zero: after r12 gates green no r8-stale and no
-    never-gated entries remain."""
-    import json
-
-    from w4h_integrated_toolkit_spark.plans.queries import _R12_WINDOW
-
+def _driver_records() -> list[dict]:
+    """The driver's CORRECTNESS_r01.json, r02, ... records on disk, in
+    round order (skips the test when none are present)."""
     root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    orders: dict[int, list[str]] = {}
-    for n in range(1, 12):
-        path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            pytest.skip("driver CORRECTNESS records not present")
+    records = []
+    while os.path.exists(
+        path := os.path.join(root, f"CORRECTNESS_r{len(records) + 1:02d}.json")
+    ):
         with open(path) as f:
-            rows = json.load(f)
-        orders[n] = list(rows)
-        for name, rec in rows.items():
-            if rec.get("hash_match") or rec.get("rows_match"):
-                latest[name] = n
-
-    r8_stale = [k for k in orders[8] if latest.get(k) == 8]
-    r9_stale = [k for k in orders[9] if latest.get(k) == 9]
-    never_gated_r11 = ["url_canonicalize", "idna_hosts"]
-    assert all(k not in latest for k in never_gated_r11)
-    assert len(r8_stale) == 44  # zero r7-stale remain (r11 cleared them)
-    n_r9 = 50 - len(r8_stale) - len(never_gated_r11)
-    expected = r8_stale + never_gated_r11 + r9_stale[:n_r9]
-    assert list(_R12_WINDOW) == expected, (
-        "gate window diverges from the recomputed rotation plan"
-    )
+            records.append(json.load(f))
+    if not records:
+        pytest.skip("driver CORRECTNESS records not present")
+    return records
 
 
-def test_r13_gate_window_composition_recomputed_from_driver_rows():
-    """Rotation honesty for r13, machine-checked the same way as r10–r12:
-    RECOMPUTE the prescribed composition from the CORRECTNESS_r*.json
-    driver records — the 46 r9-stale rows first in true r9-file key
-    order (the r12 verdict caught the hand-written r13 plan list
-    claiming r9 order while being shuffled; this derivation is the
-    fix), then the 3 never-driver-gated r12 additions
-    (ranking_model_scores, stream_url_frontier, warc_extract — their
-    first hashes), then the stalest r10 row — and assert _R13_WINDOW
-    equals it name-for-name. After r13 gates green, zero r9-stale and
-    zero never-gated entries remain."""
-    import json
-
-    from w4h_integrated_toolkit_spark.plans.queries import _R13_WINDOW
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    orders: dict[int, list[str]] = {}
-    for n in range(1, 13):
-        path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            pytest.skip("driver CORRECTNESS records not present")
-        with open(path) as f:
-            rows = json.load(f)
-        orders[n] = list(rows)
-        for name, rec in rows.items():
-            if rec.get("hash_match") or rec.get("rows_match"):
-                latest[name] = n
-
-    r9_stale = [k for k in orders[9] if latest.get(k) == 9]
-    r10_stale = [k for k in orders[10] if latest.get(k) == 10]
-    never_gated_r12 = [
-        "ranking_model_scores", "stream_url_frontier", "warc_extract",
-    ]
-    assert all(k not in latest for k in never_gated_r12)
-    assert len(r9_stale) == 46  # zero r8-stale remain (r12 cleared them)
-    n_fill = 50 - len(r9_stale) - len(never_gated_r12)
-    expected = r9_stale + never_gated_r12 + r10_stale[:n_fill]
-    assert list(_R13_WINDOW) == expected, (
-        "gate window diverges from the recomputed rotation plan"
-    )
-
-
-def test_r14_gate_window_composition_recomputed_from_driver_rows():
-    """Rotation honesty for r14, machine-checked the same way as
-    r10-r13: RECOMPUTE the prescribed composition from the
-    CORRECTNESS_r*.json driver records — the 49 r10-stale rows first in
-    true r10-file key order, then robots_filter (the only registry
-    entry with no driver row ever, added late-r13 inside the 1-slot
-    allowance) — and assert _R14_WINDOW equals it name-for-name. After
-    r14 gates green, zero r10-stale and ZERO never-gated entries
-    remain: every one of the 200 registry entries carries a driver
-    hash no older than r11."""
-    import json
-
-    from w4h_integrated_toolkit_spark.plans.queries import _R14_WINDOW
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    orders: dict[int, list[str]] = {}
-    for n in range(1, 14):
-        path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            pytest.skip("driver CORRECTNESS records not present")
-        with open(path) as f:
-            rows = json.load(f)
-        orders[n] = list(rows)
-        for name, rec in rows.items():
-            if rec.get("hash_match") or rec.get("rows_match"):
-                latest[name] = n
-
-    r10_stale = [k for k in orders[10] if latest.get(k) == 10]
-    never_gated = ["robots_filter"]
-    assert all(k not in latest for k in never_gated)
-    assert len(r10_stale) == 49  # zero r9-stale remain (r13 cleared them)
-    expected = r10_stale + never_gated
-    assert len(expected) == 50
-    assert list(_R14_WINDOW) == expected, (
-        "gate window diverges from the recomputed rotation plan"
-    )
-
-
-def test_r15_gate_window_composition_recomputed_from_driver_rows():
-    """Rotation honesty for r15, machine-checked the same way as
-    r10-r14: RECOMPUTE the prescribed composition from the
-    CORRECTNESS_r*.json driver records — the 50 r11-stale rows in true
-    r11-file key order with the LAST 2 displaced (knn_ivf_persisted +
-    replay_wraparound, the least-stale tail, pushed to lead the r16
-    window), then the two planned promotions duplicated_spans +
-    gopher_flags taking their first driver hash — and assert
-    _R15_WINDOW equals it name-for-name. Also pins that the promoted
-    names never returned to the candidates file (renamed
-    R17_CANDIDATES at r16; the exact registry count moved to the r16
-    test below)."""
-    import json
-
-    from w4h_integrated_toolkit_spark.plans.queries import (
-        _R15_WINDOW,
-        QUERIES,
-        R17_CANDIDATES,
-    )
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    orders: dict[int, list[str]] = {}
-    for n in range(1, 15):
-        path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            pytest.skip("driver CORRECTNESS records not present")
-        with open(path) as f:
-            rows = json.load(f)
-        orders[n] = list(rows)
-        for name, rec in rows.items():
-            if rec.get("hash_match") or rec.get("rows_match"):
-                latest[name] = n
-
-    r11_stale = [k for k in orders[11] if latest.get(k) == 11]
-    assert len(r11_stale) == 50  # zero r10-stale remain (r14 cleared them)
-    promotions = ["duplicated_spans", "gopher_flags"]
-    assert all(k not in latest for k in promotions)
-    expected = r11_stale[:-2] + promotions
-    assert r11_stale[-2:] == ["knn_ivf_persisted", "replay_wraparound"]
-    assert len(expected) == 50
-    assert list(_R15_WINDOW) == expected, (
-        "gate window diverges from the recomputed rotation plan"
-    )
-    assert not set(promotions) & set(R17_CANDIDATES)
-
-
-def test_r16_gate_window_composition_recomputed_from_driver_rows():
-    """Rotation honesty for r16, machine-checked the same way as
-    r10-r15: RECOMPUTE the prescribed composition from the
-    CORRECTNESS_r*.json driver records — the 2 displaced r11 rows LEAD
-    (knn_ivf_persisted + replay_wraparound, 5 rounds stale, the oldest
-    driver evidence in the registry), then the first 46 of the 50
-    r12-stale rows in true r12-file key order (the last 4 —
-    streaming_ewma, stream_window_dedup, value_percentile_rank,
-    grid_density — are pushed to lead the r17 window), then the two
-    planned promotions dsir_resample + audio_fingerprint_pairs taking
-    their first driver hash — and assert _R16_WINDOW equals it
-    name-for-name. Also pins the registry arithmetic: 202 + 2
-    promotions = 204 entries, and the promoted names must no longer
-    sit in R17_CANDIDATES."""
-    import json
-
-    from w4h_integrated_toolkit_spark.plans.queries import (
-        _R16_WINDOW,
-        QUERIES,
-        R17_CANDIDATES,
-    )
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    orders: dict[int, list[str]] = {}
-    for n in range(1, 16):
-        path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            pytest.skip("driver CORRECTNESS records not present")
-        with open(path) as f:
-            rows = json.load(f)
-        orders[n] = list(rows)
-        for name, rec in rows.items():
-            if rec.get("hash_match") or rec.get("rows_match"):
-                latest[name] = n
-
-    r11_stale = [k for k in orders[11] if latest.get(k) == 11]
-    assert r11_stale == ["knn_ivf_persisted", "replay_wraparound"]
-    r12_stale = [k for k in orders[12] if latest.get(k) == 12]
-    assert len(r12_stale) == 50  # no r12 row re-entered a later window
-    promotions = ["dsir_resample", "audio_fingerprint_pairs"]
-    assert all(k not in latest for k in promotions)
-    expected = r11_stale + r12_stale[:-4] + promotions
-    assert r12_stale[-4:] == [
-        "streaming_ewma",
-        "stream_window_dedup",
-        "value_percentile_rank",
-        "grid_density",
-    ]
-    assert len(expected) == 50
-    assert list(_R16_WINDOW) == expected, (
-        "gate window diverges from the recomputed rotation plan"
-    )
-    assert len(QUERIES) == 204
-    assert not set(promotions) & set(R17_CANDIDATES)
-
-
-def test_r17_gate_window_composition_recomputed_from_driver_rows():
-    """Rotation honesty for r17 (optimization round 2), machine-checked
-    the same way as r10-r16: RECOMPUTE the prescribed composition from
-    the CORRECTNESS_r*.json driver records — the 4 pushed r12-stale
-    rows LEAD (5 rounds stale, the freshness invariant requires them),
-    then the 9 optimization-touched re-gates the r16 verdict's order #9
-    names (r16-touched heavy queries not already in the stale backlog,
-    plus this round's restructured rows), then the first 37 r13-stale
-    rows in true r13-file key order (the last 13 push to lead r18) —
-    and assert _R17_WINDOW equals it name-for-name. No promotions this
-    round (optimization scope): the registry stays at 204 and both
-    standing R17_CANDIDATES remain un-registered."""
-    import json
-
-    from w4h_integrated_toolkit_spark.plans.queries import (
-        _R17_WINDOW,
-        QUERIES,
-        R17_CANDIDATES,
-    )
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    orders: dict[int, list[str]] = {}
-    for n in range(1, 17):
-        path = os.path.join(root, f"CORRECTNESS_r{n:02d}.json")
-        if not os.path.exists(path):
-            pytest.skip("driver CORRECTNESS records not present")
-        with open(path) as f:
-            rows = json.load(f)
-        orders[n] = list(rows)
-        for name, rec in rows.items():
-            if rec.get("hash_match") or rec.get("rows_match"):
-                latest[name] = n
-
-    r12_stale = [k for k in orders[12] if latest.get(k) == 12]
-    assert r12_stale == [
-        "streaming_ewma",
-        "stream_window_dedup",
-        "value_percentile_rank",
-        "grid_density",
-    ]
-    regates = [
-        "bloom_decontaminate",
-        "event_type_pagerank",
-        "dedup_keep_best",
-        "chi2_independence",
-        "source_overlap",
-        "pmi_pairs",
-        "unigram_nll",
-        "streaming_debounce",
-        "streaming_anomaly",
-    ]
-    # every re-gate row is genuinely outside the stale backlog (it was
-    # re-gated r14/r15) — the slot spend is re-stamping, not rotation
-    assert all(14 <= latest[k] <= 15 for k in regates), {
-        k: latest.get(k) for k in regates
+def _latest_green(records: list[dict]) -> dict[str, int]:
+    """name -> the last round (1-based) whose driver row matched."""
+    return {
+        name: r
+        for r, rows in enumerate(records, 1)
+        for name, rec in rows.items()
+        if rec.get("hash_match") or rec.get("rows_match")
     }
-    r13_stale = [k for k in orders[13] if latest.get(k) == 13]
-    assert len(r13_stale) == 50
-    expected = r12_stale + regates + r13_stale[:37]
-    assert len(expected) == 50
-    assert list(_R17_WINDOW) == expected, (
-        "gate window diverges from the recomputed rotation plan"
+
+
+def gate_window(records: list[dict], names, regate=()) -> list[str]:
+    """The 50-slot gate window for round len(records) + 1, from the driver
+    records r01..rN and the registry ``names`` (in registry order).
+
+    Rows that would break test_registry_freshness_invariant one round
+    later lead, in record key order (round by round, oldest first); then
+    the explicit ``regate`` names; then the remaining stale rows in the
+    same order; never-gated registered names take the last slots.
+    Record names that are not registered are ignored."""
+    names = list(names)
+    registered = set(names)
+    unknown = [k for k in regate if k not in registered]
+    if unknown:
+        raise ValueError(f"re-gate names not registered: {unknown}")
+    latest = _latest_green(records)
+    max_staleness = math.ceil(len(names) / 50)
+    stale = [
+        k
+        for r, rows in enumerate(records, 1)
+        for k in rows
+        if k in registered and latest.get(k) == r
+    ]
+    due = len(records) + 2 - max_staleness
+    head = [k for k in stale if latest[k] < due]
+    head = list(dict.fromkeys(head + list(regate)))
+    never = [k for k in names if k not in latest]
+    room = 50 - len(head) - len(never)
+    if room < 0:
+        raise ValueError(
+            f"{len(head)} due/re-gate rows + {len(never)} never-gated "
+            "rows exceed the 50-slot window"
+        )
+    rest = [k for k in stale if k not in head]
+    return head + rest[:room] + never
+
+
+# The committed GATE_WINDOW was computed from the records up to this
+# round plus these re-gates (rows re-stamped after their code changed).
+GATE_BASIS_ROUND = 16
+GATE_REGATES = (
+    "bloom_decontaminate",
+    "event_type_pagerank",
+    "dedup_keep_best",
+    "chi2_independence",
+    "source_overlap",
+    "pmi_pairs",
+    "unigram_nll",
+    "streaming_debounce",
+    "streaming_anomaly",
+)
+
+
+def test_gate_window_recomputed_from_driver_records():
+    """GATE_WINDOW is what the rotation rule gives on the driver records,
+    and it is what the driver hashes: the first 50 registry entries. When
+    a new record lands, move GATE_BASIS_ROUND to it, set GATE_REGATES,
+    and paste the list this test prints."""
+    from w4h_integrated_toolkit_spark.plans.queries import (
+        GATE_CANDIDATES,
+        GATE_WINDOW,
     )
-    assert list(QUERIES)[:50] == expected
+
+    records = _driver_records()
+    if len(records) < GATE_BASIS_ROUND:
+        pytest.skip(f"driver records stop before r{GATE_BASIS_ROUND:02d}")
+    expected = gate_window(records[:GATE_BASIS_ROUND], QUERIES, GATE_REGATES)
+    pasteable = "GATE_WINDOW = [\n" + "".join(f'    "{k}",\n' for k in expected)
+    assert GATE_WINDOW == expected, f"recomputed window:\n{pasteable}]"
+    assert list(QUERIES)[:50] == GATE_WINDOW
     assert len(QUERIES) == 204
-    assert set(R17_CANDIDATES.keys()) >= {
-        "hashed_clf_scores",
-        "phash_hamming_pairs",
-    }
+    assert not set(GATE_CANDIDATES) & set(QUERIES)
+    if len(records) >= 17:
+        # the 13 r13 rows GATE_WINDOW leaves out are due first at r18
+        latest = _latest_green(records[:17])
+        r13_left = [k for k in records[12] if latest.get(k) == 13]
+        assert len(r13_left) == 13 and r13_left[0] == "session_windows"
+        assert gate_window(records[:17], QUERIES)[:13] == r13_left
+
+
+def test_gate_window_rule_on_synthetic_records():
+    """The rule on 120 synthetic names over 5 rounds (max staleness 3):
+    due rows lead in record key order, re-gates follow once each, the
+    stalest rows fill, never-gated names take the tail in registry order,
+    and unregistered record names are ignored."""
+    q = [f"q{i:03d}" for i in range(120)]
+    names = q[:110] + q[:109:-1]  # never-gated tail in reverse
+    green, red = {"hash_match": True}, {"hash_match": False, "rows_match": False}
+    records = [
+        {**{k: green for k in q[9::-1]}, "gone": green, "q119": red},
+        {k: green for k in q[10:20] + q[:5]},
+        {k: green for k in q[20:25]},
+        {k: green for k in q[25:70]},
+        {k: green for k in q[70:110]},
+    ]
+    due = q[9:4:-1] + q[10:20] + q[:5] + q[20:25]
+    regate = ("q100", "q020", "q030", "q100")
+    w = gate_window(records, names, regate)
+    assert len(w) == 50 and len(set(w)) == 50
+    assert w[:25] == due
+    assert w[25:27] == ["q100", "q030"]
+    assert w[27:40] == q[25:30] + q[31:39]
+    assert w[40:] == q[:109:-1]
+    assert "gone" not in w
+    assert gate_window(records, names)[:25] == due
+
+    with pytest.raises(ValueError, match="not registered"):
+        gate_window(records, names, ("gone",))
+    with pytest.raises(ValueError, match="exceed"):
+        gate_window(records, names, tuple(q[25:41]))
 
 
 def test_registry_freshness_invariant():
-    """The machine-checked max-staleness rule the r15 verdict ordered
-    (the registry outgrew window*4 rows, so prose discipline no longer
-    suffices): with N = the latest CORRECTNESS round on disk, every
-    registered entry must either (a) carry a green driver row no older
-    than MAX_STALENESS = ceil(len(QUERIES)/50) rounds as of round N+1
-    (the window about to execute), or (b) sit INSIDE the current
-    first-50 window so round N+1 refreshes it. Never-gated entries
-    (fresh promotions) must always be inside the window — registration
-    and first gating happen in the same round by construction. This
-    test tightens automatically: each new CORRECTNESS record on disk
-    advances N, so rows a window displaced come due within one round of
-    slack and MUST re-enter a committed window by then, or this fails
-    (the written window plans stay one round stricter than this
-    backstop)."""
-    import json
-    import math
-
-    from w4h_integrated_toolkit_spark.plans.queries import QUERIES
-
-    root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    n = 0
-    while os.path.exists(
-        os.path.join(root, f"CORRECTNESS_r{n + 1:02d}.json")
-    ):
-        n += 1
-        with open(os.path.join(root, f"CORRECTNESS_r{n:02d}.json")) as f:
-            for name, rec in json.load(f).items():
-                if rec.get("hash_match") or rec.get("rows_match"):
-                    latest[name] = n
-    if n == 0:
-        pytest.skip("driver CORRECTNESS records not present")
-
+    """The max-staleness backstop: with N = the latest driver record on
+    disk, every registered entry either carries a green driver row no
+    older than MAX_STALENESS = ceil(len(QUERIES)/50) rounds as of round
+    N+1 (the window about to execute), or sits inside the first-50
+    window so round N+1 refreshes it. Never-gated entries must always be
+    inside the window. Each new record advances N, so rows the window
+    left out come due within one round and must re-enter it, or this
+    fails; gate_window leads with them one round earlier."""
+    records = _driver_records()
+    n = len(records)
+    latest = _latest_green(records)
     window = set(list(QUERIES)[:50])
     max_staleness = math.ceil(len(QUERIES) / 50)
     violations = [

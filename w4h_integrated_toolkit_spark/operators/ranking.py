@@ -354,11 +354,19 @@ def pmi_pairs(
     within the top ``vocab_size`` tokens by document frequency (ties
     break alphabetically), so per-document pair expansion is
     <= vocab_size²/2 regardless of document length, and the pair
-    aggregate is bounded by vocab² keys. Plan: one df aggregate for the
-    vocab (TakeOrdered, broadcast back), map-side per-doc
-    vocab-intersection + pair explode, ONE pair aggregate, broadcast df
-    joins for d_a/d_b, N as a 1-row broadcast. Ranking by integer
-    (d_ab DESC, a, b) — deterministic without float ordering.
+    aggregate is bounded by vocab² keys. Plan: map-side per-doc
+    intersection with the fitted vocab + pair explode, ONE pair
+    aggregate, broadcast df joins for d_a/d_b, N as a 1-row broadcast.
+    Ranking by integer (d_ab DESC, a, b) — deterministic without float
+    ordering.
+
+    The builder is EAGER: calling it runs Spark jobs before any action
+    on the result. ``localCheckpoint(eager=True)`` materializes the
+    vocab fit (the corpus token-df aggregate + TakeOrdered), then a
+    ``collect`` brings its ``vocab_size`` tokens to the driver, where
+    they are baked into the returned plan as array literals. The result
+    therefore reflects ``df`` as of the call, and its plan references a
+    checkpoint held by the calling session's executors.
     """
     toks = df.select(
         id_col,

@@ -8721,751 +8721,13 @@ v0 AS (
     )
 
 
-# --------------------------------------------------------------------------
-
-# Ordering note: the driver's correctness gate hashes only the FIRST 50
-# entries (dict insertion order); rotation policy is one full sweep every
-# two rounds so no entry's driver row goes >2 rounds stale. History:
-# r5 gated the 5 approx/sketch first-ever oracles + the 35 r1-stale
-# entries + canaries; r6 gated the 2 never-hashed streaming entries, all
-# 41 r4-stale rows, 3 canaries, and the 4 riskiest r6 additions — after
-# r6 the latest-round histogram was exactly {r6: 50, r5: 47, older: 0}.
-#
-# r7 gated (a) the 3 real-streaming never-hashed entries first, (b) the
-# remaining 36 never-hashed r6 wave-2/3 entries, (c) 11 stalest r5 rows.
-# All 50 green → histogram after r7: {r7: 50, r6: 50, r5: 36}.
-#
-# ROUND-8 WINDOW (executed below via _R8_WINDOW — the dict literal keeps
-# its semantic grouping; the reorder after the literal is what the driver
-# sees): (a) the 14 highest-risk of the 20 never-driver-hashed r7
-# additions, `streaming_debounce` first (stateful streaming job, heaviest
-# never-gated entry) in case the driver budgets the gate globally —
-# never-externally-verified entries outrank stale-but-previously-green
-# rows if the gate is cut short; (b) all 36 r5-stale rows (verified
-# against CORRECTNESS_r01..r07 at r8 start — exactly the set whose latest
-# driver row is r5). After r8 gates green: histogram {r8: 50, r7: 50,
-# r6: 50, never: 6} — no entry older than r6. Measured gate wall for
-# this exact 50-entry window (sf0.01, 4 cpus, cold session, r8 start):
-# 31.2 s total; slowest entry streaming_debounce 8.8 s, everything else
-# ≤2.2 s — comfortably inside the ~30 s/entry envelope and under half
-# the r7 window's 54 s wall.
-#
-# R9 WINDOW PLAN (execute at r9 start): the 20 never-gated entries
-# first — the 6 r7 leftovers (streaming_ewma — stateful streaming, gate
-# it before the batch twin rotates out again — then
-# value_percentile_rank, grid_density, salted_hot_key_agg, event_paths,
-# brand_top_parts), the 10 r8 wave-7 additions (stream_window_dedup
-# early — real streaming job — then salted_join_equiv, embedding_gram,
-# embedding_dim_stats, feature_hash_histogram, bigram_nll,
-# vocab_oov_rate, rolling_median, equi_depth_bins, class_balance), and
-# the 4 r8 wave-8 additions (acf_lags, kfold_report, quality_top_p,
-# dataset_card), the 3 wave-9 additions (basket_affinity,
-# shrunk_group_means, incremental_agg), and the 3 wave-10 eval-family
-# additions (langid_confusion, classification_metrics, ewma_backtest)
-# plus k_anonymity_audit and the wave-11 pair (scd2_lookup,
-# ols_trend_slope) — 29 never-gated in all — then fill the remaining 21
-# slots with the stalest r6 rows in r6-window order (streaming_neardup,
-# stream_distinct_users, byte_histogram, ...). The ~29 r6 rows that
-# don't fit must lead the r10 window alongside the r7-stale rotation —
-# that keeps every entry's driver row ≤2 rounds old. The exact
-# prospective r9 window (29 never-gated + the first 21 r6 rows in
-# CORRECTNESS_r06 order) was pre-measured at r8 end: 45.6 s total cold
-# at sf0.01 on 4 cpus, worst entry streaming_ewma 5.6 s — inside the
-# historical 41-58.5 s window range, every entry far under the ~30 s
-# per-entry envelope. RE-MEASURED mid-r9 on current code (after the
-# SCD2 change-rule fix landed in this window via scd2_lookup): 49.5 s
-# total cold, worst streaming_ewma 9.6 s, next user_similarity_topk
-# 2.9 s — still inside the historical range and the envelope.
-# RE-MEASURED again after the bounded-replay optimization (8 state
-# partitions + localCheckpoint drain + numpy CM probe): 42.0 s total
-# cold, worst streaming_ewma 8.6 s (first streaming job in the fresh
-# session absorbs the streaming-machinery JIT), next dedup_clusters
-# 2.6 s.
-QUERIES: dict[str, tuple[QueryFn, str | None]] = {
-    # --- never driver-gated: the two r5 streaming entries (real streaming
-    # jobs; gate == batch twin, equality is test-asserted) ---
-    "streaming_neardup": (q_streaming_neardup, _incremental_dedup_sql()),
-    "stream_distinct_users": (q_stream_distinct_users, _SQL_STREAM_DISTINCT_USERS),
-    # --- r4-stale (41): latest driver row is round 4 ---
-    "byte_histogram": (q_byte_histogram, _SQL_BYTE_HISTOGRAM),
-    "token_counts": (q_token_counts, _SQL_TOKEN_COUNTS),
-    "trajectories": (q_trajectories, _SQL_TRAJECTORIES),
-    "user_similarity_topk": (q_user_similarity, _SQL_USER_SIMILARITY),
-    "stable_split": (q_stable_split, _SQL_STABLE_SPLIT),
-    "asof_latest_purchase": (q_asof_purchase, _SQL_ASOF_PURCHASE),
-    "incident_interval_join": (q_incident_interval, _SQL_INCIDENT_INTERVAL),
-    "knn_ivf_topk": (q_knn_ivf, _SQL_KNN_IVF),
-    "rollup_cascade": (q_rollup_cascade, _SQL_ROLLUP_CASCADE),
-    "stratified_sample": (q_stratified_sample, _SQL_STRATIFIED_SAMPLE),
-    "session_windows": (q_session_windows, _SQL_SESSION_WINDOWS),
-    "dedup_clusters": (q_dedup_clusters, _dedup_clusters_sql()),
-    "incremental_dedup": (q_incremental_dedup, _incremental_dedup_sql()),
-    "retention_matrix": (q_retention_matrix, _SQL_RETENTION),
-    "big_orders": (q_big_orders, _SQL_BIG_ORDERS),
-    "boilerplate_ngrams": (q_boilerplate_ngrams, _SQL_BOILERPLATE),
-    "corpus_mixture": (q_corpus_mixture, _SQL_CORPUS_MIXTURE),
-    "mixture_sample": (q_mixture_sample, _SQL_MIXTURE_SAMPLE),
-    "repetition_ratio": (q_repetition_ratio, _SQL_REPETITION),
-    "decontaminate": (q_decontaminate, _SQL_DECONTAMINATE),
-    "pack_sequences": (q_pack_sequences, _SQL_PACK_SEQUENCES),
-    "late_shipment_priority": (q_late_shipment_priority, _SQL_LATE_SHIPMENT),
-    "customer_order_distribution": (
-        q_customer_order_distribution,
-        _SQL_CUSTOMER_ORDER_DIST,
-    ),
-    "promo_revenue_share": (q_promo_revenue_share, _SQL_PROMO_SHARE),
-    "brand_supplier_counts": (q_brand_supplier_counts, _SQL_BRAND_SUPPLIER),
-    "disjunctive_revenue": (q_disjunctive_revenue, _SQL_DISJUNCTIVE_REVENUE),
-    "idle_rich_customers": (q_idle_rich_customers, _SQL_IDLE_RICH),
-    "geofence_count": (q_geofence_count, _SQL_GEOFENCE),
-    "pii_redaction": (q_pii_redaction, _SQL_PII),
-    "volume_shipping": (q_volume_shipping, _SQL_VOLUME_SHIPPING),
-    "market_share": (q_market_share, _SQL_MARKET_SHARE),
-    "product_profit": (q_product_profit, _SQL_PRODUCT_PROFIT),
-    "returned_items": (q_returned_items, _SQL_RETURNED_ITEMS),
-    "top_supplier": (q_top_supplier, _SQL_TOP_SUPPLIER),
-    "small_qty_revenue": (q_small_qty_revenue, _SQL_SMALL_QTY),
-    "waiting_suppliers": (q_waiting_suppliers, _SQL_WAITING_SUPPLIERS),
-    "cohort_kpi": (q_cohort_kpi, _SQL_COHORT_KPI),
-    "breach_histogram": (q_breach_histogram, _SQL_BREACH_HISTOGRAM),
-    "ngram_jaccard_pairs": (q_ngram_jaccard, _SQL_NGRAM_JACCARD),
-    "simhash": (q_simhash, _simhash_sql()),
-    "multimodal_meta": (q_multimodal_meta, _SQL_MULTIMODAL_META),
-    # --- r5-green canaries held in-window (7) ---
-    "stream_alerts": (q_stream_alerts, _SQL_STREAM_ALERTS),
-    "fft_range_sum": (q_fft_range_sum, _SQL_FFT_RANGE_SUM),
-    "user_overlap_sketch": (q_user_overlap_sketch, _SQL_USER_OVERLAP_SKETCH),
-    # --- riskiest r6 additions, swapped into the window in place of four
-    # r5-green canaries (stateful streaming, BLAS float boundaries,
-    # percentile interpolation, epoch trapezoids) ---
-    "streaming_anomaly": (q_streaming_anomaly, _SQL_ROLLING_ZSCORE),
-    "semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
-    "rfm_segments": (q_rfm_segments, _SQL_RFM_SEGMENTS),
-    "time_weighted_avg": (q_time_weighted_avg, _SQL_TIME_WEIGHTED_AVG),
-    # ---- driver window ends here (50 entries above) ----
-    # --- r5-green, guarded by local exact-bit parity on current code ---
-    "approx_aggregates": (q_approx_aggregates, _SQL_APPROX_AGGREGATES),
-    "distinct_users_sketch": (q_distinct_users_sketch, _SQL_DISTINCT_USERS_SKETCH),
-    "value_quantiles_sketch": (
-        q_value_quantiles_sketch,
-        _SQL_VALUE_QUANTILES_SKETCH,
-    ),
-    "pricing_summary": (q_pricing_summary, _SQL_PRICING),
-    "range_scan": (q_range_scan, _SQL_RANGE_SCAN),
-    "anti_join_new_users": (q_anti_join, _SQL_ANTI_JOIN),
-    "mets_broadcast_lookup": (q_mets_lookup, _SQL_METS_LOOKUP),
-    "widget_domains": (q_widget_domains, _SQL_WIDGET_DOMAINS),
-    "like_filter": (q_like_filter, _SQL_LIKE_FILTER),
-    "set_ops": (q_set_ops, _SQL_SET_OPS),
-    "topk_orders": (q_topk_orders, _SQL_TOPK),
-    "first_per_user": (q_first_per_user, _SQL_FIRST_PER_USER),
-    "cohort_compare": (q_cohort_compare, _SQL_COHORT_COMPARE),
-    "activity_span": (q_activity_span, _SQL_ACTIVITY_SPAN),
-    "safe_band": (q_safe_band, _SQL_SAFE_BAND),
-    "time_of_day_overnight": (q_time_of_day, _SQL_TIME_OF_DAY),
-    "dedup_composite_key": (q_dedup_composite, _SQL_DEDUP_COMPOSITE),
-    "json_extract": (q_json_extract, _SQL_JSON_EXTRACT),
-    "melt_unpivot": (q_melt, _SQL_MELT),
-    "doc_fingerprint": (q_fingerprint, _SQL_FINGERPRINT),
-    "exact_dedup": (q_exact_dedup, _SQL_EXACT_DEDUP),
-    "text_stats": (q_text_stats, _SQL_TEXT_STATS),
-    "language_id": (q_language_id, _langid_sql()),
-    "quality_score": (q_quality_score, _quality_sql()),
-    "minhash_signatures": (q_minhash_signatures, _minhash_sql(8)),
-    "percentiles": (q_percentiles, _SQL_PERCENTILES),
-    "distinct_counts": (q_distinct_counts, _SQL_DISTINCT_COUNTS),
-    "rollup_totals": (q_rollup, _SQL_ROLLUP),
-    "pivot_event_types": (q_pivot, _SQL_PIVOT),
-    "sessionize": (q_sessionize, _SQL_SESSIONIZE),
-    "align_by_position": (q_align_by_position, _SQL_ALIGN),
-    "offset_batch": (q_offset_batch, _SQL_OFFSET_BATCH),
-    "string_normalize": (q_string_normalize, _SQL_STRING_NORMALIZE),
-    "fuzzy_column_mapping": (q_fuzzy_column_mapping, _SQL_FUZZY_MAPPING),
-    "value_tiers": (q_value_tiers, _SQL_VALUE_TIERS),
-    "trailing_window_kpis": (q_trailing_window_kpis, _SQL_TRAILING_WINDOW),
-    "shipping_priority": (q_shipping_priority, _SQL_SHIPPING_PRIORITY),
-    "local_supplier_volume": (q_local_supplier_volume, _SQL_LOCAL_SUPPLIER_VOLUME),
-    "gap_mask": (q_gap_mask, _SQL_GAP_MASK),
-    "resample_1min": (q_resample_1min, _SQL_RESAMPLE),
-    "sliding_window": (q_sliding_window, _SQL_SLIDING_WINDOW),
-    "knn_cosine_topk": (q_knn_cosine, _SQL_KNN),
-    "embedding_neardup_pairs": (q_embedding_neardup, _embedding_neardup_sql()),
-    # --- r5-green canaries rotated out mid-r6 to make window room for the
-    # four riskiest new entries (local parity still exact-bit checks them) ---
-    "calibration": (q_calibration, _SQL_CALIBRATION),
-    "minhash_lsh_pairs": (q_minhash_lsh_pairs, _minhash_lsh_sql()),
-    "frame_sample": (q_frame_sample, _SQL_FRAME_SAMPLE),
-    "stream_window_kpis": (q_stream_window_kpis, _SQL_STREAM_WINDOW),
-    # --- new in r6 (ranked retrieval + curation + embedding stats) —
-    # behind the window this round, parity-swept now, rotate into r7 ---
-    "bm25_topk": (q_bm25_topk, _bm25_sql()),
-    "tfidf_top_terms": (q_tfidf_top_terms, _SQL_TFIDF_TOP_TERMS),
-    "dedup_keep_best": (q_dedup_keep_best, _dedup_keep_best_sql()),
-    "embedding_centroids": (q_embedding_centroids, _SQL_EMBEDDING_CENTROIDS),
-    "quality_filter_per_lang": (q_quality_filter_per_lang, _quality_filter_sql()),
-    "corpus_drift": (q_corpus_drift, _SQL_CORPUS_DRIFT),
-    "gap_fill": (q_gap_fill, _SQL_GAP_FILL),
-    # --- new in r6 wave 2 (funnel / transitions / RFM / Q6 / SemDeDup) —
-    # behind the window this round, parity-swept now, rotate into r7 ---
-    "forecast_revenue": (q_forecast_revenue, _SQL_FORECAST_REVENUE),
-    "funnel_conversion": (q_funnel_conversion, _SQL_FUNNEL_CONVERSION),
-    "event_transitions": (q_event_transitions, _SQL_EVENT_TRANSITIONS),
-    "rolling_zscore": (q_rolling_zscore, _SQL_ROLLING_ZSCORE),
-    "unigram_nll": (q_unigram_nll, _SQL_UNIGRAM_NLL),
-    "source_overlap": (q_source_overlap, _SQL_SOURCE_OVERLAP),
-    "shipping_latency": (q_shipping_latency, _SQL_SHIPPING_LATENCY),
-    "daily_value_bands": (q_daily_value_bands, _SQL_DAILY_VALUE_BANDS),
-    "knn_lsh_topk": (q_knn_lsh, _knn_lsh_sql()),
-    "fk_integrity": (q_fk_integrity, _SQL_FK_INTEGRITY),
-    "table_profile": (q_table_profile, _SQL_TABLE_PROFILE),
-    "cube_totals": (q_cube_totals, _SQL_CUBE_TOTALS),
-    # native streaming sessionization, gated by the batch formulation's
-    # oracle (complete-mode drain == batch exactly; equality law in
-    # tests/test_streaming.py)
-    "streaming_sessions": (q_streaming_sessions, _SQL_SESSION_WINDOWS),
-    "heavy_hitters_sketch": (q_heavy_hitters_sketch, _SQL_HEAVY_HITTERS),
-    # --- new in r6 wave 3 (coverage islands / CUSUM / chunking / Bloom
-    # decontamination / int8 ANN) — behind the window this round,
-    # parity-swept now, rotate into r7 ---
-    "interval_coverage": (q_interval_coverage, _SQL_INTERVAL_COVERAGE),
-    "cusum_changepoint": (q_cusum_changepoint, _SQL_CUSUM),
-    "doc_chunks": (q_doc_chunks, _SQL_DOC_CHUNKS),
-    "bloom_decontaminate": (q_bloom_decontaminate, _SQL_BLOOM_DECONTAMINATE),
-    "quantized_knn_recall": (q_quantized_knn_recall, _SQL_QUANT_RECALL),
-    "spearman_trend": (q_spearman_trend, _SQL_SPEARMAN),
-    "dow_hour_heatmap": (q_dow_hour_heatmap, _SQL_DOW_HOUR),
-    # real streaming job (stream-stream watermarked self-join), gated by
-    # the batch range-join oracle; equality law in tests/test_streaming.py
-    "stream_stream_join": (q_stream_stream_join, _SQL_STREAM_STREAM_JOIN),
-    "containment_pairs": (q_containment_pairs, _SQL_CONTAINMENT),
-    "zorder_layout": (q_zorder_layout, _SQL_ZORDER),
-    "max_concurrency": (q_max_concurrency, _SQL_MAX_CONCURRENCY),
-    "mad_outliers": (q_mad_outliers, _SQL_MAD_OUTLIERS),
-    # real streaming job (windowed Count-Min), within-bound oracle
-    "stream_heavy_hitters": (q_stream_heavy_hitters, _SQL_STREAM_HEAVY_HITTERS),
-    "ratio_to_report": (q_ratio_to_report, _SQL_RATIO_TO_REPORT),
-    "benford_audit": (q_benford_audit, _benford_sql()),
-    "key_skew_report": (q_key_skew_report, _key_skew_sql()),
-    "seasonal_anomalies": (q_seasonal_anomalies, _SQL_SEASONAL_ANOMALIES),
-    "chi2_independence": (q_chi2_independence, _SQL_CHI2),
-    # --- new in r7 wave 4 (linkage / weighted sampling / debounce /
-    # entropy / fixed-point PageRank / spatial grid / EWMA / conversion
-    # lag) — behind the window this round, parity-swept now, front of the
-    # r8 window per the plan above ---
-    "token_entropy": (q_token_entropy, _SQL_TOKEN_ENTROPY),
-    "weighted_sample": (q_weighted_sample, _SQL_WEIGHTED_SAMPLE),
-    "debounce_events": (q_debounce, _SQL_DEBOUNCE),
-    # real stateful streaming job (applyInPandasWithState debounce);
-    # oracle = the batch lag rule, equality law in tests/test_streaming.py
-    "streaming_debounce": (q_streaming_debounce, _SQL_DEBOUNCE),
-    "name_match_pairs": (q_name_match_pairs, _SQL_NAME_MATCH),
-    "ewma_smooth": (q_ewma_smooth, _ewma_sql(8)),
-    "event_type_pagerank": (q_event_type_pagerank, _pagerank_sql(3)),
-    "grid_density": (q_grid_density, _SQL_GRID_DENSITY),
-    "conversion_lag_daily": (q_conversion_lag, _SQL_CONVERSION_LAG),
-    # --- new in r7 wave 5 (snapshot diff / SCD2 / survivorship /
-    # percentile rank / PMI / fixed-point k-means) ---
-    "table_diff": (q_table_diff, _SQL_TABLE_DIFF),
-    "scd2_intervals": (q_scd2_intervals, _SQL_SCD2),
-    "golden_record": (q_golden_record, _SQL_GOLDEN_RECORD),
-    "value_percentile_rank": (q_value_percentile_rank, _SQL_PCT_RANK),
-    "pmi_pairs": (q_pmi_pairs, _SQL_PMI),
-    "kmeans_iteration": (q_kmeans_iteration, _SQL_KMEANS),
-    # --- new in r7 wave 6 (skew-safe agg / journey paths / 24h funnel /
-    # dense-rank group top-k) ---
-    "salted_hot_key_agg": (q_salted_hot_key_agg, _SQL_SALTED_AGG),
-    # real stateful streaming job (applyInPandasWithState EWMA); oracle =
-    # the batch dyadic-lag SQL, bit-exact equality law in
-    # tests/test_streaming.py
-    "streaming_ewma": (q_streaming_ewma, _ewma_sql(8)),
-    "event_paths": (q_event_paths, _SQL_EVENT_PATHS),
-    "windowed_funnel": (q_windowed_funnel, _SQL_WINDOWED_FUNNEL),
-    "brand_top_parts": (q_brand_top_parts, _SQL_BRAND_TOP_PARTS),
-    # --- new in r8 wave 7 (dense linalg / n-gram LM / hashed features /
-    # vocab fit / robust rolling stats / equal-frequency bins / label
-    # balance / native streaming dedup) — behind the window this round,
-    # parity-swept now, front of the r9 window per the plan above ---
-    # salted_join equivalence contract: oracle = the UNSALTED join
-    "salted_join_equiv": (q_salted_join_equiv, _SQL_SALTED_JOIN),
-    "embedding_gram": (q_embedding_gram, _SQL_EMBEDDING_GRAM),
-    "embedding_dim_stats": (q_embedding_dim_stats, _SQL_EMBEDDING_DIM_STATS),
-    "feature_hash_histogram": (q_feature_hash_histogram, _SQL_FEATURE_HASH),
-    "bigram_nll": (q_bigram_nll, _SQL_BIGRAM_NLL),
-    "vocab_oov_rate": (q_vocab_oov_rate, _SQL_VOCAB_OOV),
-    "rolling_median": (q_rolling_median, _SQL_ROLLING_MEDIAN),
-    "equi_depth_bins": (q_equi_depth_bins, _SQL_EQUI_DEPTH_BINS),
-    "class_balance": (q_class_balance, _SQL_CLASS_BALANCE),
-    # real streaming job (engine-native dropDuplicatesWithinWatermark);
-    # oracle = DISTINCT md5(text) — the emitted key SET is deterministic
-    "stream_window_dedup": (q_stream_window_dedup, _SQL_STREAM_WINDOW_DEDUP),
-    # --- new in r8 wave 8 (ACF / CV folds / top-p selection / data card)
-    "acf_lags": (q_acf_lags, _SQL_ACF_LAGS),
-    "kfold_report": (q_kfold_report, _SQL_KFOLD),
-    "quality_top_p": (q_quality_top_p, _quality_top_p_sql()),
-    "dataset_card": (q_dataset_card, _SQL_DATASET_CARD),
-    # --- new in r8 wave 9 (basket affinity / shrinkage / IVM fold) ---
-    "basket_affinity": (q_basket_affinity, _SQL_BASKET_AFFINITY),
-    "shrunk_group_means": (q_shrunk_group_means, _SQL_SHRUNK_MEANS),
-    # IVM contract: oracle = the ONE-SHOT aggregate over all increments
-    "incremental_agg": (q_incremental_agg, _SQL_INCREMENTAL_AGG),
-    # --- new in r8 wave 10 (model-evaluation family) ---
-    "langid_confusion": (q_langid_confusion, _langid_confusion_sql()),
-    "classification_metrics": (
-        q_classification_metrics,
-        _classification_metrics_sql(),
-    ),
-    "ewma_backtest": (q_ewma_backtest, _ewma_backtest_sql()),
-    "k_anonymity_audit": (q_k_anonymity_audit, _SQL_K_ANONYMITY),
-    # --- new in r8 wave 11 (point-in-time attribution / OLS trend) ---
-    # independent-formulation oracle: window cumsum vs literal range join
-    "scd2_lookup": (q_scd2_lookup, _SQL_SCD2_LOOKUP),
-    "ols_trend_slope": (q_ols_trend_slope, _SQL_OLS_SLOPE),
-    # --- new in r9 wave 12 (SCD2 merge-apply; oracle = full rebuild) ---
-    "scd2_apply": (q_scd2_apply, _SQL_SCD2),
-    # two-iteration fit; oracle unrolls both Lloyd steps
-    "kmeans_fit": (q_kmeans_fit, _SQL_KMEANS_FIT),
-    # URL/domain curation pair: host+eTLD+1 extraction (independent
-    # regexp/list-index oracle) and the salted per-domain cap (oracle =
-    # the unsalted one-window form, gating the salted==unsalted law)
-    "domain_extract": (q_domain_extract, _SQL_DOMAIN_EXTRACT),
-    "domain_cap_sample": (q_domain_cap_sample, _SQL_DOMAIN_CAP),
-    # --- new in r9 wave 13 (tokenizer training; oracle = 4-step unroll
-    # with an independent windowed closed form for greedy merging) ---
-    "bpe_merges": (q_bpe_merges, _bpe_sql(4)),
-    "bpe_encode": (q_bpe_encode, _bpe_encode_sql(4, 50)),
-    # --- new in r10 wave 14 (tokenizer inference; fixed-table segment
-    # with order-sensitive per-document projections) ---
-    "bpe_segment": (q_bpe_segment, _bpe_segment_sql(_SEGMENT_MERGES)),
-    # fitted-quantizer IVF: the kmeans_fit -> centroid_arrays -> ivf_topk
-    # composition, oracled end-to-end by chaining the kmeans CTEs into
-    # the IVF probe SQL
-    "knn_ivf_fitted": (q_knn_ivf_fitted, _SQL_KNN_IVF_FITTED),
-    # broadcast-PSL eTLD+1: externalized rule table, longest-match join
-    "registrable_domain_psl": (
-        q_registrable_domain_psl,
-        _psl_sql(_psl_query_suffixes()),
-    ),
-    # audio arm: WAV encode->decode round-trips gated against a
-    # formula-derived oracle that never parses bytes
-    "wav_decode_stats": (q_wav_decode_stats, _SQL_WAV_STATS),
-    "audio_frame_energy": (q_audio_frame_energy, _SQL_AUDIO_ENERGY),
-    # video arm: Y4M encode->decode round-trip gated against a
-    # formula-derived oracle that never parses bytes (the video twin of
-    # wav_decode_stats; completes the image/audio/video triple)
-    "video_frame_stats": (q_video_frame_stats, _SQL_VIDEO_STATS),
-    # HTML->text extraction: oracle computes the EXPECTED extraction
-    # from the raw text column, never parsing HTML
-    "html_extract": (q_html_extract, _SQL_HTML_EXTRACT),
-    # --- round 11 additions (2 new entries, inside the 8-slot r11
-    # allowance per the r10 verdict's orders #5/#6/#8) ---
-    # persisted-model IVF: fit -> save_model -> load_model -> probe;
-    # results identical to knn_ivf_fitted, so its oracle is REUSED —
-    # the gate hashes the whole persisted chain
-    "knn_ivf_persisted": (q_knn_ivf_persisted, _SQL_KNN_IVF_FITTED),
-    # O7 wrap-around replay: modular-arithmetic oracle over ranked
-    # distinct days; pins truncate-at-end AND wrap-to-zero
-    "replay_wraparound": (q_replay_wraparound, _SQL_REPLAY_WRAP),
-    # URL canonicalization + URL-level dedup (added late r11, appended
-    # BEHIND the r11 window — enters r12 never-gated; the r12 plan
-    # comment's arithmetic accounts for it). Oracle re-derives the
-    # normalization independently (regexp parts + list ops, no parser).
-    "url_canonicalize": (q_url_canonicalize, _SQL_URL_CANON),
-    # IDNA/punycode hosts over RFC/IANA-pinned vectors (late r11,
-    # behind the window — enters r12 never-gated): the oracle maps each
-    # fixed host to its PUBLISHED punycode form, never computing it.
-    "idna_hosts": (q_idna_hosts, _idna_sql(_IDNA_VECTORS)),
-    # --- round 12 additions (2 new entries, inside the 4-slot r12
-    # allowance per the r11 verdict's orders #6/#8; appended BEHIND the
-    # r12 window — enter r13 never-gated) ---
-    # persisted ranking model: snapshot-built unigram counts published
-    # through the model store, ingest scored by a separate load with
-    # expect_params validation; oracle rebuilds the whole chain
-    "ranking_model_scores": (q_ranking_model_scores, _SQL_RANKING_MODEL_SCORES),
-    # streaming URL-frontier dedup: canonicalize_url as the frontier
-    # key under dropDuplicatesWithinWatermark; oracle = batch DISTINCT
-    # of the independently re-derived canonical key
-    "stream_url_frontier": (q_stream_url_frontier, _SQL_STREAM_URL_FRONTIER),
-    # WARC crawl-archive extraction (pure-stdlib codec, encode->parse
-    # round trip, plain + gzip-member layouts); formula-derived oracle
-    # never parses bytes — the media-codec gate pattern
-    "warc_extract": (q_warc_extract, _SQL_WARC_EXTRACT),
-    # --- round 13 addition (1 new entry, appended BEHIND the r13
-    # window per the 1-slot throttle — the slot itself went to the
-    # r10-stale rotation row; enters r14 never-gated) ---
-    # RFC 9309 robots politeness over hand-derived fixed vectors: the
-    # only substantial r12 functionality that had no driver row
-    # (r12 verdict, Missing #2 / order #4)
-    "robots_filter": (q_robots_filter, _robots_gate_sql()),
-}
-
-
-# Round-12 driver window: the first 50 names the gate will hash this
-# round, executing the R12 WINDOW PLAN written at r11 exactly (and
-# endorsed by the r11 verdict, order #1): the 44 remaining r8-stale
-# rows FIRST in CORRECTNESS_r08 order, then the 2 never-gated late-r11
-# additions (url_canonicalize, idna_hosts — their first driver hash),
-# then the 4 stalest r9 rows in CORRECTNESS_r09 order. Verified against
-# CORRECTNESS_r01..r11 at r12 start: latest-green-round histogram was
-# {r11: 50, r10: 50, r9: 50, r8: 44} (194/196 with a driver row, 0
-# terminal FAILs); the r8-stale and r9-stale lists below were recomputed
-# from the JSON files, not copied from the plan comment, and match it
-# name-for-name (machine-checked by
-# test_r12_gate_window_composition_recomputed_from_driver_rows in
-# tests/test_plans.py). After r12 gates green: ZERO r8-stale and ZERO
-# never-gated entries remain — the rotation debt forecast at r8 hits
-# zero; histogram {r12: 50, r11: 50, r10: 50, r9: 46}.
-#
-# R13 WINDOW PLAN (EXECUTED below as _R13_WINDOW — the r12 verdict's
-# order #1; the original r13 plan text written at r12 claimed its list
-# was "in CORRECTNESS_r09 order" but had hand-shuffled it — the r12
-# verdict caught that (What's wrong #2), so the list here was RECOMPUTED
-# from the JSON driver records, the same derivation
-# test_r13_gate_window_composition_recomputed_from_driver_rows makes):
-# the 46 remaining r9-stale rows FIRST, in true CORRECTNESS_r09 key
-# order —
-#    salted_hot_key_agg, event_paths, brand_top_parts, salted_join_equiv,
-#    embedding_gram, embedding_dim_stats, feature_hash_histogram, bigram_nll,
-#    vocab_oov_rate, rolling_median, equi_depth_bins, class_balance, acf_lags,
-#    kfold_report, quality_top_p, dataset_card, basket_affinity,
-#    shrunk_group_means, incremental_agg, langid_confusion,
-#    classification_metrics, ewma_backtest, k_anonymity_audit, scd2_lookup,
-#    ols_trend_slope, streaming_neardup, stream_distinct_users,
-#    byte_histogram, token_counts, trajectories, user_similarity_topk,
-#    stable_split, asof_latest_purchase, incident_interval_join, knn_ivf_topk,
-#    rollup_cascade, stratified_sample, session_windows, dedup_clusters,
-#    incremental_dedup, retention_matrix, big_orders, boilerplate_ngrams,
-#    corpus_mixture, mixture_sample, repetition_ratio
-# — then the 3 never-gated r12 additions (ranking_model_scores,
-# stream_url_frontier, warc_extract — their first driver hashes), then
-# the stalest r10 row (decontaminate, first r10-stale key in
-# CORRECTNESS_r10 order). Rotation-debt arithmetic (the r8 throttle
-# order): stale backlog entering r13 = 46 r9-stale + 3 never-gated =
-# 49 ≤ 50, leaving exactly 1 free slot — spent on the r10-stale
-# rotation row, so any NEW r13 entry goes BEHIND the window and enters
-# r14 never-gated.
-_R12_WINDOW = [
-    # --- 44 r8-stale rows, CORRECTNESS_r08 order ---
-    "table_diff",
-    "scd2_intervals",
-    "golden_record",
-    "token_entropy",
-    "weighted_sample",
-    "name_match_pairs",
-    "conversion_lag_daily",
-    "windowed_funnel",
-    "first_per_user",
-    "cohort_compare",
-    "activity_span",
-    "safe_band",
-    "time_of_day_overnight",
-    "dedup_composite_key",
-    "json_extract",
-    "melt_unpivot",
-    "doc_fingerprint",
-    "exact_dedup",
-    "text_stats",
-    "language_id",
-    "quality_score",
-    "minhash_signatures",
-    "percentiles",
-    "distinct_counts",
-    "rollup_totals",
-    "pivot_event_types",
-    "sessionize",
-    "align_by_position",
-    "offset_batch",
-    "string_normalize",
-    "fuzzy_column_mapping",
-    "value_tiers",
-    "trailing_window_kpis",
-    "shipping_priority",
-    "local_supplier_volume",
-    "gap_mask",
-    "resample_1min",
-    "sliding_window",
-    "knn_cosine_topk",
-    "embedding_neardup_pairs",
-    "calibration",
-    "minhash_lsh_pairs",
-    "frame_sample",
-    "stream_window_kpis",
-    # --- the 2 never-gated late-r11 additions (first driver hash) ---
-    "url_canonicalize",
-    "idna_hosts",
-    # --- 4 stalest r9 rows, CORRECTNESS_r09 order ---
-    "streaming_ewma",
-    "stream_window_dedup",
-    "value_percentile_rank",
-    "grid_density",
-]
-
-assert len(_R12_WINDOW) == 50, len(_R12_WINDOW)
-assert len(set(_R12_WINDOW)) == 50
-assert set(_R12_WINDOW) <= set(QUERIES), set(_R12_WINDOW) - set(QUERIES)
-
-# Round-13 driver window: the first 50 names the gate hashes this
-# round — the R13 WINDOW PLAN above, recomputed from
-# CORRECTNESS_r01..r12 at r13 start (latest-green histogram was
-# {r12: 50, r11: 50, r10: 50, r9: 46}, 196/199 with a driver row, 0
-# terminal FAILs) and machine-checked by
-# test_r13_gate_window_composition_recomputed_from_driver_rows.
-# After r13 gates green: ZERO r9-stale and ZERO never-gated entries
-# remain; histogram {r13: 50, r12: 50, r11: 50, r10: 49}.
-#
-# R14 WINDOW PLAN (execute at r14 start): the 49 remaining r10-stale
-# rows FIRST, in CORRECTNESS_r10 key order (recompute from the JSON at
-# r14 start as this round did — do not trust any hand-written list),
-# then any never-gated r13 additions. Rotation-debt arithmetic: stale
-# backlog entering r14 = 49 r10-stale rows + however many entries r13
-# adds behind the window (allowance: 50 − 49 = 1; the robots_filter
-# gate entry is the one candidate, per the r12 verdict's order #4), so
-# a 1-entry r13 means a FULL 50-slot r14 window with zero free slots —
-# r14 may add nothing inside its window and at most ~1 behind it.
-# The EXACT prospective r14 window (49 r10-stale in r10 key order,
-# pack_sequences first, + robots_filter last) was pre-measured at r13
-# end: 67.8 s total cold at sf0.01 on 4 cpus, worst pack_sequences
-# 5.77 s, next fft_range_sum 3.58 s — every entry far inside the
-# ~30 s per-entry envelope (the total sits above the 41-58.5 s
-# historical range because this window front-loads the heavy r10
-# rows; per-entry latency is the binding constraint).
-#
-# R15 GATE-ENTRY CANDIDATE (noted late-r13): duplicated_spans
-# (operators/dedup.py — positional ExactSubstr span dedup, library-level
-# since r13 with a 125-trial sequential-model stress section). Its
-# DuckDB oracle is fully expressible: string_split(text) + UNNEST
-# generate_series builds the k-token windows, GROUP BY window HAVING
-# COUNT(DISTINCT doc_id) > 1 finds cross-doc duplicates (compare window
-# STRINGS, not hashes — the oracle must be hash-free), and the island
-# merge is the standard gaps-and-islands pair (LAG + SUM(CASE) window)
-# the bpe oracle already uses. Do NOT add it at r14 (zero free slots);
-# at r15 weigh it against the stalest rotation row.
-#
-# SECOND R15 CANDIDATE (also late-r13): gopher_quality_flags
-# (operators/text.py — the 9 published Gopher rules + per-rule
-# fail_reasons, zero-shuffle). Oracle shape: string_split + list_sort +
-# offset-compare lists replicate every rule in DuckDB; sort
-# fail_reasons before hashing (array order is rule-definition order on
-# the Spark side — emit list_sort on both, or compare the stats columns
-# + passes only). Same throttle rule applies: library-level until a
-# window slot opens.
-#
-# THIRD R15 CANDIDATE (late-r13): fit_hashed_logodds +
-# hashed_linear_score (operators/text.py — NB log-odds over the
-# PORTABLE feature-hashing buckets, so DuckDB reproduces the exact
-# bucket assignment). Oracle shape: the ranking_model_scores pattern —
-# rebuild the fit in CTEs (token explode -> md5-hash bucket -> per-class
-# counts -> log-odds with the same Laplace constants) and chain the
-# scoring join; emit z via the _r portable rounding. Weigh all three
-# candidates against the stalest rotation rows at r15 — at most the
-# free-slot count enters; the others stay library-level.
-#
-# STATUS (late-r13; dict renamed R16_CANDIDATES at r15, then
-# R17_CANDIDATES at r16, after each round's promotions): all three candidates are
-# PRE-BUILT with oracles at the end of this file (gopher_flags,
-# duplicated_spans, hashed_clf_scores), deliberately NOT registered;
-# tests/test_gate_candidates.py (né test_r15_candidates.py) runs the
-# registered-sweep canonical
-# compare against them and is green at sf0.001/0.01/0.1 AND under 7
-# shuffle partitions. Promotion at r15 = move the entry into QUERIES
-# (the anti-leak test will start failing the moment one is moved —
-# update it in the same commit). Pre-measured cold at sf0.01 on 4 cpus
-# (the window pre-measure discipline, run late-r13): gopher_flags
-# 1.13 s / 500 rows, duplicated_spans 1.89 s / 47 rows (real cross-doc
-# spans exist in the testdata at k=10), hashed_clf_scores 4.46 s / 500
-# rows (fit collects dominate) — every candidate far inside the ~30 s
-# per-entry envelope.
-_R13_WINDOW = [
-    # --- 46 r9-stale rows, true CORRECTNESS_r09 key order ---
-    "salted_hot_key_agg",
-    "event_paths",
-    "brand_top_parts",
-    "salted_join_equiv",
-    "embedding_gram",
-    "embedding_dim_stats",
-    "feature_hash_histogram",
-    "bigram_nll",
-    "vocab_oov_rate",
-    "rolling_median",
-    "equi_depth_bins",
-    "class_balance",
-    "acf_lags",
-    "kfold_report",
-    "quality_top_p",
-    "dataset_card",
-    "basket_affinity",
-    "shrunk_group_means",
-    "incremental_agg",
-    "langid_confusion",
-    "classification_metrics",
-    "ewma_backtest",
-    "k_anonymity_audit",
-    "scd2_lookup",
-    "ols_trend_slope",
-    "streaming_neardup",
-    "stream_distinct_users",
-    "byte_histogram",
-    "token_counts",
-    "trajectories",
-    "user_similarity_topk",
-    "stable_split",
-    "asof_latest_purchase",
-    "incident_interval_join",
-    "knn_ivf_topk",
-    "rollup_cascade",
-    "stratified_sample",
-    "session_windows",
-    "dedup_clusters",
-    "incremental_dedup",
-    "retention_matrix",
-    "big_orders",
-    "boilerplate_ngrams",
-    "corpus_mixture",
-    "mixture_sample",
-    "repetition_ratio",
-    # --- the 3 never-gated r12 additions (first driver hash) ---
-    "ranking_model_scores",
-    "stream_url_frontier",
-    "warc_extract",
-    # --- stalest r10 row, first r10-stale key in CORRECTNESS_r10 ---
-    "decontaminate",
-]
-
-assert len(_R13_WINDOW) == 50, len(_R13_WINDOW)
-assert len(set(_R13_WINDOW)) == 50
-assert set(_R13_WINDOW) <= set(QUERIES), set(_R13_WINDOW) - set(QUERIES)
-
-# Round-14 driver window: the 49 r10-stale rows FIRST, recomputed at
-# r14 start from CORRECTNESS_r01..r13 in true CORRECTNESS_r10 key order
-# (latest-green histogram was {r13: 50, r12: 50, r11: 50, r10: 49},
-# 199/200 with a driver row, 0 terminal FAILs), then robots_filter —
-# the ONLY never-driver-gated registry entry, taking its first hash and
-# closing the gate-discipline gap. Machine-checked by
-# test_r14_gate_window_composition_recomputed_from_driver_rows.
-# After r14 gates green: zero r10-stale and ZERO never-gated entries
-# remain; histogram {r14: 50, r13: 50, r12: 50, r11: 50}.
-#
-# R15 WINDOW PLAN (execute at r15 start): the stale backlog entering
-# r15 is exactly the 50 r11-stale rows (registry 200, window 50, no
-# never-gated entries remain), so r15 has zero free slots BY DEFAULT —
-# every new gate entry promoted at r15 must DISPLACE a stale row,
-# pushing that row to r16 (5 rounds stale, a first). Promotion
-# arithmetic for the three pre-built candidates (gopher_flags,
-# duplicated_spans, hashed_clf_scores) plus the r14-built
-# phash_hamming_pairs candidate: promote AT MOST 2, displacing the
-# LAST 2 r11-stale rows in CORRECTNESS_r11 key order (the least-stale
-# tail — they gated most recently within r11's own run order, so they
-# carry the freshest evidence); the displaced rows lead the r16 window.
-# Recommended picks: duplicated_spans (the only major dedup family
-# with no driver row; 125-trial stress + 3-sf parity standing) and
-# gopher_flags (the published-rule curation gate; cheapest candidate at
-# 1.13 s). hashed_clf_scores (4.46 s) and phash_hamming_pairs (built
-# r14: synthesized-hash banding gate with the hash-free all-pairs
-# popcount oracle; parity green at 3 sfs + 7 partitions; pre-measured
-# 7.9 s cold / 1.6 s warm, 67 rows at sf0.01 on 4 cpus) stay
-# library-level until r16. Recompute the r11-stale list from the JSONs
-# at r15 start — do not trust a hand-written list.
-#
-# R16 GATE-ENTRY CANDIDATE (built late-r14, library-level): DSIR —
-# text.fit_dsir_logratios + dsir_resample (Xie et al. 2023 importance
-# resampling over hashed unigram models; Gumbel top-k selection keyed
-# by the portable MD5 uniform, so selection is engine-reproducible).
-# Oracle shape: the _SQL_HASHED_CLF CTE-chain pattern — two bucket-count
-# CTEs (target/raw), log-ratio weights, per-doc dot, then the Gumbel key
-# via the md5-uniform and ORDER BY key DESC LIMIT k with id tie-break.
-# Pinned by 3 unit tests (fit law 1e-12 vs the literal model, Gumbel
-# top-k exactness + partition invariance, TakeOrderedAndProject plan
-# pin) and a hypothesis sweep vs the sequential model — whose FIRST RUN
-# caught the feature_hashing phantom-''-token bug (trailing
-# newline/tab docs; fixed with the empty-token filter, both oracles
-# updated in the same commit).
-_R14_WINDOW = [
-    # --- 49 r10-stale rows, true CORRECTNESS_r10 key order ---
-    "pack_sequences",
-    "late_shipment_priority",
-    "customer_order_distribution",
-    "promo_revenue_share",
-    "brand_supplier_counts",
-    "disjunctive_revenue",
-    "idle_rich_customers",
-    "geofence_count",
-    "pii_redaction",
-    "volume_shipping",
-    "market_share",
-    "product_profit",
-    "returned_items",
-    "top_supplier",
-    "small_qty_revenue",
-    "waiting_suppliers",
-    "cohort_kpi",
-    "breach_histogram",
-    "ngram_jaccard_pairs",
-    "simhash",
-    "multimodal_meta",
-    "stream_alerts",
-    "fft_range_sum",
-    "user_overlap_sketch",
-    "streaming_anomaly",
-    "semantic_dedup",
-    "rfm_segments",
-    "time_weighted_avg",
-    "scd2_apply",
-    "kmeans_fit",
-    "domain_extract",
-    "domain_cap_sample",
-    "bpe_merges",
-    "bpe_encode",
-    "streaming_sessions",
-    "stream_stream_join",
-    "stream_heavy_hitters",
-    "bm25_topk",
-    "tfidf_top_terms",
-    "dedup_keep_best",
-    "embedding_centroids",
-    "quality_filter_per_lang",
-    "corpus_drift",
-    "gap_fill",
-    "forecast_revenue",
-    "funnel_conversion",
-    "event_transitions",
-    "rolling_zscore",
-    "unigram_nll",
-    # --- the one never-gated entry (added late-r13): first driver hash
-    "robots_filter",
-]
-
-assert len(_R14_WINDOW) == 50, len(_R14_WINDOW)
-assert len(set(_R14_WINDOW)) == 50
-assert set(_R14_WINDOW) <= set(QUERIES), set(_R14_WINDOW) - set(QUERIES)
-QUERIES = {name: QUERIES[name] for name in _R14_WINDOW} | {
-    name: spec for name, spec in QUERIES.items() if name not in set(_R14_WINDOW)
-}
-
-
-# apply the portable-rounding rewrite to every oracle
-QUERIES = {
-    name: (fn, _portable_round_sql(sql) if sql is not None else None)
-    for name, (fn, sql) in QUERIES.items()
-}
-
-
-def queries() -> dict[str, QueryFn]:
-    return {name: fn for name, (fn, _) in QUERIES.items()}
-
-
-def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in QUERIES.items() if sql is not None}
-
-
 # ---------------------------------------------------------------------------
-# GATE CANDIDATES — pre-built, promoted one window at a time per the
-# rotation throttle. Each candidate ships its Spark query + DuckDB
-# oracle the round it is BUILT, so a later promotion is a one-line
-# registry move with the parity evidence already standing
-# (tests/test_gate_candidates.py runs the same canonical compare the
-# registered parity sweep uses). r15 promoted gopher_flags +
-# duplicated_spans into QUERIES (registration block below); r16
-# promoted dsir_resample + audio_fingerprint_pairs; the rest
-# stay in R17_CANDIDATES until a window slot opens.
+# LATE ENTRIES AND GATE CANDIDATES — each ships its Spark query and
+# DuckDB oracle when it is built. gopher_flags, duplicated_spans,
+# dsir_resample and audio_fingerprint_pairs are registered (see QUERIES
+# below); the rest wait in GATE_CANDIDATES, where
+# tests/test_gate_candidates.py runs the same canonical compare as the
+# registered parity sweep, so promoting one is a one-line registry move.
 # ---------------------------------------------------------------------------
 
 
@@ -9942,7 +9204,7 @@ SELECT id_a, id_b, CAST(dist AS INT) AS distance FROM d WHERE dist <= 4
 
 
 # ---------------------------------------------------------------------------
-# R17 gate candidate: unigram-LM Viterbi segmentation (built r16)
+# Gate candidate: unigram-LM Viterbi segmentation
 # ---------------------------------------------------------------------------
 # PINNED scoring model for the gate: all 26 single chars (coverage — the
 # oracle never needs an UNK arm) at index-graded log-probs plus a
@@ -10088,12 +9350,7 @@ SELECT doc_id, n_tokens, tokens_str FROM out
 
 # candidate registry: same (fn, sql) shape as QUERIES, same portable
 # rounding rewrite — registering is moving an entry into QUERIES.
-# r15 executed the written plan: duplicated_spans + gopher_flags were
-# promoted; r16 executed ITS written plan the same way: dsir_resample +
-# audio_fingerprint_pairs were promoted (see the ROUND-16 block below)
-# and the dict renamed R17_CANDIDATES — the two remaining entries are
-# the whole r17 promotion queue per the throttle arithmetic.
-R17_CANDIDATES = {
+GATE_CANDIDATES = {
     "hashed_clf_scores": (
         q_hashed_clf_scores,
         _portable_round_sql(_SQL_HASHED_CLF),
@@ -10102,9 +9359,6 @@ R17_CANDIDATES = {
         q_phash_hamming_pairs,
         _portable_round_sql(_SQL_PHASH_HAMMING),
     ),
-    # built r16 (the named unigram-LM gate): r17 promotes the two
-    # longer-standing entries above per the written plan; this one
-    # leads the r18 promotion queue
     "unigram_segment": (
         q_unigram_segment,
         _portable_round_sql(_SQL_UNIGRAM_SEGMENT),
@@ -10113,282 +9367,302 @@ R17_CANDIDATES = {
 
 
 # ---------------------------------------------------------------------------
-# ROUND-15 REGISTRATION + DRIVER WINDOW
+# THE REGISTRY — name -> (Spark builder, DuckDB oracle SQL or None)
 # ---------------------------------------------------------------------------
-# Promote the two candidates named by the written r15 plan (above, at
-# the _R14_WINDOW comment): duplicated_spans (the only major dedup
-# family without a driver row; 125-trial stress + 3-sf parity standing)
-# and gopher_flags (the published-rule curation gate; cheapest candidate
-# at ~1.1 s). Registry grows 200 -> 202. Both arrive with their
-# pre-built oracles already portable-rounded, so they skip the registry
-# rewrite above (applying it twice would double-wrap the rounding).
-QUERIES["duplicated_spans"] = (
-    q_duplicated_spans_gate,
-    _portable_round_sql(_SQL_DUPLICATED_SPANS),
-)
-QUERIES["gopher_flags"] = (
-    q_gopher_flags,
-    _portable_round_sql(_SQL_GOPHER_FLAGS),
-)
-
-# Round-15 driver window, executed exactly as written in the r14 plan:
-# the stale backlog entering r15 is the 50 r11-stale rows (recomputed at
-# r15 start from CORRECTNESS_r01..r14 in true CORRECTNESS_r11 key order;
-# latest-green histogram was {r14: 50, r13: 50, r12: 50, r11: 50}, zero
-# never-gated entries). The two promotions DISPLACE the LAST 2 rows of
-# that order (knn_ivf_persisted, replay_wraparound — the least-stale
-# tail: they gated most recently within r11's own run order) and take
-# their slots at the end of the window; the displaced pair LEADS the
-# r16 window (they will be 5 rounds stale there, a first). Composition
-# machine-checked by
-# test_r15_gate_window_composition_recomputed_from_driver_rows.
-# After r15 gates green: freshness {r15: 50, r14: 50, r13: 50, r12: 48,
-# r11: 2 (the displaced pair)}; every registered entry except the
-# displaced pair carries a driver row no older than four rounds.
-#
-# R16 WINDOW PLAN (execute at r16 start): lead with the displaced pair
-# [knn_ivf_persisted, replay_wraparound], then promote at most 2 of the
-# four R16_CANDIDATES, displacing the LAST rows of the r12-stale list
-# in CORRECTNESS_r12 key order, one displacement per promotion.
-# Recompute the r12-stale list from the JSONs at r16 start — do not
-# trust a hand-written list. All four candidates carry standing parity
-# at 3 sfs + 7 shuffle partitions; gate latency pre-measured at r15
-# (sf0.01, 4 cpus, idle box): dsir_resample 12.8 s cold / 2.4-2.9 s
-# warm (a steal-contaminated window once read 35 s — re-measure solo
-# before trusting any elevated read), audio_fingerprint_pairs 3.7-7.5 s
-# cold, hashed_clf_scores 4.46 s cold (r13), phash_hamming_pairs 7.9 s
-# cold / 1.6 s warm (r14). Recommended picks: dsir_resample +
-# audio_fingerprint_pairs (both families' ONLY oracle-able driver
-# surfaces — DSIR closes verdict missing-item #2a, the audio arm #2b);
-# hashed_clf_scores and phash_hamming_pairs wait for r17. The EXACT
-# prospective window (displaced pair first, then the first 46 r12-stale
-# rows in CORRECTNESS_r12 key order, then the two recommended
-# promotions — pushing streaming_ewma, stream_window_dedup,
-# value_percentile_rank, grid_density to lead r17) was pre-measured at
-# r15 end: 60.3 s total cold at sf0.01 on 4 cpus, worst
-# knn_ivf_persisted 16.55 s (the fresh-session first-job JIT tier of a
-# ~3 s row — the source_overlap pattern) — every entry inside the
-# ~30 s per-entry envelope.
-_R15_WINDOW = [
-    # --- 48 of the 50 r11-stale rows, true CORRECTNESS_r11 key order ---
-    "source_overlap",
-    "shipping_latency",
-    "daily_value_bands",
-    "knn_lsh_topk",
-    "fk_integrity",
-    "table_profile",
-    "cube_totals",
-    "heavy_hitters_sketch",
-    "interval_coverage",
-    "cusum_changepoint",
-    "doc_chunks",
-    "bloom_decontaminate",
-    "quantized_knn_recall",
-    "spearman_trend",
-    "dow_hour_heatmap",
-    "containment_pairs",
-    "zorder_layout",
-    "max_concurrency",
-    "mad_outliers",
-    "ratio_to_report",
-    "benford_audit",
-    "key_skew_report",
-    "seasonal_anomalies",
-    "chi2_independence",
-    "approx_aggregates",
-    "distinct_users_sketch",
-    "value_quantiles_sketch",
-    "pricing_summary",
-    "range_scan",
-    "anti_join_new_users",
-    "mets_broadcast_lookup",
-    "widget_domains",
-    "like_filter",
-    "set_ops",
-    "topk_orders",
-    "bpe_segment",
-    "knn_ivf_fitted",
-    "registrable_domain_psl",
-    "wav_decode_stats",
-    "audio_frame_energy",
-    "video_frame_stats",
-    "html_extract",
-    "streaming_debounce",
-    "debounce_events",
-    "ewma_smooth",
-    "kmeans_iteration",
-    "event_type_pagerank",
-    "pmi_pairs",
-    # --- the 2 r15 promotions (first driver hash), displacing
-    # knn_ivf_persisted + replay_wraparound to lead the r16 window ---
-    "duplicated_spans",
-    "gopher_flags",
-]
-
-assert len(_R15_WINDOW) == 50, len(_R15_WINDOW)
-assert len(set(_R15_WINDOW)) == 50
-assert set(_R15_WINDOW) <= set(QUERIES), set(_R15_WINDOW) - set(QUERIES)
-QUERIES = {name: QUERIES[name] for name in _R15_WINDOW} | {
-    name: spec for name, spec in QUERIES.items() if name not in set(_R15_WINDOW)
+QUERIES: dict[str, tuple[QueryFn, str | None]] = {
+    # real stateful streaming job (applyInPandasWithState EWMA); oracle =
+    # the batch dyadic-lag SQL, bit-exact equality law in
+    # tests/test_streaming.py
+    "streaming_ewma": (q_streaming_ewma, _ewma_sql(8)),
+    # real streaming job (engine-native dropDuplicatesWithinWatermark);
+    # oracle = DISTINCT md5(text) — the emitted key SET is deterministic
+    "stream_window_dedup": (q_stream_window_dedup, _SQL_STREAM_WINDOW_DEDUP),
+    "value_percentile_rank": (q_value_percentile_rank, _SQL_PCT_RANK),
+    "grid_density": (q_grid_density, _SQL_GRID_DENSITY),
+    "bloom_decontaminate": (q_bloom_decontaminate, _SQL_BLOOM_DECONTAMINATE),
+    "event_type_pagerank": (q_event_type_pagerank, _pagerank_sql(3)),
+    "dedup_keep_best": (q_dedup_keep_best, _dedup_keep_best_sql()),
+    "chi2_independence": (q_chi2_independence, _SQL_CHI2),
+    "source_overlap": (q_source_overlap, _SQL_SOURCE_OVERLAP),
+    "pmi_pairs": (q_pmi_pairs, _SQL_PMI),
+    "unigram_nll": (q_unigram_nll, _SQL_UNIGRAM_NLL),
+    # real stateful streaming job (applyInPandasWithState debounce);
+    # oracle = the batch lag rule, equality law in tests/test_streaming.py
+    "streaming_debounce": (q_streaming_debounce, _SQL_DEBOUNCE),
+    "streaming_anomaly": (q_streaming_anomaly, _SQL_ROLLING_ZSCORE),
+    "salted_hot_key_agg": (q_salted_hot_key_agg, _SQL_SALTED_AGG),
+    "event_paths": (q_event_paths, _SQL_EVENT_PATHS),
+    "brand_top_parts": (q_brand_top_parts, _SQL_BRAND_TOP_PARTS),
+    # salted_join equivalence contract: oracle = the UNSALTED join
+    "salted_join_equiv": (q_salted_join_equiv, _SQL_SALTED_JOIN),
+    "embedding_gram": (q_embedding_gram, _SQL_EMBEDDING_GRAM),
+    "embedding_dim_stats": (q_embedding_dim_stats, _SQL_EMBEDDING_DIM_STATS),
+    "feature_hash_histogram": (q_feature_hash_histogram, _SQL_FEATURE_HASH),
+    "bigram_nll": (q_bigram_nll, _SQL_BIGRAM_NLL),
+    "vocab_oov_rate": (q_vocab_oov_rate, _SQL_VOCAB_OOV),
+    "rolling_median": (q_rolling_median, _SQL_ROLLING_MEDIAN),
+    "equi_depth_bins": (q_equi_depth_bins, _SQL_EQUI_DEPTH_BINS),
+    "class_balance": (q_class_balance, _SQL_CLASS_BALANCE),
+    "acf_lags": (q_acf_lags, _SQL_ACF_LAGS),
+    "kfold_report": (q_kfold_report, _SQL_KFOLD),
+    "quality_top_p": (q_quality_top_p, _quality_top_p_sql()),
+    "dataset_card": (q_dataset_card, _SQL_DATASET_CARD),
+    "basket_affinity": (q_basket_affinity, _SQL_BASKET_AFFINITY),
+    "shrunk_group_means": (q_shrunk_group_means, _SQL_SHRUNK_MEANS),
+    # IVM contract: oracle = the ONE-SHOT aggregate over all increments
+    "incremental_agg": (q_incremental_agg, _SQL_INCREMENTAL_AGG),
+    "langid_confusion": (q_langid_confusion, _langid_confusion_sql()),
+    "classification_metrics": (
+        q_classification_metrics,
+        _classification_metrics_sql(),
+    ),
+    "ewma_backtest": (q_ewma_backtest, _ewma_backtest_sql()),
+    "k_anonymity_audit": (q_k_anonymity_audit, _SQL_K_ANONYMITY),
+    # independent-formulation oracle: window cumsum vs literal range join
+    "scd2_lookup": (q_scd2_lookup, _SQL_SCD2_LOOKUP),
+    "ols_trend_slope": (q_ols_trend_slope, _SQL_OLS_SLOPE),
+    # real streaming job; oracle = its batch twin's (equality law in
+    # tests/test_streaming.py)
+    "streaming_neardup": (q_streaming_neardup, _incremental_dedup_sql()),
+    "stream_distinct_users": (q_stream_distinct_users, _SQL_STREAM_DISTINCT_USERS),
+    "byte_histogram": (q_byte_histogram, _SQL_BYTE_HISTOGRAM),
+    "token_counts": (q_token_counts, _SQL_TOKEN_COUNTS),
+    "trajectories": (q_trajectories, _SQL_TRAJECTORIES),
+    "user_similarity_topk": (q_user_similarity, _SQL_USER_SIMILARITY),
+    "stable_split": (q_stable_split, _SQL_STABLE_SPLIT),
+    "asof_latest_purchase": (q_asof_purchase, _SQL_ASOF_PURCHASE),
+    "incident_interval_join": (q_incident_interval, _SQL_INCIDENT_INTERVAL),
+    "knn_ivf_topk": (q_knn_ivf, _SQL_KNN_IVF),
+    "rollup_cascade": (q_rollup_cascade, _SQL_ROLLUP_CASCADE),
+    "stratified_sample": (q_stratified_sample, _SQL_STRATIFIED_SAMPLE),
+    # persisted-model IVF: fit -> save_model -> load_model -> probe;
+    # results identical to knn_ivf_fitted, so its oracle is REUSED —
+    # the gate hashes the whole persisted chain
+    "knn_ivf_persisted": (q_knn_ivf_persisted, _SQL_KNN_IVF_FITTED),
+    # O7 wrap-around replay: modular-arithmetic oracle over ranked
+    # distinct days; pins truncate-at-end AND wrap-to-zero
+    "replay_wraparound": (q_replay_wraparound, _SQL_REPLAY_WRAP),
+    "table_diff": (q_table_diff, _SQL_TABLE_DIFF),
+    "scd2_intervals": (q_scd2_intervals, _SQL_SCD2),
+    "golden_record": (q_golden_record, _SQL_GOLDEN_RECORD),
+    "token_entropy": (q_token_entropy, _SQL_TOKEN_ENTROPY),
+    "weighted_sample": (q_weighted_sample, _SQL_WEIGHTED_SAMPLE),
+    "name_match_pairs": (q_name_match_pairs, _SQL_NAME_MATCH),
+    "conversion_lag_daily": (q_conversion_lag, _SQL_CONVERSION_LAG),
+    "windowed_funnel": (q_windowed_funnel, _SQL_WINDOWED_FUNNEL),
+    "first_per_user": (q_first_per_user, _SQL_FIRST_PER_USER),
+    "cohort_compare": (q_cohort_compare, _SQL_COHORT_COMPARE),
+    "activity_span": (q_activity_span, _SQL_ACTIVITY_SPAN),
+    "safe_band": (q_safe_band, _SQL_SAFE_BAND),
+    "time_of_day_overnight": (q_time_of_day, _SQL_TIME_OF_DAY),
+    "dedup_composite_key": (q_dedup_composite, _SQL_DEDUP_COMPOSITE),
+    "json_extract": (q_json_extract, _SQL_JSON_EXTRACT),
+    "melt_unpivot": (q_melt, _SQL_MELT),
+    "doc_fingerprint": (q_fingerprint, _SQL_FINGERPRINT),
+    "exact_dedup": (q_exact_dedup, _SQL_EXACT_DEDUP),
+    "text_stats": (q_text_stats, _SQL_TEXT_STATS),
+    "language_id": (q_language_id, _langid_sql()),
+    "quality_score": (q_quality_score, _quality_sql()),
+    "minhash_signatures": (q_minhash_signatures, _minhash_sql(8)),
+    "percentiles": (q_percentiles, _SQL_PERCENTILES),
+    "distinct_counts": (q_distinct_counts, _SQL_DISTINCT_COUNTS),
+    "rollup_totals": (q_rollup, _SQL_ROLLUP),
+    "pivot_event_types": (q_pivot, _SQL_PIVOT),
+    "sessionize": (q_sessionize, _SQL_SESSIONIZE),
+    "align_by_position": (q_align_by_position, _SQL_ALIGN),
+    "offset_batch": (q_offset_batch, _SQL_OFFSET_BATCH),
+    "string_normalize": (q_string_normalize, _SQL_STRING_NORMALIZE),
+    "fuzzy_column_mapping": (q_fuzzy_column_mapping, _SQL_FUZZY_MAPPING),
+    "value_tiers": (q_value_tiers, _SQL_VALUE_TIERS),
+    "trailing_window_kpis": (q_trailing_window_kpis, _SQL_TRAILING_WINDOW),
+    "shipping_priority": (q_shipping_priority, _SQL_SHIPPING_PRIORITY),
+    "local_supplier_volume": (q_local_supplier_volume, _SQL_LOCAL_SUPPLIER_VOLUME),
+    "gap_mask": (q_gap_mask, _SQL_GAP_MASK),
+    "resample_1min": (q_resample_1min, _SQL_RESAMPLE),
+    "sliding_window": (q_sliding_window, _SQL_SLIDING_WINDOW),
+    "knn_cosine_topk": (q_knn_cosine, _SQL_KNN),
+    "embedding_neardup_pairs": (q_embedding_neardup, _embedding_neardup_sql()),
+    "calibration": (q_calibration, _SQL_CALIBRATION),
+    "minhash_lsh_pairs": (q_minhash_lsh_pairs, _minhash_lsh_sql()),
+    "frame_sample": (q_frame_sample, _SQL_FRAME_SAMPLE),
+    "stream_window_kpis": (q_stream_window_kpis, _SQL_STREAM_WINDOW),
+    # URL canonicalization + URL-level dedup. Oracle re-derives the
+    # normalization independently (regexp parts + list ops, no parser).
+    "url_canonicalize": (q_url_canonicalize, _SQL_URL_CANON),
+    # IDNA/punycode hosts over RFC/IANA-pinned vectors: the oracle maps
+    # each fixed host to its PUBLISHED punycode form, never computing it.
+    "idna_hosts": (q_idna_hosts, _idna_sql(_IDNA_VECTORS)),
+    "dsir_resample": (q_dsir_resample, _SQL_DSIR),
+    "audio_fingerprint_pairs": (q_audio_fingerprint_pairs, _SQL_AUDIO_PAIRS),
+    "shipping_latency": (q_shipping_latency, _SQL_SHIPPING_LATENCY),
+    "daily_value_bands": (q_daily_value_bands, _SQL_DAILY_VALUE_BANDS),
+    "knn_lsh_topk": (q_knn_lsh, _knn_lsh_sql()),
+    "fk_integrity": (q_fk_integrity, _SQL_FK_INTEGRITY),
+    "table_profile": (q_table_profile, _SQL_TABLE_PROFILE),
+    "cube_totals": (q_cube_totals, _SQL_CUBE_TOTALS),
+    "heavy_hitters_sketch": (q_heavy_hitters_sketch, _SQL_HEAVY_HITTERS),
+    "interval_coverage": (q_interval_coverage, _SQL_INTERVAL_COVERAGE),
+    "cusum_changepoint": (q_cusum_changepoint, _SQL_CUSUM),
+    "doc_chunks": (q_doc_chunks, _SQL_DOC_CHUNKS),
+    "quantized_knn_recall": (q_quantized_knn_recall, _SQL_QUANT_RECALL),
+    "spearman_trend": (q_spearman_trend, _SQL_SPEARMAN),
+    "dow_hour_heatmap": (q_dow_hour_heatmap, _SQL_DOW_HOUR),
+    "containment_pairs": (q_containment_pairs, _SQL_CONTAINMENT),
+    "zorder_layout": (q_zorder_layout, _SQL_ZORDER),
+    "max_concurrency": (q_max_concurrency, _SQL_MAX_CONCURRENCY),
+    "mad_outliers": (q_mad_outliers, _SQL_MAD_OUTLIERS),
+    "ratio_to_report": (q_ratio_to_report, _SQL_RATIO_TO_REPORT),
+    "benford_audit": (q_benford_audit, _benford_sql()),
+    "key_skew_report": (q_key_skew_report, _key_skew_sql()),
+    "seasonal_anomalies": (q_seasonal_anomalies, _SQL_SEASONAL_ANOMALIES),
+    "approx_aggregates": (q_approx_aggregates, _SQL_APPROX_AGGREGATES),
+    "distinct_users_sketch": (q_distinct_users_sketch, _SQL_DISTINCT_USERS_SKETCH),
+    "value_quantiles_sketch": (
+        q_value_quantiles_sketch,
+        _SQL_VALUE_QUANTILES_SKETCH,
+    ),
+    "pricing_summary": (q_pricing_summary, _SQL_PRICING),
+    "range_scan": (q_range_scan, _SQL_RANGE_SCAN),
+    "anti_join_new_users": (q_anti_join, _SQL_ANTI_JOIN),
+    "mets_broadcast_lookup": (q_mets_lookup, _SQL_METS_LOOKUP),
+    "widget_domains": (q_widget_domains, _SQL_WIDGET_DOMAINS),
+    "like_filter": (q_like_filter, _SQL_LIKE_FILTER),
+    "set_ops": (q_set_ops, _SQL_SET_OPS),
+    "topk_orders": (q_topk_orders, _SQL_TOPK),
+    # tokenizer inference: fixed-table segment with order-sensitive
+    # per-document projections
+    "bpe_segment": (q_bpe_segment, _bpe_segment_sql(_SEGMENT_MERGES)),
+    # fitted-quantizer IVF: the kmeans_fit -> centroid_arrays -> ivf_topk
+    # composition, oracled end-to-end by chaining the kmeans CTEs into
+    # the IVF probe SQL
+    "knn_ivf_fitted": (q_knn_ivf_fitted, _SQL_KNN_IVF_FITTED),
+    # broadcast-PSL eTLD+1: externalized rule table, longest-match join
+    "registrable_domain_psl": (
+        q_registrable_domain_psl,
+        _psl_sql(_psl_query_suffixes()),
+    ),
+    # audio arm: WAV encode->decode round-trips gated against a
+    # formula-derived oracle that never parses bytes
+    "wav_decode_stats": (q_wav_decode_stats, _SQL_WAV_STATS),
+    "audio_frame_energy": (q_audio_frame_energy, _SQL_AUDIO_ENERGY),
+    # video arm: Y4M encode->decode round-trip gated against a
+    # formula-derived oracle that never parses bytes (the video twin of
+    # wav_decode_stats; completes the image/audio/video triple)
+    "video_frame_stats": (q_video_frame_stats, _SQL_VIDEO_STATS),
+    # HTML->text extraction: oracle computes the EXPECTED extraction
+    # from the raw text column, never parsing HTML
+    "html_extract": (q_html_extract, _SQL_HTML_EXTRACT),
+    "debounce_events": (q_debounce, _SQL_DEBOUNCE),
+    "ewma_smooth": (q_ewma_smooth, _ewma_sql(8)),
+    "kmeans_iteration": (q_kmeans_iteration, _SQL_KMEANS),
+    "duplicated_spans": (q_duplicated_spans_gate, _SQL_DUPLICATED_SPANS),
+    "gopher_flags": (q_gopher_flags, _SQL_GOPHER_FLAGS),
+    "pack_sequences": (q_pack_sequences, _SQL_PACK_SEQUENCES),
+    "late_shipment_priority": (q_late_shipment_priority, _SQL_LATE_SHIPMENT),
+    "customer_order_distribution": (
+        q_customer_order_distribution,
+        _SQL_CUSTOMER_ORDER_DIST,
+    ),
+    "promo_revenue_share": (q_promo_revenue_share, _SQL_PROMO_SHARE),
+    "brand_supplier_counts": (q_brand_supplier_counts, _SQL_BRAND_SUPPLIER),
+    "disjunctive_revenue": (q_disjunctive_revenue, _SQL_DISJUNCTIVE_REVENUE),
+    "idle_rich_customers": (q_idle_rich_customers, _SQL_IDLE_RICH),
+    "geofence_count": (q_geofence_count, _SQL_GEOFENCE),
+    "pii_redaction": (q_pii_redaction, _SQL_PII),
+    "volume_shipping": (q_volume_shipping, _SQL_VOLUME_SHIPPING),
+    "market_share": (q_market_share, _SQL_MARKET_SHARE),
+    "product_profit": (q_product_profit, _SQL_PRODUCT_PROFIT),
+    "returned_items": (q_returned_items, _SQL_RETURNED_ITEMS),
+    "top_supplier": (q_top_supplier, _SQL_TOP_SUPPLIER),
+    "small_qty_revenue": (q_small_qty_revenue, _SQL_SMALL_QTY),
+    "waiting_suppliers": (q_waiting_suppliers, _SQL_WAITING_SUPPLIERS),
+    "cohort_kpi": (q_cohort_kpi, _SQL_COHORT_KPI),
+    "breach_histogram": (q_breach_histogram, _SQL_BREACH_HISTOGRAM),
+    "ngram_jaccard_pairs": (q_ngram_jaccard, _SQL_NGRAM_JACCARD),
+    "simhash": (q_simhash, _simhash_sql()),
+    "multimodal_meta": (q_multimodal_meta, _SQL_MULTIMODAL_META),
+    "stream_alerts": (q_stream_alerts, _SQL_STREAM_ALERTS),
+    "fft_range_sum": (q_fft_range_sum, _SQL_FFT_RANGE_SUM),
+    "user_overlap_sketch": (q_user_overlap_sketch, _SQL_USER_OVERLAP_SKETCH),
+    "semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
+    "rfm_segments": (q_rfm_segments, _SQL_RFM_SEGMENTS),
+    "time_weighted_avg": (q_time_weighted_avg, _SQL_TIME_WEIGHTED_AVG),
+    # SCD2 merge-apply; oracle = full rebuild
+    "scd2_apply": (q_scd2_apply, _SQL_SCD2),
+    # two-iteration fit; oracle unrolls both Lloyd steps
+    "kmeans_fit": (q_kmeans_fit, _SQL_KMEANS_FIT),
+    # URL/domain curation pair: host+eTLD+1 extraction (independent
+    # regexp/list-index oracle) and the salted per-domain cap (oracle =
+    # the unsalted one-window form, gating the salted==unsalted law)
+    "domain_extract": (q_domain_extract, _SQL_DOMAIN_EXTRACT),
+    "domain_cap_sample": (q_domain_cap_sample, _SQL_DOMAIN_CAP),
+    # tokenizer training; oracle = 4-step unroll with an independent
+    # windowed closed form for greedy merging
+    "bpe_merges": (q_bpe_merges, _bpe_sql(4)),
+    "bpe_encode": (q_bpe_encode, _bpe_encode_sql(4, 50)),
+    # native streaming sessionization, gated by the batch formulation's
+    # oracle (complete-mode drain == batch exactly; equality law in
+    # tests/test_streaming.py)
+    "streaming_sessions": (q_streaming_sessions, _SQL_SESSION_WINDOWS),
+    # real streaming job (stream-stream watermarked self-join), gated by
+    # the batch range-join oracle; equality law in tests/test_streaming.py
+    "stream_stream_join": (q_stream_stream_join, _SQL_STREAM_STREAM_JOIN),
+    # real streaming job (windowed Count-Min), within-bound oracle
+    "stream_heavy_hitters": (q_stream_heavy_hitters, _SQL_STREAM_HEAVY_HITTERS),
+    "bm25_topk": (q_bm25_topk, _bm25_sql()),
+    "tfidf_top_terms": (q_tfidf_top_terms, _SQL_TFIDF_TOP_TERMS),
+    "embedding_centroids": (q_embedding_centroids, _SQL_EMBEDDING_CENTROIDS),
+    "quality_filter_per_lang": (q_quality_filter_per_lang, _quality_filter_sql()),
+    "corpus_drift": (q_corpus_drift, _SQL_CORPUS_DRIFT),
+    "gap_fill": (q_gap_fill, _SQL_GAP_FILL),
+    "forecast_revenue": (q_forecast_revenue, _SQL_FORECAST_REVENUE),
+    "funnel_conversion": (q_funnel_conversion, _SQL_FUNNEL_CONVERSION),
+    "event_transitions": (q_event_transitions, _SQL_EVENT_TRANSITIONS),
+    "rolling_zscore": (q_rolling_zscore, _SQL_ROLLING_ZSCORE),
+    # RFC 9309 robots politeness over hand-derived fixed vectors
+    "robots_filter": (q_robots_filter, _robots_gate_sql()),
+    "session_windows": (q_session_windows, _SQL_SESSION_WINDOWS),
+    "dedup_clusters": (q_dedup_clusters, _dedup_clusters_sql()),
+    "incremental_dedup": (q_incremental_dedup, _incremental_dedup_sql()),
+    "retention_matrix": (q_retention_matrix, _SQL_RETENTION),
+    "big_orders": (q_big_orders, _SQL_BIG_ORDERS),
+    "boilerplate_ngrams": (q_boilerplate_ngrams, _SQL_BOILERPLATE),
+    "corpus_mixture": (q_corpus_mixture, _SQL_CORPUS_MIXTURE),
+    "mixture_sample": (q_mixture_sample, _SQL_MIXTURE_SAMPLE),
+    "repetition_ratio": (q_repetition_ratio, _SQL_REPETITION),
+    "decontaminate": (q_decontaminate, _SQL_DECONTAMINATE),
+    # persisted ranking model: snapshot-built unigram counts published
+    # through the model store, ingest scored by a separate load with
+    # expect_params validation; oracle rebuilds the whole chain
+    "ranking_model_scores": (q_ranking_model_scores, _SQL_RANKING_MODEL_SCORES),
+    # streaming URL-frontier dedup: canonicalize_url as the frontier
+    # key under dropDuplicatesWithinWatermark; oracle = batch DISTINCT
+    # of the independently re-derived canonical key
+    "stream_url_frontier": (q_stream_url_frontier, _SQL_STREAM_URL_FRONTIER),
+    # WARC crawl-archive extraction (pure-stdlib codec, encode->parse
+    # round trip, plain + gzip-member layouts); formula-derived oracle
+    # never parses bytes — the media-codec gate pattern
+    "warc_extract": (q_warc_extract, _SQL_WARC_EXTRACT),
 }
 
-
-# ---------------------------------------------------------------------------
-# ROUND-16 REGISTRATION + DRIVER WINDOW
-# ---------------------------------------------------------------------------
-# Promote the two candidates named by the written r16 plan (above, at
-# the _R15_WINDOW comment): dsir_resample (the only major curation
-# family with no driver row — full fit + Gumbel-top-k CTE-chain oracle
-# standing, parity green at 3 sfs + 7 partitions) and
-# audio_fingerprint_pairs (closes the image/audio perceptual-dedup
-# pair; pinned-constant oracle standing). Registry grows 202 -> 204.
-# The raw SQL constants are wrapped exactly once, as in every prior
-# registration (the R17_CANDIDATES copies above carry their own wrap).
-QUERIES["dsir_resample"] = (q_dsir_resample, _portable_round_sql(_SQL_DSIR))
-QUERIES["audio_fingerprint_pairs"] = (
-    q_audio_fingerprint_pairs,
-    _portable_round_sql(_SQL_AUDIO_PAIRS),
-)
-
-# Round-16 driver window, executed exactly as written in the r15 plan:
-# the stale backlog entering r16 is the 50 r12-stale rows plus the two
-# 5-round-stale displaced r11 rows. The displaced pair LEADS (the
-# oldest driver evidence in the registry — first rows ever to age past
-# 4 rounds), then the first 46 r12-stale rows in true CORRECTNESS_r12
-# key order, then the two promotions take the last 2 slots — pushing
-# the final 4 r12-stale rows (streaming_ewma, stream_window_dedup,
-# value_percentile_rank, grid_density) to LEAD the r17 window.
-# Composition machine-checked by
-# test_r16_gate_window_composition_recomputed_from_driver_rows; the
-# registry-wide freshness invariant (no registered row staler than
-# ceil(len(QUERIES)/50) rounds without sitting in the current window)
-# is machine-checked by test_registry_freshness_invariant.
-# After r16 gates green: freshness {r16: 50, r15: 50, r14: 50, r13: 50,
-# r12: 4 (the pushed tail)}.
-#
-# R17 WINDOW PLAN (execute at r17 start): lead with the 4 pushed
-# r12-stale rows above (they will be 5 rounds stale — the freshness
-# invariant REQUIRES them in the window), then the first 44 r13-stale
-# rows in CORRECTNESS_r13 key order, then promote the two standing
-# R17_CANDIDATES (hashed_clf_scores, phash_hamming_pairs — both carry
-# parity green at 3 sfs + 7 partitions; gate latency pre-measured:
-# hashed_clf_scores 4.46 s cold (r13), phash_hamming_pairs 7.9 s cold /
-# 1.6 s warm (r14)), pushing the last 6 r13-stale rows to lead r18.
-# Recompute the r13-stale list from the JSONs at r17 start — do not
-# trust a hand list. After those two promotions the candidates file
-# holds only unigram_segment (the unigram-LM gate, built late-r16 with
-# a recursive-CTE Viterbi oracle; parity green at 3 sfs + 7 partitions;
-# gate latency 11.8 s cold fresh-session / 1.5-1.9 s warm at sf0.01 on
-# 4 cpus) — it leads the r18 promotion queue.
-# The EXACT prospective r17 window (the 4 pushed rows, then the first
-# 44 r13-stale in CORRECTNESS_r13 key order — mixture_sample,
-# repetition_ratio, ranking_model_scores, stream_url_frontier,
-# warc_extract, decontaminate drop to lead r18 — then the two
-# promotions) was pre-measured at r16 end: 50/50 oracle-green, 111.8 s
-# total cold at sf0.01 on 4 cpus, worst streaming_ewma 19.4 s (the
-# first-streaming-job JIT tier on a steal-contended box — re-measure
-# solo before trusting any elevated read); every entry inside the
-# ~30 s per-entry envelope.
-_R16_WINDOW = [
-    # --- the 2 displaced r11 rows (5 rounds stale, oldest evidence) ---
-    "knn_ivf_persisted",
-    "replay_wraparound",
-    # --- first 46 of the 50 r12-stale rows, true CORRECTNESS_r12 key
-    # order ---
-    "table_diff",
-    "scd2_intervals",
-    "golden_record",
-    "token_entropy",
-    "weighted_sample",
-    "name_match_pairs",
-    "conversion_lag_daily",
-    "windowed_funnel",
-    "first_per_user",
-    "cohort_compare",
-    "activity_span",
-    "safe_band",
-    "time_of_day_overnight",
-    "dedup_composite_key",
-    "json_extract",
-    "melt_unpivot",
-    "doc_fingerprint",
-    "exact_dedup",
-    "text_stats",
-    "language_id",
-    "quality_score",
-    "minhash_signatures",
-    "percentiles",
-    "distinct_counts",
-    "rollup_totals",
-    "pivot_event_types",
-    "sessionize",
-    "align_by_position",
-    "offset_batch",
-    "string_normalize",
-    "fuzzy_column_mapping",
-    "value_tiers",
-    "trailing_window_kpis",
-    "shipping_priority",
-    "local_supplier_volume",
-    "gap_mask",
-    "resample_1min",
-    "sliding_window",
-    "knn_cosine_topk",
-    "embedding_neardup_pairs",
-    "calibration",
-    "minhash_lsh_pairs",
-    "frame_sample",
-    "stream_window_kpis",
-    "url_canonicalize",
-    "idna_hosts",
-    # --- the 2 r16 promotions (first driver hash), pushing
-    # streaming_ewma, stream_window_dedup, value_percentile_rank,
-    # grid_density to lead the r17 window ---
-    "dsir_resample",
-    "audio_fingerprint_pairs",
-]
-
-assert len(_R16_WINDOW) == 50, len(_R16_WINDOW)
-assert len(set(_R16_WINDOW)) == 50
-assert set(_R16_WINDOW) <= set(QUERIES), set(_R16_WINDOW) - set(QUERIES)
-QUERIES = {name: QUERIES[name] for name in _R16_WINDOW} | {
-    name: spec for name, spec in QUERIES.items() if name not in set(_R16_WINDOW)
+# apply the portable-rounding rewrite to every oracle
+QUERIES = {
+    name: (fn, _portable_round_sql(sql) if sql is not None else None)
+    for name, (fn, sql) in QUERIES.items()
 }
 
-
-# ---------------------------------------------------------------------------
-# ROUND-17 DRIVER WINDOW (optimization round 2)
-# ---------------------------------------------------------------------------
-# Executed per the r16 verdict's order #9, which supersedes the written
-# r16-era plan above in two ways, both deliberate:
-# (a) The two standing R17_CANDIDATES promotions (hashed_clf_scores,
-#     phash_hamming_pairs) are NOT taken — r17 is an optimization round
-#     ("no new features beyond what an optimization needs") and a new
-#     gate entry is registry/feature work; the candidates stay queued
-#     with their parity evidence for the next build round.
-# (b) Nine slots re-gate the optimization-touched heavy queries so the
-#     driver's own oracle re-stamps them post-change: the r16-touched
-#     set the verdict names (bloom_decontaminate, event_type_pagerank,
-#     dedup_keep_best, chi2_independence, source_overlap, pmi_pairs —
-#     classification_metrics and basket_affinity already sit in the
-#     r13-stale block below) plus this round's restructured/touched
-#     rows (unigram_nll, streaming_debounce, streaming_anomaly;
-#     bigram_nll and streaming_ewma are covered by the stale blocks).
-# Composition: the 4 pushed r12-stale rows LEAD (5 rounds stale — the
-# freshness invariant REQUIRES them), then the 9 re-gate rows, then the
-# first 37 r13-stale rows in true CORRECTNESS_r13 key order. The last
-# 13 r13-stale rows (session_windows .. decontaminate) are pushed to
-# LEAD the r18 window — at r18 they are exactly MAX_STALENESS rounds
-# stale, so the invariant makes that mandatory, not advisory.
-# Machine-checked by
-# test_r17_gate_window_composition_recomputed_from_driver_rows.
-_R17_WINDOW = [
-    # --- the 4 pushed r12-stale rows (5 rounds stale) ---
+# The driver's correctness gate hashes the first 50 entries only. One
+# rule over its CORRECTNESS_r*.json records picks them: rows that would
+# exceed ceil(len(QUERIES) / 50) rounds of staleness next round lead,
+# then explicit re-gates, then the stalest rows in record order, with
+# never-gated entries in the last slots.
+# tests/test_plans.py::test_gate_window_recomputed_from_driver_records
+# recomputes this list and prints the next one.
+GATE_WINDOW = [
     "streaming_ewma",
     "stream_window_dedup",
     "value_percentile_rank",
     "grid_density",
-    # --- r16/r17 optimization-touched re-gates (verdict order #9) ---
     "bloom_decontaminate",
     "event_type_pagerank",
     "dedup_keep_best",
@@ -10398,7 +9672,6 @@ _R17_WINDOW = [
     "unigram_nll",
     "streaming_debounce",
     "streaming_anomaly",
-    # --- first 37 r13-stale rows, true CORRECTNESS_r13 key order ---
     "salted_hot_key_agg",
     "event_paths",
     "brand_top_parts",
@@ -10437,10 +9710,12 @@ _R17_WINDOW = [
     "rollup_cascade",
     "stratified_sample",
 ]
+QUERIES = {name: QUERIES[name] for name in GATE_WINDOW} | QUERIES
 
-assert len(_R17_WINDOW) == 50, len(_R17_WINDOW)
-assert len(set(_R17_WINDOW)) == 50
-assert set(_R17_WINDOW) <= set(QUERIES), set(_R17_WINDOW) - set(QUERIES)
-QUERIES = {name: QUERIES[name] for name in _R17_WINDOW} | {
-    name: spec for name, spec in QUERIES.items() if name not in set(_R17_WINDOW)
-}
+
+def queries() -> dict[str, QueryFn]:
+    return {name: fn for name, (fn, _) in QUERIES.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: sql for name, (_, sql) in QUERIES.items() if sql is not None}
