@@ -1515,6 +1515,172 @@ def test_gate_window_rule_on_synthetic_records():
         gate_window(records, names, tuple(q[25:41]))
 
 
+def _round_inputs(n: int):
+    """(the window the driver hashed at round N — the key order of
+    CORRECTNESS_rNN.json —, name -> last green round before N, per-round
+    key orders before N). Skips when record N is not present."""
+    records = _driver_records()
+    if len(records) < n:
+        pytest.skip(f"driver record r{n:02d} not present")
+    before = records[: n - 1]
+    latest = _latest_green(before)
+    orders = {r: list(rows) for r, rows in enumerate(before, 1)}
+    return list(records[n - 1]), latest, orders
+
+
+def test_r12_gate_window_composition_recomputed_from_driver_rows():
+    """The r12 window the driver hashed is the composition recomputed from
+    r01..r11: the 44 r8-stale rows in r8-file order, then the 2
+    never-gated late-r11 additions (url_canonicalize, idna_hosts), then
+    the 4 stalest r9 rows in r9-file order. After r12 no r8-stale and no
+    never-gated entries remain."""
+    hashed, latest, orders = _round_inputs(12)
+    r8_stale = [k for k in orders[8] if latest.get(k) == 8]
+    r9_stale = [k for k in orders[9] if latest.get(k) == 9]
+    never_gated_r11 = ["url_canonicalize", "idna_hosts"]
+    assert all(k not in latest for k in never_gated_r11)
+    assert len(r8_stale) == 44  # zero r7-stale remain (r11 cleared them)
+    n_r9 = 50 - len(r8_stale) - len(never_gated_r11)
+    expected = r8_stale + never_gated_r11 + r9_stale[:n_r9]
+    assert hashed == expected, (
+        "gate window diverges from the recomputed rotation plan"
+    )
+
+
+def test_r13_gate_window_composition_recomputed_from_driver_rows():
+    """The r13 window the driver hashed is the composition recomputed from
+    r01..r12: the 46 r9-stale rows in r9-file key order, then the 3
+    never-gated r12 additions (ranking_model_scores, stream_url_frontier,
+    warc_extract), then the stalest r10 row."""
+    hashed, latest, orders = _round_inputs(13)
+    r9_stale = [k for k in orders[9] if latest.get(k) == 9]
+    r10_stale = [k for k in orders[10] if latest.get(k) == 10]
+    never_gated_r12 = [
+        "ranking_model_scores", "stream_url_frontier", "warc_extract",
+    ]
+    assert all(k not in latest for k in never_gated_r12)
+    assert len(r9_stale) == 46  # zero r8-stale remain (r12 cleared them)
+    n_fill = 50 - len(r9_stale) - len(never_gated_r12)
+    expected = r9_stale + never_gated_r12 + r10_stale[:n_fill]
+    assert hashed == expected, (
+        "gate window diverges from the recomputed rotation plan"
+    )
+
+
+def test_r14_gate_window_composition_recomputed_from_driver_rows():
+    """The r14 window the driver hashed is the composition recomputed from
+    r01..r13: the 49 r10-stale rows in r10-file key order, then
+    robots_filter (the only entry with no driver row yet). After r14
+    every registered entry carries a driver hash no older than r11."""
+    hashed, latest, orders = _round_inputs(14)
+    r10_stale = [k for k in orders[10] if latest.get(k) == 10]
+    never_gated = ["robots_filter"]
+    assert all(k not in latest for k in never_gated)
+    assert len(r10_stale) == 49  # zero r9-stale remain (r13 cleared them)
+    expected = r10_stale + never_gated
+    assert len(expected) == 50
+    assert hashed == expected, (
+        "gate window diverges from the recomputed rotation plan"
+    )
+
+
+def test_r15_gate_window_composition_recomputed_from_driver_rows():
+    """The r15 window the driver hashed is the composition recomputed from
+    r01..r14: the 50 r11-stale rows in r11-file key order minus the last
+    2 (knn_ivf_persisted, replay_wraparound, pushed to lead r16), then
+    the promotions duplicated_spans + gopher_flags taking their first
+    hash. The promoted names never return to GATE_CANDIDATES."""
+    from w4h_integrated_toolkit_spark.plans.queries import GATE_CANDIDATES
+
+    hashed, latest, orders = _round_inputs(15)
+    r11_stale = [k for k in orders[11] if latest.get(k) == 11]
+    assert len(r11_stale) == 50  # zero r10-stale remain (r14 cleared them)
+    promotions = ["duplicated_spans", "gopher_flags"]
+    assert all(k not in latest for k in promotions)
+    expected = r11_stale[:-2] + promotions
+    assert r11_stale[-2:] == ["knn_ivf_persisted", "replay_wraparound"]
+    assert len(expected) == 50
+    assert hashed == expected, (
+        "gate window diverges from the recomputed rotation plan"
+    )
+    assert not set(promotions) & set(GATE_CANDIDATES)
+
+
+def test_r16_gate_window_composition_recomputed_from_driver_rows():
+    """The r16 window the driver hashed is the composition recomputed from
+    r01..r15: the 2 displaced r11 rows lead, then the first 46 of the 50
+    r12-stale rows in r12-file key order (the last 4 lead r17), then the
+    promotions dsir_resample + audio_fingerprint_pairs. The registry
+    holds 202 + 2 = 204 entries and the promoted names are no longer
+    candidates."""
+    from w4h_integrated_toolkit_spark.plans.queries import GATE_CANDIDATES
+
+    hashed, latest, orders = _round_inputs(16)
+    r11_stale = [k for k in orders[11] if latest.get(k) == 11]
+    assert r11_stale == ["knn_ivf_persisted", "replay_wraparound"]
+    r12_stale = [k for k in orders[12] if latest.get(k) == 12]
+    assert len(r12_stale) == 50  # no r12 row re-entered a later window
+    promotions = ["dsir_resample", "audio_fingerprint_pairs"]
+    assert all(k not in latest for k in promotions)
+    expected = r11_stale + r12_stale[:-4] + promotions
+    assert r12_stale[-4:] == [
+        "streaming_ewma",
+        "stream_window_dedup",
+        "value_percentile_rank",
+        "grid_density",
+    ]
+    assert len(expected) == 50
+    assert hashed == expected, (
+        "gate window diverges from the recomputed rotation plan"
+    )
+    assert len(QUERIES) == 204
+    assert not set(promotions) & set(GATE_CANDIDATES)
+
+
+def test_r17_gate_window_composition_recomputed_from_driver_rows():
+    """The r17 window is the composition recomputed from r01..r16: the 4
+    pushed r12-stale rows lead, then the 9 re-gates (rows re-stamped
+    after their code changed, all last gated r14/r15), then the first 37
+    r13-stale rows in r13-file key order. It is what the driver hashed at
+    r17 and it is the committed GATE_WINDOW, the first 50 registry
+    entries; both standing candidates stay unregistered."""
+    from w4h_integrated_toolkit_spark.plans.queries import (
+        GATE_CANDIDATES,
+        GATE_WINDOW,
+    )
+
+    records = _driver_records()
+    if len(records) < 16:
+        pytest.skip("driver records stop before r16")
+    latest = _latest_green(records[:16])
+    orders = {r: list(rows) for r, rows in enumerate(records[:16], 1)}
+    r12_stale = [k for k in orders[12] if latest.get(k) == 12]
+    assert r12_stale == [
+        "streaming_ewma",
+        "stream_window_dedup",
+        "value_percentile_rank",
+        "grid_density",
+    ]
+    regates = list(GATE_REGATES)
+    # each re-gate row sits outside the stale backlog (re-gated r14/r15):
+    # the slot spend is re-stamping, not rotation
+    assert all(14 <= latest[k] <= 15 for k in regates), {
+        k: latest.get(k) for k in regates
+    }
+    r13_stale = [k for k in orders[13] if latest.get(k) == 13]
+    assert len(r13_stale) == 50
+    expected = r12_stale + regates + r13_stale[:37]
+    assert len(expected) == 50
+    assert GATE_WINDOW == expected, (
+        "gate window diverges from the recomputed rotation plan"
+    )
+    assert list(QUERIES)[:50] == expected
+    if len(records) >= 17:
+        assert list(records[16]) == expected
+    assert len(QUERIES) == 204
+    assert set(GATE_CANDIDATES) >= {"hashed_clf_scores", "phash_hamming_pairs"}
+
+
 def test_registry_freshness_invariant():
     """The max-staleness backstop: with N = the latest driver record on
     disk, every registered entry either carries a green driver row no
