@@ -1163,6 +1163,36 @@ def test_connected_components_chain_and_islands(spark):
         assert got == want, f"threshold={thresh}"
 
 
+def test_connected_components_driver_path_hints_broadcast(spark):
+    """The driver union-find result is provably <= driver_threshold rows,
+    so connected_components hints it for broadcast at the producer:
+    createDataFrame's LogicalRDD reports Long.MaxValue size stats, and an
+    unhinted join would broadcast the OTHER (documents) side. With the
+    hint, documents.join(components) broadcasts the component side
+    (BuildRight). The distributed path (driver_threshold=0) carries no
+    hint — its size is unknown."""
+    from tests.conftest import SF_DIR
+    from w4h_integrated_toolkit_spark.catalog import read_parquet
+    from w4h_integrated_toolkit_spark.operators.dedup import (
+        connected_components,
+        minhash_lsh_pairs,
+    )
+
+    docs = read_parquet(spark, f"{SF_DIR}/documents.parquet")
+    pairs = minhash_lsh_pairs(docs, n=3, num_perm=8, bands=4, threshold=0.5)
+    comp = connected_components(pairs)
+    joined = docs.join(comp, docs["doc_id"] == comp["node"])
+    plan = joined._sc._jvm.PythonSQLUtils.explainString(
+        joined._jdf.queryExecution(), "simple"
+    )
+    assert "BroadcastHashJoin" in plan and "BuildRight" in plan, plan
+
+    dist = connected_components(pairs, driver_threshold=0)
+    analyzed = dist._jdf.queryExecution().analyzed().toString()
+    assert "strategy=broadcast" not in analyzed, analyzed
+    assert "strategy=broadcast" in comp._jdf.queryExecution().analyzed().toString()
+
+
 def test_hll_cube_estimate_within_sketch_error(spark):
     """Sketch estimates must land within HLL error bounds of the exact
     distinct count, and the exact n_rows rollup must match count(*)."""
@@ -3824,7 +3854,7 @@ def test_dedup_keep_best_join_then_score_shape(spark):
     DRIVER-PATH DEPENDENCY (r16 ADVICE): these shape assertions hold
     only because connected_components takes the driver union-find path
     at this fixture size (pairs <= driver_threshold=100k) and returns a
-    lineage-truncated local relation the builder may broadcast-hint. A
+    lineage-truncated local relation it hints for broadcast. A
     larger fixture would flip to the distributed path, re-introduce the
     widened corpus scan under the (now un-hinted) join, and fail this
     test WITHOUT any code regression — the pair-count assertion below

@@ -1180,51 +1180,86 @@ def test_window_dedup_state_survives_restart(spark, tmp_path):
     )
 
 
-def test_drain_state_partition_pin_scoped_and_restored(spark, tmp_path):
-    """drain_memory_sink pins spark.sql.shuffle.partitions for the
-    streaming query only: (a) the streaming aggregation actually runs
-    with the pinned count (asserted via the sink's partitioning), (b)
-    the session value is restored on success, and (c) restored even
-    when start() raises (invalid output mode) — a leaked pin would
-    silently reshape every later batch query in the session."""
-    import datetime as dt
+def _stage_task_counts(spark, jobs):
+    """(job id, stage id, stage name, task count) of every stage the
+    given jobs ran."""
+    tracker = spark.sparkContext.statusTracker()
+    tasks = []
+    for jid in jobs:
+        job = tracker.getJobInfo(jid)
+        assert job is not None, f"job {jid} info not retained"
+        for sid in job.stageIds:
+            stage = tracker.getStageInfo(sid)
+            if stage is not None:
+                tasks.append((jid, sid, stage.name, stage.numTasks))
+    return tasks
 
-    import pytest as _pytest
 
+def _runtime_confs(spark) -> str:
+    """The session's full runtime conf map, rendered."""
+    return (
+        spark._jsparkSession.sessionState().conf().getAllConfs().mkString("\x00")
+    )
+
+
+def test_drain_runs_at_the_stream_session_count_and_writes_no_conf(
+    spark, tmp_path
+):
+    """drain_memory_sink reads and writes no conf: a stream built on the
+    caller's own session drains at that session's
+    spark.sql.shuffle.partitions (the stateful stage runs exactly that
+    many tasks), and the session's full runtime conf map is identical
+    before and after — on success and when start() raises (invalid
+    output mode)."""
     from w4h_integrated_toolkit_spark.streaming.replay import (
+        BOUNDED_REPLAY_STATE_PARTITIONS,
         drain_memory_sink,
         windowed_kpis_stream,
     )
 
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-
     src = str(tmp_path / "src")
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
     spark.createDataFrame(
-        [(i, float(i), t0 + dt.timedelta(minutes=i)) for i in range(40)],
+        [(i, float(i), _ts(i)) for i in range(40)],
         "event_id long, value double, ts timestamp",
     ).coalesce(1).write.parquet(src)
+    schema = spark.read.parquet(src).schema
 
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    agg = windowed_kpis_stream(stream, ts="ts", value="value", window="10 minutes")
-    out = drain_memory_sink(agg, "complete", state_partitions=3)
-    assert out.count() == 4
-    assert spark.conf.get(key) == before, "pin leaked on the success path"
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    # a count no other stage of this drain runs: 1 scan task (one
+    # file), at most 4 localCheckpoint tasks (4 rows), never the
+    # bounded-replay pin
+    own = 3
+    assert own != BOUNDED_REPLAY_STATE_PARTITIONS
+    spark.conf.set(key, str(own))
+    try:
+        before = _runtime_confs(spark)
+        stream = spark.readStream.schema(schema).parquet(src)
+        agg = windowed_kpis_stream(stream, ts="ts", value="value", window="10 minutes")
+        out, jobs = jobs_in(
+            spark, lambda: drain_memory_sink(agg, "complete").collect()
+        )
+        assert len(out) == 4
+        counts = [t[3] for t in _stage_task_counts(spark, jobs)]
+        assert own in counts, f"no stage ran {own} state tasks: {counts}"
+        assert BOUNDED_REPLAY_STATE_PARTITIONS not in counts, counts
+        assert _runtime_confs(spark) == before, "drain wrote a conf"
 
-    stream2 = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    with _pytest.raises(Exception):
-        # complete mode without aggregation is rejected at start()
-        drain_memory_sink(stream2, "complete", state_partitions=3)
-    assert spark.conf.get(key) == before, "pin leaked on the failure path"
+        stream2 = spark.readStream.schema(schema).parquet(src)
+        with pytest.raises(Exception):
+            # complete mode without aggregation is rejected at start()
+            drain_memory_sink(stream2, "complete")
+        assert _runtime_confs(spark) == before, "failed drain wrote a conf"
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_bounded_replay_session_clone_isolation(spark, tmp_path):
     """bounded_replay_session owns a PRIVATE SQLConf: the state-partition
-    pin and clone marker live on the clone, runtime-set parent confs are
-    carried over, and a file_stream -> drain round-trip never mutates the
-    shared session's conf (the r9 advice race: a concurrent batch query
-    could observe the legacy set->start->restore pin window)."""
+    pin lives on the clone, runtime-set parent confs are carried over,
+    and a file_stream -> drain round-trip runs its stateful stage at the
+    clone's pin while never mutating the shared session's conf, so a
+    concurrent batch query on that session can never observe the pin."""
     from w4h_integrated_toolkit_spark.streaming.replay import (
         BOUNDED_REPLAY_STATE_PARTITIONS,
         bounded_replay_session,
@@ -1241,12 +1276,8 @@ def test_bounded_replay_session_clone_isolation(spark, tmp_path):
         assert clone.conf.get(key) == str(BOUNDED_REPLAY_STATE_PARTITIONS)
         # runtime-set parent conf copied (newSession alone would drop it)
         assert clone.conf.get("spark.w4h.test.runtimeMarker") == "carried"
-        assert clone.conf.get("spark.w4h.boundedReplay.cloned") == str(
-            BOUNDED_REPLAY_STATE_PARTITIONS
-        )
-        # the shared session never sees pin or marker
+        # the shared session never sees the pin
         assert spark.conf.get(key) == before
-        assert spark.conf.get("spark.w4h.boundedReplay.cloned", None) is None
     finally:
         spark.conf.unset("spark.w4h.test.runtimeMarker")
 
@@ -1255,73 +1286,27 @@ def test_bounded_replay_session_clone_isolation(spark, tmp_path):
         [(i, float(i), _ts(i)) for i in range(40)],
         "event_id long, value double, ts timestamp",
     ).coalesce(1).write.parquet(src)
-    stream, stage = file_stream(spark, src)
-    assert (
-        stream.sparkSession.conf.get("spark.w4h.boundedReplay.cloned")
-        == str(BOUNDED_REPLAY_STATE_PARTITIONS)
-    )
-    agg = windowed_kpis_stream(stream, ts="ts", value="value", window="10 minutes")
-    out = drain_memory_sink(agg, "complete", stage_dir=stage)
-    assert out.count() == 4
-    assert spark.conf.get(key) == before, "drain touched the shared conf"
+    parent_confs = _runtime_confs(spark)
 
-
-def test_drain_explicit_pin_conflicting_with_baked_pin_raises(spark, tmp_path):
-    """r10 advice: a drain-time state_partitions that CONFLICTS with the
-    pin baked into a bounded_replay_session clone must raise, not be
-    silently overridden; the matching value and None/default still
-    defer to the baked pin."""
-    import pytest as _pytest
-
-    from w4h_integrated_toolkit_spark.streaming.replay import (
-        BOUNDED_REPLAY_STATE_PARTITIONS,
-        drain_memory_sink,
-        file_stream,
-        windowed_kpis_stream,
-    )
-
-    src = str(tmp_path / "pin_conflict_src")
-    spark.createDataFrame(
-        [(i, float(i), _ts(i)) for i in range(40)],
-        "event_id long, value double, ts timestamp",
-    ).coalesce(1).write.parquet(src)
-
-    def build():
+    def drain():
         stream, stage = file_stream(spark, src)
-        agg = windowed_kpis_stream(
-            stream, ts="ts", value="value", window="10 minutes"
-        )
-        return agg, stage
+        agg = windowed_kpis_stream(stream, ts="ts", value="value", window="10 minutes")
+        return drain_memory_sink(agg, "complete", stage_dir=stage).collect()
 
-    agg, stage = build()
-    with _pytest.raises(ValueError, match="conflicts with the pin baked"):
-        drain_memory_sink(
-            agg,
-            "complete",
-            stage_dir=stage,
-            state_partitions=BOUNDED_REPLAY_STATE_PARTITIONS + 1,
-        )
-    # the matching explicit value, None, and the default all succeed
-    out = drain_memory_sink(
-        agg, "complete", stage_dir=stage,
-        state_partitions=BOUNDED_REPLAY_STATE_PARTITIONS,
-    )
-    assert out.count() == 4
-    agg2, stage2 = build()
-    assert (
-        drain_memory_sink(
-            agg2, "complete", stage_dir=stage2, state_partitions=None
-        ).count()
-        == 4
-    )
+    out, jobs = jobs_in(spark, drain)
+    assert len(out) == 4
+    counts = [t[3] for t in _stage_task_counts(spark, jobs)]
+    assert BOUNDED_REPLAY_STATE_PARTITIONS in counts, counts
+    assert _runtime_confs(spark) == parent_confs, "drain touched the shared conf"
 
 
 def test_bounded_replay_session_clone_cache(spark):
     """Clone reuse contract: while the parent's runtime conf map is
     unchanged, bounded_replay_session returns the SAME clone (the py4j
     conf-copy loop was the dominant bounded-replay cost); any parent
-    conf change forces a fresh clone that carries the new value; and
-    distinct pins get distinct cache slots."""
+    conf change forces a fresh clone that carries the new value;
+    distinct pins get distinct cache slots; and an unpinned clone
+    (``state_partitions=None``) inherits the parent's count."""
     from w4h_integrated_toolkit_spark.streaming.replay import (
         bounded_replay_session,
     )
@@ -1344,23 +1329,16 @@ def test_bounded_replay_session_clone_cache(spark):
     finally:
         spark.conf.unset("spark.w4h.test.cacheMarker")
 
-    # cached=False: a PRIVATE throwaway clone that neither reads from
-    # nor writes to the cache, so mutating it can never leak into later
-    # cache hits
-    base = bounded_replay_session(spark)
-    solo = bounded_replay_session(spark, cached=False)
-    assert solo is not base
-    solo.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    again = bounded_replay_session(spark)
-    assert again is base, "cached=False must not evict/replace the cache slot"
-    assert (
-        again.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-        != "true"
-    ), "uncached-clone mutation leaked into the cache"
+    key = "spark.sql.shuffle.partitions"
+    unpinned = bounded_replay_session(spark, state_partitions=None)
+    assert unpinned.conf.get(key) == spark.conf.get(key), (
+        "unpinned clone must inherit"
+    )
 
     # ns_long (the file_stream ns-source path): its OWN cache slot with
     # the toggle baked pre-cache — repeat ns streams hit the cache, and
     # the toggle never appears in the non-ns slot's clone
+    base = bounded_replay_session(spark)
     ns1 = bounded_replay_session(spark, ns_long=True)
     ns2 = bounded_replay_session(spark, ns_long=True)
     assert ns1 is ns2 and ns1 is not base
@@ -1371,38 +1349,6 @@ def test_bounded_replay_session_clone_cache(spark):
         )
         != "true"
     )
-
-
-def test_unpinned_clone_drain_honors_explicit_pin(spark, tmp_path):
-    """Review fix: a clone built with state_partitions=None carries
-    marker 'none', so a drain-time pin on it is APPLIED (legacy
-    set/restore path on the private conf — race-free) instead of
-    silently discarded, and the clone's conf is restored afterwards."""
-    from w4h_integrated_toolkit_spark.streaming.replay import (
-        bounded_replay_session,
-        drain_memory_sink,
-    )
-
-    clone = bounded_replay_session(spark, state_partitions=None)
-    assert clone.conf.get("spark.w4h.boundedReplay.cloned") == "none"
-    key = "spark.sql.shuffle.partitions"
-    inherited = clone.conf.get(key)
-    assert inherited == spark.conf.get(key), "unpinned clone must inherit"
-
-    src = str(tmp_path / "unpinned_src")
-    spark.createDataFrame(
-        [(i, float(i), _ts(i)) for i in range(20)],
-        "event_id long, value double, ts timestamp",
-    ).coalesce(1).write.parquet(src)
-    stream = clone.readStream.schema(
-        "event_id long, value double, ts timestamp"
-    ).parquet(src)
-    agg = windowed_kpis_stream(stream, ts="ts", value="value", window="10 minutes")
-    out = drain_memory_sink(agg, "complete", state_partitions=3)
-    assert out.count() >= 1
-    assert clone.conf.get(key) == inherited, "drain must restore the pin"
-    # the parent never sees anything
-    assert spark.conf.get(key) == inherited
 
 
 def test_stream_url_frontier_matches_batch_dedup(spark, tmp_path):
@@ -1479,9 +1425,6 @@ def test_python_state_partitions_pin_isolated_and_scale_adaptive(
     )
     assert out.count() > 0
     assert spark.conf.get(key) == before, "pin leaked to the parent session"
-    assert (
-        spark.conf.get("spark.w4h.boundedReplay.cloned", None) is None
-    ), "clone marker leaked to the parent session"
 
     # the default JVM-state clone is a DIFFERENT cache entry and still
     # carries the 8-partition pin after the cores-pinned drain ran
@@ -1547,28 +1490,6 @@ def test_ephemeral_checkpoint_override_and_cleanup(spark, tmp_path, monkeypatch)
         d for d in _os.listdir(base) if d.startswith("w4h_ckpt_")
     ]
     assert leftovers == [], f"ephemeral checkpoints leaked on failure: {leftovers}"
-
-    # pre-try failure path: a conflicting explicit pin raises BEFORE the
-    # stream is built — the checkpoint dir is created lazily inside the
-    # try precisely so this path cannot leak (a leak here was caught
-    # live in /dev/shm during the r17 round)
-    from w4h_integrated_toolkit_spark.streaming.replay import (
-        bounded_replay_session,
-    )
-
-    clone = bounded_replay_session(spark, state_partitions=8)
-    stream3 = clone.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    agg3 = windowed_kpis_stream(stream3, ts="ts", value="value", window="10 minutes")
-    with pytest.raises(ValueError):
-        drain_memory_sink(
-            agg3, "complete", name_prefix="w4h_ckpt_test_", state_partitions=5
-        )
-    leftovers = [
-        d for d in _os.listdir(base) if d.startswith("w4h_ckpt_")
-    ]
-    assert leftovers == [], (
-        f"ephemeral checkpoints leaked on the pin-conflict path: {leftovers}"
-    )
 
 
 def test_ephemeral_checkpoint_defaults_to_shm_only_on_a_local_master(
@@ -1639,15 +1560,7 @@ def test_catch_up_drain_listing_is_bounded_to_the_cores(spark, tmp_path):
         ).collect()
 
     drained, jobs = jobs_in(spark, drain)
-    tracker = spark.sparkContext.statusTracker()
-    tasks = []
-    for jid in jobs:
-        job = tracker.getJobInfo(jid)
-        assert job is not None, f"job {jid} info not retained"
-        for sid in job.stageIds:
-            stage = tracker.getStageInfo(sid)
-            if stage is not None:
-                tasks.append((jid, sid, stage.name, stage.numTasks))
+    tasks = _stage_task_counts(spark, jobs)
     assert tasks, "no jobs observed during the drain"
     wide = [t for t in tasks if t[3] > cores]
     assert wide == [], f"stages wider than {cores} cores: {wide}"

@@ -1039,16 +1039,13 @@ def connected_components(
             if m is None or node < m:
                 comp_min[root] = node
         out = [(node, comp_min[find(node)]) for node in parent]
-        result = pairs.sparkSession.createDataFrame(
+        # provably <= driver_threshold rows, so the producer hints it for
+        # broadcast: createDataFrame's LogicalRDD reports Long.MaxValue
+        # size stats, and an unhinted join would broadcast the OTHER side.
+        # The distributed relation's size is unknown and stays unhinted.
+        return pairs.sparkSession.createDataFrame(
             out, "node long, component long"
-        )
-        # expose which path produced the result (the skipped_groups
-        # accumulator pattern): a driver-path component relation is
-        # provably <= driver_threshold rows and safe to broadcast-hint;
-        # the distributed relation's size is unknown and hinting it
-        # forces an arbitrarily large build side (r16 ADVICE)
-        result.driver_path = True
-        return result
+        ).hint("broadcast")
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
@@ -1090,7 +1087,6 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-    labels.driver_path = False
     return labels
 
 

@@ -1344,16 +1344,15 @@ def q_stream_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts flag=1."""
     from ..streaming.replay import (
         drain_memory_sink,
-        stage_file_source,
+        file_stream,
         windowed_distinct_stream,
     )
 
     prepare_session(spark)
-    path = f"{sf_dir}/events.parquet"
     ev = _t(spark, sf_dir, "events")
-    schema = spark.read.parquet(path).schema
-    src, stage = stage_file_source(path, "w4h_distinct_stream_")
-    stream = spark.readStream.schema(schema).parquet(src)
+    stream, stage = file_stream(
+        spark, f"{sf_dir}/events.parquet", prefix="w4h_distinct_stream_"
+    )
     out = windowed_distinct_stream(
         stream, ts="ts", key="user_id", window="1 hour", watermark="2 hours"
     )
@@ -2110,18 +2109,14 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeping it here round-robin-shuffled every document body below the
     # join — the narrow read drops that corpus-wide exchange (per-row
     # work post-join is |cluster members|, which needs no fan-out).
+    # connected_components hints its driver-path result for broadcast
+    # (provably <= driver_threshold rows); a distributed component
+    # relation stays unhinted and the planner/AQE picks the strategy
     docs_narrow = _t(spark, sf_dir, "documents")
-    # broadcast hint only when connected_components took the driver
-    # union-find path (provably <= driver_threshold rows); a distributed
-    # component relation's size is unknown — leave the strategy to the
-    # planner/AQE rather than force an arbitrary build side (r16 ADVICE)
-    comp_side = (
-        F.broadcast(comp) if getattr(comp, "driver_path", False) else comp
-    )
     j = TX.quality_score(
-        docs_narrow.join(
-            comp_side, docs_narrow["doc_id"] == comp["node"]
-        ).select("doc_id", "text", "component"),
+        docs_narrow.join(comp, docs_narrow["doc_id"] == comp["node"]).select(
+            "doc_id", "text", "component"
+        ),
         keep=("component",),
     ).select(
         "component",

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions import ROLLING_HASH_MOD
 from ..operators.dedup import _gram_expr, _perm_params
+from .replay import drain_memory_sink, file_stream
 
 __all__ = [
     "rowwise_band_rows",
@@ -51,22 +52,6 @@ __all__ = [
 
 
 _SYNTH_EPOCH = 1_704_067_200  # 2024-01-01T00:00:00Z
-
-
-def _staged_file_stream(spark, docs_path: str, prefix: str):
-    """Open ``docs_path`` as a parquet file-stream source via the ONE
-    staging contract (:func:`..streaming.replay.stage_file_source` —
-    a bare file goes behind a symlink dir). Returns ``(stream, stage)``
-    — pass ``stage`` to ``drain_memory_sink(stage_dir=...)`` so
-    repeated gate/parity/bench invocations leave no per-run residue.
-    Unlike replay.file_stream this stays on the CALLER's session (no
-    bounded-replay clone): these runners join nothing static and drain
-    with their own pins."""
-    from .replay import stage_file_source
-
-    source_dir, stage = stage_file_source(docs_path, prefix)
-    schema = spark.read.parquet(docs_path).schema
-    return spark.readStream.schema(schema).parquet(source_dir), stage
 
 
 def _synthetic_event_time(id_col: str = "doc_id"):
@@ -221,11 +206,14 @@ def run_streaming_neardup_batchmode(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Execute the streaming near-dup gate end-to-end synchronously through
-    the REAL streaming engine: parquet file source (the ``doc_id %
-    split_mod == 0`` slice streams in) -> row-local MinHash -> stream-static
-    candidate join against the batch-built corpus index (the other slice)
-    -> exact-Jaccard verification -> memory sink (availableNow). Returns
-    the sink contents: (new_id, corpus_id, jaccard).
+    the REAL streaming engine: :func:`..streaming.replay.file_stream`
+    source (the ``doc_id % split_mod == 0`` slice streams in) -> row-local
+    MinHash -> stream-static candidate join against the batch-built corpus
+    index (the other slice) -> exact-Jaccard verification -> memory sink
+    (availableNow). Returns the sink contents: (new_id, corpus_id,
+    jaccard). The corpus index is read on ``stream.sparkSession``, so both
+    join sides share the bounded-replay session's SQLConf (its
+    state-partition pin included).
 
     This is the registry entry point for `streaming_neardup`: its DuckDB
     oracle is the SAME SQL as `incremental_dedup` (identical split and
@@ -239,14 +227,11 @@ def run_streaming_neardup_batchmode(
     from ..catalog import read_parquet
     from ..operators.dedup import corpus_shingle_sets, lsh_band_rows
 
-    docs = read_parquet(spark, docs_path)
+    stream, stage = file_stream(spark, docs_path, prefix="w4h_neardup_stream_")
+    docs = read_parquet(stream.sparkSession, docs_path)
     corpus = docs.filter(F.col("doc_id") % split_mod != 0)
     corpus_bands = lsh_band_rows(corpus, n, num_perm, bands)
     corpus_sets = corpus_shingle_sets(corpus, n)
-
-    stream, stage = _staged_file_stream(
-        spark, docs_path, prefix="w4h_neardup_stream_"
-    )
     stream = stream.filter(F.col("doc_id") % split_mod == 0)
     out = streaming_neardup_matches(
         stream,
@@ -258,8 +243,6 @@ def run_streaming_neardup_batchmode(
         threshold=threshold,
         allow_unbounded_state=True,
     )
-    from .replay import drain_memory_sink
-
     # drain localizes the (bounded: verified candidate pairs) sink and
     # cleans up the temp view + staging dir — repeated gate/parity/bench
     # invocations leave no per-run residue
@@ -274,7 +257,8 @@ def run_streaming_window_dedup_batchmode(
     horizon: str = "1 hour",
 ) -> DataFrame:
     """Execute the ENGINE-NATIVE streaming exact-dedup gate end-to-end
-    through the real streaming engine: parquet file source → MD5 content
+    through the real streaming engine: ``file_stream`` source (the
+    bounded-replay session and its state-partition pin) → MD5 content
     key → ``dropDuplicatesWithinWatermark`` (watermark-bounded state, no
     Python in the path; see ``stateful.streaming_dedup_within_watermark``)
     → append memory sink (availableNow). Returns the emitted DISTINCT
@@ -291,15 +275,11 @@ def run_streaming_window_dedup_batchmode(
     """
     from .stateful import streaming_dedup_within_watermark
 
-    stream, stage = _staged_file_stream(
-        spark, docs_path, prefix="w4h_windedup_stream_"
-    )
+    stream, stage = file_stream(spark, docs_path, prefix="w4h_windedup_stream_")
     stream = stream.select("doc_id", "text", _synthetic_event_time())
     out = streaming_dedup_within_watermark(
         stream, event_time="event_time", horizon=horizon
     )
-
-    from .replay import drain_memory_sink
 
     drained = drain_memory_sink(
         out, "append", name_prefix="w4h_windedup_stream_", stage_dir=stage
@@ -314,7 +294,8 @@ def run_streaming_url_frontier_batchmode(
     horizon: str = "1 hour",
 ) -> DataFrame:
     """Streaming URL-frontier dedup end-to-end through the real
-    streaming engine: parquet file source → ``web.canonicalize_url`` as
+    streaming engine: ``file_stream`` source (the bounded-replay session
+    and its state-partition pin) → ``web.canonicalize_url`` as
     the frontier key (pure JVM Columns inside the stream projection —
     percent-normalization, tracking-param strip, port policy and all) →
     ``dropDuplicatesWithinWatermark`` on the canonical key (state
@@ -334,9 +315,7 @@ def run_streaming_url_frontier_batchmode(
     """
     from ..operators.web import canonicalize_url
 
-    stream, stage = _staged_file_stream(
-        spark, docs_path, prefix="w4h_urlfrontier_stream_"
-    )
+    stream, stage = file_stream(spark, docs_path, prefix="w4h_urlfrontier_stream_")
     stream = stream.select(
         "doc_id",
         canonicalize_url(url).alias("canonical_url"),
@@ -345,8 +324,6 @@ def run_streaming_url_frontier_batchmode(
     out = stream.withWatermark(
         "event_time", horizon
     ).dropDuplicatesWithinWatermark(["canonical_url"])
-
-    from .replay import drain_memory_sink
 
     drained = drain_memory_sink(
         out, "append", name_prefix="w4h_urlfrontier_stream_", stage_dir=stage

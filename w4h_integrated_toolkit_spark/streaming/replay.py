@@ -25,7 +25,6 @@ client frames unboundedly, viz.py:742-747).
 
 from __future__ import annotations
 
-import contextlib
 import os
 import threading
 import uuid
@@ -294,21 +293,12 @@ def _ephemeral_checkpoint_dir(master: str | None = None) -> str | None:
     except OSError:
         return None
 
-# serializes the conf-pin window (save → set → start → restore) across
-# threads so two concurrent drains can never save each other's pin
-_PIN_LOCK = threading.Lock()
 
-# conf marker stamped on sessions built by bounded_replay_session; its
-# presence tells drain_memory_sink the shuffle-partition pin is already
-# baked into a PRIVATE SQLConf and the shared-session pin path (and its
-# lock) must be skipped entirely
-_CLONE_MARKER = "spark.w4h.boundedReplay.cloned"
-
-# clone cache: (parent java-session identity hash, state_partitions) ->
-# (parent conf-map content digest, clone). Building a clone costs ~3
-# py4j round-trips PER parent conf entry (hundreds of entries →
-# 0.3-0.4 s, measured as the r10 streaming-row regression); a cache hit
-# costs two py4j calls (getAllConfs + toString) plus one md5. The
+# clone cache: (parent java-session identity hash, state_partitions,
+# ns toggle) -> (parent conf-map content digest, clone). Building a
+# clone costs ~3 py4j round-trips PER parent conf entry (hundreds of
+# entries → 0.3-0.4 s, measured as the r10 streaming-row regression); a
+# cache hit costs two py4j calls (getAllConfs + mkString) plus one md5. The
 # content key is a digest of the scala Map's full string rendering —
 # NOT its int hashCode, whose 32-bit collisions would hand a caller a
 # clone carrying a DIFFERENT conf set — so any runtime conf change on
@@ -328,23 +318,23 @@ _CLONE_CACHE_LOCK = threading.Lock()
 def bounded_replay_session(
     spark: SparkSession,
     state_partitions: int | None = BOUNDED_REPLAY_STATE_PARTITIONS,
-    cached: bool = True,
     ns_long: bool = False,
 ) -> SparkSession:
     """Dedicated session for a bounded replay: shares the SparkContext
-    and table cache with ``spark`` but owns a PRIVATE SQLConf, so the
-    state-partition pin (and the parquet ns-timestamp toggle) never
-    mutates the shared session — a concurrent batch query planned on the
-    caller's session can no longer observe the pin, which closes the
-    documented race in the set→start→restore window of
-    :func:`drain_memory_sink`.
+    and table cache with ``spark`` but owns a PRIVATE SQLConf. It is the
+    ONE place a replay's state-partition count is decided: the pin (and
+    the parquet ns-timestamp toggle) is baked into the clone, so it never
+    mutates the shared session, and :func:`drain_memory_sink` never
+    touches a conf — a streaming query snapshots the SQLConf of the
+    session its stream was built on at ``start()``.
 
     ``newSession()`` initializes the clone's SQLConf from the context
     defaults, NOT the parent's runtime values, so every explicitly-set
     parent conf (session timezone, AQE toggles, test shuffle sweeps …)
     is copied over first; entries that are static at this point are
-    skipped. The pin is then applied on top and the session stamped with
-    :data:`_CLONE_MARKER`.
+    skipped. The pin is then applied on top; ``state_partitions=None``
+    inherits the parent's count (a standing query sized to its state
+    volume).
 
     Clones are CACHED per (parent session, pin, ns toggle) and reused
     while the parent's runtime conf map is content-identical (digest of
@@ -355,33 +345,31 @@ def bounded_replay_session(
     conf change rebuilds the clone. ``ns_long=True`` bakes
     ``spark.sql.legacy.parquet.nanosAsLong`` into the clone BEFORE it
     is cached (``file_stream``'s ns-timestamp sources), so the toggle
-    can never leak into clones served for other keys. A caller that
-    intends to mutate the returned clone's conf in any OTHER way must
-    pass ``cached=False``.
+    can never leak into clones served for other keys. Callers must not
+    mutate the returned clone's conf: later replays share it.
     """
     import hashlib
 
     confs = spark._jsparkSession.sessionState().conf().getAllConfs()
-    if cached:
-        key = (spark._jsparkSession.hashCode(), state_partitions, ns_long)
-        # NUL-framed rendering: mkString("\x00") separates entries with
-        # a byte no real Spark conf value carries, unlike toString's
-        # ", " (a value containing ', x -> y' would make two DIFFERENT
-        # maps render identically and serve a wrong-conf clone)
-        conf_digest = hashlib.md5(
-            confs.mkString("\x00").encode("utf-8", "surrogatepass")
-        ).hexdigest()
-        with _CLONE_CACHE_LOCK:
-            hit = _CLONE_CACHE.get(key)
-        if hit is not None and hit[0] == conf_digest:
-            clone = hit[1]
-            # reference-equality context check: screens a stale clone
-            # whose context was stopped and replaced (its parent's
-            # identity hash could be reused by a new java object)
-            if clone._jsparkSession.sparkContext().equals(
-                spark._jsparkSession.sparkContext()
-            ):
-                return clone
+    key = (spark._jsparkSession.hashCode(), state_partitions, ns_long)
+    # NUL-framed rendering: mkString("\x00") separates entries with
+    # a byte no real Spark conf value carries, unlike toString's
+    # ", " (a value containing ', x -> y' would make two DIFFERENT
+    # maps render identically and serve a wrong-conf clone)
+    conf_digest = hashlib.md5(
+        confs.mkString("\x00").encode("utf-8", "surrogatepass")
+    ).hexdigest()
+    with _CLONE_CACHE_LOCK:
+        hit = _CLONE_CACHE.get(key)
+    if hit is not None and hit[0] == conf_digest:
+        clone = hit[1]
+        # reference-equality context check: screens a stale clone
+        # whose context was stopped and replaced (its parent's
+        # identity hash could be reused by a new java object)
+        if clone._jsparkSession.sparkContext().equals(
+            spark._jsparkSession.sparkContext()
+        ):
+            return clone
     clone = spark.newSession()
     it = confs.iterator()
     while it.hasNext():
@@ -394,32 +382,16 @@ def bounded_replay_session(
         clone.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if ns_long:
         clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the marker records WHAT was baked: "none" tells drain_memory_sink
-    # that no pin exists yet, so an explicit drain-time pin on an
-    # unpinned clone is honored (via the legacy set/restore path, which
-    # is race-free on a private conf) instead of silently dropped
-    clone.conf.set(
-        _CLONE_MARKER,
-        str(state_partitions) if state_partitions is not None else "none",
-    )
-    if cached:
-        with _CLONE_CACHE_LOCK:
-            # replace-in-place first so a same-key rebuild at capacity
-            # never evicts an unrelated hot entry; then oldest-first
-            # eviction (dicts preserve insertion order — a full clear()
-            # would drop every hot entry and re-pay the copy cost)
-            _CLONE_CACHE.pop(key, None)
-            while len(_CLONE_CACHE) >= _CLONE_CACHE_MAX:
-                del _CLONE_CACHE[next(iter(_CLONE_CACHE))]
-            _CLONE_CACHE[key] = (conf_digest, clone)
+    with _CLONE_CACHE_LOCK:
+        # replace-in-place first so a same-key rebuild at capacity
+        # never evicts an unrelated hot entry; then oldest-first
+        # eviction (dicts preserve insertion order — a full clear()
+        # would drop every hot entry and re-pay the copy cost)
+        _CLONE_CACHE.pop(key, None)
+        while len(_CLONE_CACHE) >= _CLONE_CACHE_MAX:
+            del _CLONE_CACHE[next(iter(_CLONE_CACHE))]
+        _CLONE_CACHE[key] = (conf_digest, clone)
     return clone
-
-
-# sentinel default for drain_memory_sink's state_partitions: lets the
-# function tell "caller left the default" (resolve to the module
-# constant, or defer to a clone's baked pin) apart from "caller passed a
-# value" (which must NOT be silently overridden by a baked pin)
-_PIN_DEFAULT = object()
 
 
 def drain_memory_sink(
@@ -427,7 +399,6 @@ def drain_memory_sink(
     output_mode: str,
     name_prefix: str = "w4h_sink_",
     stage_dir: str | None = None,
-    state_partitions: int | None = _PIN_DEFAULT,  # type: ignore[assignment]
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (``availableNow`` trigger)
     through a memory sink and return the result LOCALIZED as a fresh batch
@@ -452,25 +423,12 @@ def drain_memory_sink(
     ``session.get_spark``/``prepare_session``) bounds that job to the
     core count rather than one task per file.
 
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    streaming query only (see :data:`BOUNDED_REPLAY_STATE_PARTITIONS`);
-    the session value is restored before the sink is read. Safe because
-    a streaming query snapshots the session conf into its own cloned
-    session at ``start()``. When the stream was built on a
-    :func:`bounded_replay_session` (as :func:`file_stream` does), the
-    pin already lives in that session's PRIVATE SQLConf and this
-    function touches no conf at all — the shared session can never
-    observe it; an EXPLICIT ``state_partitions`` that conflicts with
-    the baked pin raises (the default and ``None`` defer to the baked
-    value). For streams built directly on a shared session
-    (stream-static joins where both sides must share one SQLConf), the
-    legacy path applies: the pin window (set → start → restore) is
-    serialized under a module lock so two concurrent drains can't save
-    each other's pinned value and leak it; a concurrent BATCH query on
-    the same session could still observe the pin for the milliseconds
-    until ``start()`` returns — callers that interleave batch work with
-    drains from other threads should build on a clone or pass
-    ``state_partitions=None``."""
+    The drain reads and writes no conf: the query runs with the SQLConf
+    of the session ``out`` was built on, state-partition count included.
+    Streams opened by :func:`file_stream` carry the bounded-replay pin of
+    their :func:`bounded_replay_session`; a stream built directly on a
+    caller's session runs at that session's
+    ``spark.sql.shuffle.partitions``."""
     import shutil
 
     spark = out.sparkSession
@@ -478,66 +436,21 @@ def drain_memory_sink(
     # per-drain ephemeral checkpoint (RAM-backed when available): fresh
     # mkdtemp per start so a prior run's checkpoint can never be resumed
     # (a resume would skip reprocessing — the opposite of the bounded
-    # replay contract), removed in the finally below. Created lazily
-    # INSIDE the try so the pin-conflict raise above it can't leak a dir
+    # replay contract), removed in the finally below
     ckpt_dir = None
-    conf_key = "spark.sql.shuffle.partitions"
-    marker = spark.conf.get(_CLONE_MARKER, None)
-    pin_baked = marker is not None and marker != "none"
-    if pin_baked:
-        # the pin is pre-baked into the clone's private conf; an
-        # EXPLICIT conflicting drain-time pin must not be silently
-        # dropped (the caller would get the baked value with no signal)
-        if (
-            state_partitions is not _PIN_DEFAULT
-            and state_partitions is not None
-            and str(state_partitions) != marker
-        ):
-            raise ValueError(
-                f"state_partitions={state_partitions} conflicts with the "
-                f"pin baked into this bounded_replay_session clone "
-                f"({marker}); build the clone with the pin you want "
-                "(bounded_replay_session(state_partitions=...)) or drop "
-                "the drain-time argument"
-            )
-        state_partitions = None  # baked pin governs
-    elif state_partitions is _PIN_DEFAULT:
-        state_partitions = BOUNDED_REPLAY_STATE_PARTITIONS
     try:
         ckpt_dir = _ephemeral_checkpoint_dir(spark.sparkContext.master)
-        # the lock serializes the set->start->restore conf window ON A
-        # SHARED-CONF SESSION: a state_partitions=None drain racing a
-        # pinned drain on the same session must not let its start()
-        # snapshot the other drain's temporary pin. A pin-baked clone is
-        # exempt — NO drain ever touches its conf (explicit drain pins
-        # are overridden above), so its start() needs no serialization
-        # and parallel drains on independent clones keep their startup
-        # parallelism.
-        with _PIN_LOCK if not pin_baked else contextlib.nullcontext():
-            saved = (
-                spark.conf.get(conf_key) if state_partitions is not None else None
+        writer = (
+            out.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+        )
+        if ckpt_dir is not None:
+            writer = writer.option(
+                "checkpointLocation", "file://" + os.path.abspath(ckpt_dir)
             )
-            try:
-                if state_partitions is not None:
-                    spark.conf.set(conf_key, str(state_partitions))
-                writer = (
-                    out.writeStream.outputMode(output_mode)
-                    .format("memory")
-                    .queryName(name)
-                    .trigger(availableNow=True)
-                )
-                if ckpt_dir is not None:
-                    writer = writer.option(
-                        "checkpointLocation",
-                        "file://" + os.path.abspath(ckpt_dir),
-                    )
-                q = writer.start()
-            finally:
-                # the query cloned the conf at start(); restore the
-                # session's value (also when start() raises) before
-                # releasing the lock
-                if saved is not None:
-                    spark.conf.set(conf_key, saved)
+        q = writer.start()
         q.awaitTermination()
         # eager: materialize the blocks BEFORE the finally drops the view
         result = spark.table(name).localCheckpoint(eager=True)
@@ -612,28 +525,6 @@ def sessionized_stream(
     )
 
 
-def stage_file_source(
-    path: str, prefix: str = "w4h_stream_"
-) -> tuple[str, str | None]:
-    """A path the parquet file-source can consume: the streaming file
-    source requires a DIRECTORY, so a bare file is staged behind a
-    symlink dir. Returns ``(source_dir, stage)`` — pass ``stage`` to
-    :func:`drain_memory_sink` (``stage_dir=``) so it is removed even on
-    failure. The ONE definition of the staging contract; every
-    streaming gate (this module's :func:`file_stream`, the
-    dedup_stream batchmode runners, q_stream_distinct_users) routes
-    through it so a staging fix can never desynchronize between
-    gates."""
-    import os
-    import tempfile
-
-    if os.path.isfile(path):
-        stage = tempfile.mkdtemp(prefix=prefix)
-        os.symlink(path, os.path.join(stage, os.path.basename(path)))
-        return stage, stage
-    return path, None
-
-
 def file_stream(
     spark: SparkSession,
     path: str,
@@ -646,12 +537,15 @@ def file_stream(
     Returns (stream, stage_dir) — pass stage_dir to
     :func:`drain_memory_sink` so it is removed even on failure.
 
-    The stream is built on a :func:`bounded_replay_session` clone, so
-    neither the ns-timestamp toggle nor the replay state-partition pin
-    ever mutates the caller's session conf. Downstream transformations
-    stay on the clone automatically (they derive from the returned
-    DataFrame); callers that need to JOIN the stream against
-    shared-session static DataFrames should not use this constructor.
+    The ONE constructor of a bounded replay's stream. It is built on a
+    :func:`bounded_replay_session` clone, so neither the ns-timestamp
+    toggle nor the replay state-partition pin ever mutates the caller's
+    session conf. Downstream transformations stay on the clone
+    automatically (they derive from the returned DataFrame). A
+    stream-static join builds its static side on ``stream.sparkSession``
+    so both sides share the clone's SQLConf; the streaming query plans
+    that side inside each micro-batch with the clone's settings either
+    way.
 
     A micro-batch that picks up more than 32 files is listed by a Spark
     job bounded to the cores: the clone inherits the parent's
@@ -665,6 +559,8 @@ def file_stream(
     PYTHON worker round-trip should pass
     :func:`python_state_partitions` instead (see its docstring for the
     measured trade)."""
+    import tempfile
+
     from ..catalog import ns_timestamp_columns
 
     ns_cols = ns_timestamp_columns(path)
@@ -676,8 +572,11 @@ def file_stream(
         spark, state_partitions=state_partitions, ns_long=bool(ns_cols)
     )
     schema = spark.read.parquet(path).schema
-    source_dir, stage = stage_file_source(path, prefix)
-    stream = spark.readStream.schema(schema).parquet(source_dir)
+    stage = None
+    if os.path.isfile(path):
+        stage = tempfile.mkdtemp(prefix=prefix)
+        os.symlink(path, os.path.join(stage, os.path.basename(path)))
+    stream = spark.readStream.schema(schema).parquet(stage or path)
     for c in ns_cols:
         stream = stream.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return stream, stage
