@@ -24,9 +24,11 @@ first-run noise (cold run 4.7s, warm runs 2.4s, identical code) — median
 of 3 makes round-over-round comparison a property of the engine, not of
 which run a cold-codegen or hypervisor CPU-steal window landed in. When
 the three runs disagree sharply (spread > 2x — the steal signature;
-engine noise between warm runs is far smaller), the query is re-run up
-to 2 more times and the 3 fastest are kept, so a steal window can't
-misreport a 3s plan as 30s (observed in round 2).
+engine noise between warm runs is far smaller) or the row's own steal
+window exceeds STEAL_PCT_MAX, the query is re-run up to 2 more times and
+the 3 fastest are kept, so a steal window can't misreport a 3s plan as
+30s (observed in round 2). `timed_row` is that row timer; the spot-bench
+(scripts/spotbench.py) times its rows through it too.
 
 Round-5 adjudication for the record: a bench run started right after the
 pytest suite showed minhash_lsh_pairs at 3.09s vs 2.25s prior (+38%,
@@ -44,9 +46,12 @@ min-of-3) INTERLEAVED through the timed loop — if ANY probe runs slow
 against the deep-warm idle floor (max-of-probes > 1.35x, tightened at
 r15 after the r14 contaminated capture slipped the old median-vs-1.6x
 rule), some external process shared the cores during the measurement
-window and the JSON says so ("loaded_box": true). Readers should trust
-per-query deltas only when loaded_box is false and the calibration_sec
-probes sit near the clean floor.
+window and the JSON says so ("loaded_box": true). The flag is reported,
+never acted on: no capture is ever retried or re-run as a whole. Each row
+carries its own evidence instead (BENCH_DETAIL.json "query_steal": steal
+window, sorted runs, spread, re-measures), so a flagged capture is still
+read row by row — trust a row whose own steal_pct is under 3 and whose
+spread is at most 2.
 
 Round-6 adjudication for the record: user_similarity_topk measured 5.4s
 in-suite on an IDLE box (loadavg 1.48, calibration probes at the warm
@@ -352,25 +357,6 @@ PREFLIGHT_MAX_WAIT = 300.0  # sec; bounded so the driver's timeout is safe
 # 0.095-0.13 band clears it with margin.
 CALIBRATION_CLEAN_FLOOR_SEC = 0.118
 CALIBRATION_LOADED_FACTOR = 1.35
-# Clean-retry wall budget: a flagged first pass that took longer than
-# this forfeits the headline retry rather than risking the driver's
-# timeout (a flagged capture beats a lost one); clean passes finish in
-# ~8-10 min, the r14 contaminated official run (~1.67x inflation)
-# still returned rc=0, so 720 s start + settle + retry stays inside
-# what the driver demonstrably tolerates.
-RETRY_MAX_START_SEC = 720.0
-# r15 POST-MORTEM: the single 90 s settle was not enough — ambient
-# steal bursts on this box run minutes long (the r15 retry's own window
-# was still contended and adopted nothing, so the contaminated first
-# pass stood as the artifact of record for the second round running).
-# r16 policy: up to RETRY_MAX_ATTEMPTS retries, each after a >=300 s
-# settle (longer than any steal burst observed in the r14/r15
-# captures), first clean-qualifying retry adopted; a further attempt is
-# only started while total elapsed stays under RETRY_WALL_BUDGET_SEC
-# (settle time is cheap for the driver — it is idle sleep, not load).
-RETRY_SETTLE_SEC = 300.0
-RETRY_MAX_ATTEMPTS = 2
-RETRY_WALL_BUDGET_SEC = 2400.0
 
 
 def _loadavg() -> float:
@@ -444,6 +430,50 @@ def _calibration_sec(spark, runs: int = 3) -> float:
     return best
 
 
+def timed_row(spark, sf_dir: str, name: str,
+              n_runs: int = 3) -> tuple[float, dict]:
+    """Time one registry entry: ``(median seconds, evidence)``.
+
+    ``evidence`` is the row's own contention witness: ``steal_pct`` over
+    the row's window (None = not measured) and its sorted ``runs``; a
+    median row also carries ``spread`` (max/min of the kept runs) and
+    ``rerun_retries``. A median row is re-measured while its runs
+    disagree by more than 2x (warm same-plan runs agree within ~2x on a
+    quiet box; a larger spread means a run ate a steal window or a
+    one-off cold-codegen hit) or its own steal window exceeds
+    STEAL_PCT_MAX — at most 2 extra runs, keeping the 3 fastest, so one
+    bad window can't skew the median. A 1-run row stays one run."""
+    fn, _ = QUERIES[name]
+
+    def run_once() -> float:
+        t0 = time.time()
+        # noop sink: forces full computation of every output column
+        # (count() would let Catalyst prune projections on map-only
+        # queries)
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return time.time() - t0
+
+    cpu0 = _cpu_stat()
+    runs = [run_once() for _ in range(n_runs)]
+    steal = _steal_pct(cpu0, _cpu_stat())
+    retries = 0
+    while n_runs > 1 and retries < 2 and (
+        max(runs) > 2.0 * min(runs) or _steal_exceeds(steal)
+    ):
+        runs = sorted(runs + [run_once()])[:3]
+        steal = _steal_pct(cpu0, _cpu_stat())
+        retries += 1
+    runs = sorted(runs)
+    evidence = {
+        "steal_pct": _round_or_none(steal),
+        "runs": [round(r, 3) for r in runs],
+    }
+    if n_runs > 1:
+        evidence["spread"] = round(runs[-1] / max(runs[0], 1e-9), 2)
+        evidence["rerun_retries"] = retries
+    return round(runs[len(runs) // 2], 3), evidence
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -485,7 +515,6 @@ def main() -> None:
         steal = _steal_now()
     loadavg_start = load
     cpu_start = _cpu_stat()
-    bench_t0 = time.time()
 
     # no console progress bars: the driver parses the tail of combined
     # output, and \r-progress spam is what squeezed the r6 JSON line out
@@ -514,59 +543,12 @@ def main() -> None:
     cal_before = _calibration_sec(spark)
     print(f"# calibration (before): {cal_before:.3f}s", file=sys.stderr)
 
-    # per-query contention evidence (r16 verdict order #2): the ROUND
-    # flag says "somewhere in this capture a burst happened", which
-    # forfeits every per-query delta; a per-query steal window lets a
-    # contended capture still be read row-by-row (a query whose own
-    # window was clean is trustworthy even when the capture is flagged).
-    # Written to BENCH_DETAIL under "query_steal" — the compact stdout
-    # line is unchanged. Sub-1%-steal rows are trustworthy; rows at >3%
-    # (or with run spread > 2x) carry the burst and should be
-    # adjudicated against their BASELINE.md band, not read as deltas.
+    # per-query contention evidence (r16 verdict order #2): the capture
+    # flag says "somewhere in this capture a burst happened"; each row's
+    # own steal window and spread say whether THAT row can be read as a
+    # delta. Written to BENCH_DETAIL under "query_steal" — the compact
+    # stdout line is unchanged.
     query_steal: dict[str, dict] = {}
-
-    def timed_median(name: str, n_runs: int = 3) -> float:
-        fn, _ = QUERIES[name]
-        q_cpu0 = _cpu_stat()
-        runs: list[float] = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            # noop sink: forces full computation of every output column
-            # (count() would let Catalyst prune projections on map-only
-            # queries)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        if n_runs == 1:
-            med = round(runs[0], 3)
-            query_steal[name] = {
-                "steal_pct": _round_or_none(_steal_pct(q_cpu0, _cpu_stat())),
-                "runs": [round(r, 3) for r in runs],
-            }
-            print(f"# {name}: {med:.3f}s (1 run)", file=sys.stderr)
-            return med
-        # steal-window guard: warm same-plan runs agree within ~2x on a
-        # quiet box; a larger spread means at least one run ate hypervisor
-        # CPU-steal (or a one-off cold-codegen hit) — re-run up to 2 more
-        # times and keep the 3 fastest so one bad window can't skew the
-        # median
-        retries = 0
-        while max(runs) > 2.0 * min(runs) and retries < 2:
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-            runs = sorted(runs)[:3]
-            retries += 1
-        med = round(sorted(runs)[len(runs) // 2], 3)
-        query_steal[name] = {
-            "steal_pct": _round_or_none(_steal_pct(q_cpu0, _cpu_stat())),
-            "runs": [round(r, 3) for r in sorted(runs)],
-            "spread": round(max(runs) / max(min(runs), 1e-9), 2),
-            "rerun_retries": retries,
-        }
-        print(f"# {name}: {med:.3f}s", file=sys.stderr)
-        return med
-
     all_names = list(BENCH_QUERIES) + list(EXTRA_BENCH_QUERIES)
     # probe after each quarter of the run so contention anywhere in the
     # timed window shows up in some probe
@@ -582,12 +564,12 @@ def main() -> None:
         # bench comfortably inside the driver's timeout; headline queries
         # and the heaviest extras (MEDIAN_EXTRA_QUERIES) keep median-of-3
         # (their numbers are compared round-over-round)
-        results[name] = timed_median(
-            name,
-            n_runs=3
-            if (name in BENCH_QUERIES or name in MEDIAN_EXTRA_QUERIES)
-            else 1,
+        median = name in BENCH_QUERIES or name in MEDIAN_EXTRA_QUERIES
+        results[name], query_steal[name] = timed_row(
+            spark, sf_dir, name, 3 if median else 1
         )
+        print(f"# {name}: {results[name]:.3f}s {query_steal[name]}",
+              file=sys.stderr)
         if name in probe_at:
             probes.append(round(_calibration_sec(spark), 3))
             print(f"# calibration probe after {name}: {probes[-1]:.3f}s",
@@ -598,134 +580,18 @@ def main() -> None:
     extra = {n: results[n] for n in EXTRA_BENCH_QUERIES}
 
     steal_pct = _steal_pct(cpu_start, _cpu_stat())
-    probe_flag_at = CALIBRATION_LOADED_FACTOR * CALIBRATION_CLEAN_FLOOR_SEC
     loaded_box = (
-        max(probes) > probe_flag_at
+        max(probes) > CALIBRATION_LOADED_FACTOR * CALIBRATION_CLEAN_FLOOR_SEC
         or loadavg_start > PREFLIGHT_LOAD_MAX
         or _steal_exceeds(steal_pct)
     )
-    retry_attempts: list[dict] = []
-    first_pass = None
-    retry_adopted = False
     if loaded_box:
         print(
-            "# WARNING: bench ran on a contended box — treat per-query "
-            "deltas vs prior rounds as noise and re-measure solo",
+            "# WARNING: bench ran on a contended box — read each row by its "
+            "own query_steal evidence in BENCH_DETAIL.json, and re-measure "
+            "solo before trusting a delta",
             file=sys.stderr,
         )
-    # Clean-retry of the HEADLINE set (r15, widened r16): the flag is
-    # honest but the artifact of record still carries inflated numbers —
-    # r14's official capture misread 0.95x code as 2.05x, and r15's
-    # single 90 s settle landed inside the same steal burst and adopted
-    # nothing. Ambient contention here arrives in bursts measured in
-    # MINUTES, so: up to RETRY_MAX_ATTEMPTS retries, each after a
-    # RETRY_SETTLE_SEC (>=300 s) settle, re-measuring the 35 headline
-    # queries only; the first retry whose own dense probes (before +
-    # every 9 queries + after) and own steal window are clean is
-    # adopted. loadavg is deliberately NOT re-checked here: minutes
-    # after a full pass the 1-min loadavg is dominated by the bench's
-    # OWN residual, while the probes measure directly what loadavg
-    # proxies. When adopted, ALL first-pass contention metadata (probes,
-    # steal, loadavg, calibration-before, and the contended headline
-    # timings) moves into the "first_pass" block so no consumer can
-    # mistake it for the adopted window's; extras are NOT re-measured
-    # and are marked contended.
-    if loaded_box and (time.time() - bench_t0) > RETRY_MAX_START_SEC:
-        retry_attempts.append({
-            "timings": None, "probes": None, "steal_pct": None,
-            "adopted": False, "skipped": "wall budget exceeded",
-        })
-        print("# retry skipped: first pass exceeded the wall budget",
-              file=sys.stderr)
-    elif loaded_box:
-        # every retry's timed_median calls overwrite query_steal rows;
-        # keep the contended first pass's per-query evidence (taken ONCE,
-        # before any retry) so an adopted capture still explains WHY the
-        # first pass read high
-        fp_query_steal = {n: query_steal.get(n) for n in BENCH_QUERIES}
-        for attempt in range(1, RETRY_MAX_ATTEMPTS + 1):
-            if (time.time() - bench_t0) > RETRY_WALL_BUDGET_SEC:
-                retry_attempts.append({
-                    "timings": None, "probes": None, "steal_pct": None,
-                    "adopted": False, "skipped": "wall budget exceeded",
-                })
-                print(
-                    f"# retry {attempt} skipped: total wall budget "
-                    "exceeded — flagged first pass stands",
-                    file=sys.stderr,
-                )
-                break
-            print(
-                f"# retry {attempt}/{RETRY_MAX_ATTEMPTS}: settling "
-                f"{RETRY_SETTLE_SEC:.0f}s for a clean headline window",
-                file=sys.stderr,
-            )
-            time.sleep(RETRY_SETTLE_SEC)
-            r_cpu0 = _cpu_stat()
-            r_probes = [round(_calibration_sec(spark), 3)]
-            print(f"# retry probe (before): {r_probes[0]:.3f}s",
-                  file=sys.stderr)
-            if r_probes[0] > probe_flag_at:
-                retry_attempts.append({
-                    "timings": None, "probes": r_probes, "steal_pct": None,
-                    "adopted": False,
-                })
-                print(
-                    f"# retry {attempt} window still contended before any "
-                    "measurement — not spending the headline re-run",
-                    file=sys.stderr,
-                )
-                continue
-            r_timings: dict[str, float] = {}
-            for i, name in enumerate(BENCH_QUERIES):
-                r_timings[name] = timed_median(name, n_runs=3)
-                if (i + 1) % 9 == 0 and (i + 1) < len(BENCH_QUERIES):
-                    r_probes.append(round(_calibration_sec(spark), 3))
-                    print(f"# retry probe (mid): {r_probes[-1]:.3f}s",
-                          file=sys.stderr)
-            r_probes.append(round(_calibration_sec(spark), 3))
-            print(f"# retry probe (after): {r_probes[-1]:.3f}s",
-                  file=sys.stderr)
-            r_steal = _steal_pct(r_cpu0, _cpu_stat())
-            # unknown steal falls back to probes-only qualification (and
-            # was warned about up front); a MEASURED excess disqualifies
-            retry_adopted = (
-                max(r_probes) <= probe_flag_at
-                and not _steal_exceeds(r_steal)
-            )
-            retry_attempts.append({
-                "timings": r_timings,
-                "probes": r_probes,
-                "steal_pct": _round_or_none(r_steal),
-                "adopted": retry_adopted,
-            })
-            if retry_adopted:
-                print(
-                    "# retry window was clean — headline timings adopted "
-                    "from the retry; extras keep first-pass levels "
-                    "(marked contended)",
-                    file=sys.stderr,
-                )
-                first_pass = {
-                    "flagged": True,
-                    "headline_timings": timings,
-                    "probes": probes,
-                    "steal_pct": _round_or_none(steal_pct),
-                    "loadavg_start": round(loadavg_start, 2),
-                    "calibration_before": round(cal_before, 3),
-                    "query_steal": fp_query_steal,
-                }
-                timings = r_timings
-                probes = r_probes
-                steal_pct = r_steal
-                loaded_box = False
-                break
-            print(
-                f"# retry {attempt} window still contended — "
-                + ("trying again" if attempt < RETRY_MAX_ATTEMPTS
-                   else "first pass stands"),
-                file=sys.stderr,
-            )
 
     total = round(sum(timings.values()), 3)
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -744,18 +610,14 @@ def main() -> None:
             "default": 1,
             "median_of_3": sorted(MEDIAN_EXTRA_QUERIES),
         },
-        # after an adopted retry the first pass's loadavg/calibration
-        # readings belong to the CONTENDED window — they live in
-        # first_pass, and the top level reads null so no consumer can
-        # re-derive loaded_box from stale fields (r15 ADVICE)
-        "loadavg_start": None if retry_adopted else round(loadavg_start, 2),
+        "loadavg_start": round(loadavg_start, 2),
         "loadavg_end": round(_loadavg(), 2),
         # null = steal could not be measured (NOT clean): fall back to
         # the calibration probes when reading this capture
         "steal_pct": _round_or_none(steal_pct),
         "steal_flag_at": STEAL_PCT_MAX,
         "calibration_sec": {
-            "before": None if retry_adopted else round(cal_before, 3),
+            "before": round(cal_before, 3),
             "probes": probes,
             "clean_floor": CALIBRATION_CLEAN_FLOOR_SEC,
             "flag_at": round(
@@ -764,22 +626,11 @@ def main() -> None:
         },
         "loaded_box": loaded_box,
         # per-query steal window + sorted run times (and, for median-of-3
-        # rows, max/min spread): read a contended capture row-by-row —
-        # rows whose own window is sub-1% steal are trustworthy even when
-        # the capture-level flag is up. After an adopted retry the
-        # headline rows carry the ADOPTED window's evidence; the
-        # contended first pass's rows live in first_pass.query_steal.
+        # rows, max/min spread and re-measure count): read a contended
+        # capture row-by-row — a row whose own steal_pct is under 3 and
+        # whose spread is at most 2 is trustworthy even when the
+        # capture-level flag is up
         "query_steal": query_steal,
-        "retry": {
-            "settle_sec": RETRY_SETTLE_SEC,
-            "max_attempts": RETRY_MAX_ATTEMPTS,
-            "attempts": retry_attempts,
-        } if retry_attempts else None,
-        # when a retry was adopted, the extras were NOT re-measured:
-        # they carry first-pass (contended-window) levels — do not
-        # adjudicate extra-query bands from this capture
-        "extra_queries_contended": retry_adopted,
-        "first_pass": first_pass,
         "baseline": "r7 reset: 35 headline queries (BASELINE.md)",
     }
     with open(
@@ -801,13 +652,10 @@ def main() -> None:
             "runs": 3,
             "stat": "median",
             "loaded_box": loaded_box,
-            # after an adopted retry this is the ADOPTED window's steal
-            # (the first pass's reading lives in detail.first_pass), so
-            # the steal_pct>3 reading rule and loaded_box never
-            # contradict each other on the compact line; null = not
-            # measured (read the probes instead)
+            # null = not measured (read the probes instead)
             "steal_pct": _round_or_none(steal_pct),
-            "retry_adopted": retry_adopted,
+            # kept for the line's parsers: no capture is ever retried
+            "retry_adopted": False,
         },
         separators=(",", ":"),
     )

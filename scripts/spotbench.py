@@ -1,4 +1,4 @@
-"""r17 heavy-row spot-bench at a larger scale factor (verdict order #3).
+"""Heavy-row spot-bench at a larger scale factor.
 
 sf0.1 can no longer resolve shuffle-shape wins: ~20 of 35 headline rows
 sit at the fixed-overhead floor (32-vs-8-core scaling ratio <= 1), so
@@ -9,19 +9,24 @@ token-disjoint via scripts/scale_common.replicate_salted, so near-dup /
 feature mass grows LINEARLY, the lesson recorded there) and times the
 top wall-clock queries at two core counts.
 
+Each row is timed by bench.timed_row, the bench's own row timer:
+median of 3, re-measured (at most 2 extra runs, 3 fastest kept) while the
+runs spread over 2x or the row's own steal window exceeds 3%. The
+committed plans/r17/spotbench_baseline.tsv predates that and was taken
+as a plain median of 3.
+
 This is a measurement harness, not a gate: outputs are timings only,
 nothing here feeds the oracle or bench artifacts the driver reads.
 
 Usage:
-  python scripts/spotbench_r17.py gen [factor]      # materialize tables
-  python scripts/spotbench_r17.py run [cpus ...]    # default: 32 8
+  python scripts/spotbench.py gen [factor]      # materialize tables
+  python scripts/spotbench.py run [cpus ...]    # default: 32 8
   (env W4H_SPOT_DIR overrides the data dir, default /dev/shm/w4h_spot)
 """
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(
@@ -30,6 +35,8 @@ sys.path.insert(
 )
 
 from pyspark.sql import functions as F  # noqa: E402
+
+import bench  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 SPOT_DIR = os.environ.get("W4H_SPOT_DIR", "/dev/shm/w4h_spot")
@@ -54,15 +61,6 @@ QUERIES_TO_RUN = [
     "fk_integrity",
     "scd2_apply",
 ]
-
-
-def _steal_window():
-    try:
-        with open("/proc/stat") as f:
-            v = [int(x) for x in f.readline().split()[1:]]
-        return v[7], sum(v[:8])
-    except (OSError, ValueError, IndexError):
-        return -1, -1
 
 
 def gen(factor: int) -> None:
@@ -144,7 +142,6 @@ def gen(factor: int) -> None:
 
 def run(cpus: int) -> dict[str, dict]:
     from w4h_integrated_toolkit_spark.catalog import read_parquet
-    from w4h_integrated_toolkit_spark.plans import QUERIES
     from w4h_integrated_toolkit_spark.session import get_spark
 
     spark = get_spark(f"spotbench-{cpus}", cpus=cpus,
@@ -160,30 +157,9 @@ def run(cpus: int) -> dict[str, dict]:
 
     out: dict[str, dict] = {}
     for name in QUERIES_TO_RUN:
-        fn, _ = QUERIES[name]
-        runs = []
-        s0 = _steal_window()
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, SPOT_DIR).write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        s1 = _steal_window()
-        steal = (
-            100.0 * (s1[0] - s0[0]) / (s1[1] - s0[1])
-            if s0[0] >= 0 and s1[1] > s0[1]
-            else None
-        )
-        med = sorted(runs)[1]
-        out[name] = {
-            "median": round(med, 3),
-            "runs": [round(r, 3) for r in runs],
-            "steal": None if steal is None else round(steal, 2),
-        }
-        print(
-            f"# cpus={cpus} {name}: {med:.3f}s runs="
-            f"{[round(r, 2) for r in runs]} steal={steal}",
-            file=sys.stderr,
-        )
+        med, evidence = bench.timed_row(spark, SPOT_DIR, name, 3)
+        out[name] = {"median": med, **evidence}
+        print(f"# cpus={cpus} {name}: {med:.3f}s {evidence}", file=sys.stderr)
     spark.stop()
     return out
 
@@ -202,7 +178,7 @@ def main() -> None:
         cells = []
         for c in cpu_list:
             r = results[c][name]
-            cells.append(f"{r['median']}\t{r['steal']}")
+            cells.append(f"{r['median']}\t{r['steal_pct']}")
         ratio = (
             round(results[cpu_list[-1]][name]["median"]
                   / max(results[cpu_list[0]][name]["median"], 1e-9), 2)

@@ -1,26 +1,48 @@
 """The bench contention detectors are measurement-integrity code (the
 r14 official capture read 2.05x baseline for 0.95x code because both
 old detectors passed a steal-contaminated run) — pin their arithmetic
-so a refactor can't quietly reopen the hole. Pure-Python: no Spark
-session, bench.py is imported as a module and main() never runs."""
+so a refactor can't quietly reopen the hole, and pin the one contention
+policy: a flagged capture is measured once and each row carries its own
+evidence. Pure-Python: no Spark session — bench.py is imported as a
+module, and main() runs only against mocked Spark and a fake clock."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
+import shutil
+import types
+from unittest.mock import MagicMock
 
 import pytest
+
+ROOT = os.path.join(os.path.dirname(__file__), "..")
+
+# the compact stdout line's key set, which its parsers read
+LINE_KEYS = {
+    "metric", "value", "unit", "queries", "sf", "runs", "stat",
+    "loaded_box", "steal_pct", "retry_adopted",
+}
+
+DETAIL_KEYS = {
+    "metric", "value", "unit", "queries", "extra_queries", "sf", "runs",
+    "stat", "extra_runs", "loadavg_start", "loadavg_end", "steal_pct",
+    "steal_flag_at", "calibration_sec", "loaded_box", "query_steal",
+    "baseline",
+}
+
+
+def _load(path: str, name: str):
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="module")
 def bench():
-    root = os.path.join(os.path.dirname(__file__), "..")
-    spec = importlib.util.spec_from_file_location(
-        "bench_under_test", os.path.join(root, "bench.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return _load(os.path.join(ROOT, "bench.py"), "bench_under_test")
 
 
 def test_steal_pct_arithmetic_and_degenerate_inputs(bench):
@@ -49,16 +71,6 @@ def test_steal_unknown_is_not_clean_and_not_exceeding(bench):
     assert bench._round_or_none(3.14159) == 3.14
 
 
-def test_retry_policy_constants_hold_the_r15_post_mortem_lines(bench):
-    # the r15 retry settled 90 s and landed inside the same steal burst
-    # (bursts run minutes long on this box) — the settle must now
-    # exceed the longest observed burst spacing, with more than one
-    # attempt available, inside a bounded total wall
-    assert bench.RETRY_SETTLE_SEC >= 300.0
-    assert bench.RETRY_MAX_ATTEMPTS >= 2
-    assert bench.RETRY_WALL_BUDGET_SEC <= 3000.0
-
-
 def test_probe_rule_flags_the_r14_contaminated_capture(bench):
     """The recorded r14 driver probes (0.115/0.167/0.219/0.229) must
     trip the max-of-probes rule, and a clean capture's band
@@ -82,3 +94,110 @@ def test_preflight_and_steal_thresholds_hold_the_post_mortem_lines(bench):
     # measured live: clean windows < 1% steal, the contaminated window
     # 10% — the flag line must separate them
     assert 1.0 < bench.STEAL_PCT_MAX < 10.0
+
+
+def test_flagged_capture_is_one_pass(tmp_path, monkeypatch, capsys):
+    """A capture whose probes read far over the flag line is reported as
+    loaded and never re-run: no settle sleep, no retry/first-pass
+    blocks, and the stdout line keeps the key set its parser reads.
+    bench.py runs from a tmp copy so its BENCH_DETAIL.json lands there."""
+    shutil.copy(os.path.join(ROOT, "bench.py"), tmp_path / "bench.py")
+    mod = _load(str(tmp_path / "bench.py"), "bench_one_pass")
+    names = ["q_head_a", "q_head_b", "q_extra"]
+    monkeypatch.setattr(mod, "get_spark", MagicMock())
+    monkeypatch.setattr(
+        mod, "QUERIES", {n: (lambda spark, sf: MagicMock(), None) for n in names}
+    )
+    monkeypatch.setattr(mod, "BENCH_QUERIES", names[:2])
+    monkeypatch.setattr(mod, "EXTRA_BENCH_QUERIES", names[2:])
+    monkeypatch.setattr(mod, "_calibration_sec", lambda spark, runs=3: 0.5)
+    monkeypatch.setattr(mod, "_loadavg", lambda: 0.0)
+    jiffies = iter(range(0, 10**9, 100))
+    monkeypatch.setattr(mod, "_cpu_stat", lambda: (0, next(jiffies)))
+    sleeps: list[float] = []
+    monkeypatch.setattr(mod.time, "sleep", sleeps.append)
+    import w4h_integrated_toolkit_spark.catalog as catalog
+
+    monkeypatch.setattr(catalog, "read_parquet", MagicMock())
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+
+    mod.main()
+
+    assert not [t for t in sleeps if t >= 60.0], sleeps
+    detail = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
+    # one pass: the detail holds no retry or earlier-pass block
+    assert set(detail) == DETAIL_KEYS
+    assert detail["loaded_box"] is True
+    assert set(detail["query_steal"]) == set(names)
+    assert detail["loadavg_start"] == 0.0
+    assert detail["calibration_sec"]["before"] == 0.5
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert len(line.encode()) < 2048
+    parsed = json.loads(line)
+    assert set(parsed) == LINE_KEYS
+    assert parsed["loaded_box"] is True and parsed["retry_adopted"] is False
+    assert set(parsed["queries"]) == set(names[:2])
+
+
+class _FakeBox:
+    """A scripted clock and /proc/stat: each query run takes the next
+    duration and steals the next percentage of a 100-jiffy window."""
+
+    def __init__(self, durations, steal_pcts, steal_known=True):
+        self.t, self.steal, self.total = 0.0, 0, 0
+        self.durations, self.steal_pcts = list(durations), list(steal_pcts)
+        self.steal_known = steal_known
+        self.calls = 0
+
+    def cpu_stat(self):
+        return (self.steal, self.total) if self.steal_known else (-1, -1)
+
+    def query(self, spark, sf_dir):
+        def save():
+            self.t += self.durations.pop(0)
+            self.steal += self.steal_pcts.pop(0)
+            self.total += 100
+            self.calls += 1
+
+        sink = MagicMock()
+        sink.format.return_value.mode.return_value.save.side_effect = save
+        return types.SimpleNamespace(write=sink)
+
+
+def test_timed_row_remeasure_rule(bench, monkeypatch):
+    cases = [
+        # (durations, steal %, steal known, n_runs, calls, kept runs,
+        #  rerun_retries)
+        # spread > 2x re-measures once; the 3 fastest are kept
+        ([1.0, 1.0, 3.0, 1.1], [0] * 4, True, 3, 4, [1.0, 1.0, 1.1], 1),
+        # quiet, agreeing runs: no re-measure
+        ([1.0, 1.2, 1.1], [0] * 3, True, 3, 3, [1.0, 1.1, 1.2], 0),
+        # the row's own steal window over 3% (10 of 300 jiffies)
+        # re-measures; the clean fourth run brings it to 2.5% and stops
+        ([1.0, 1.0, 1.0, 1.0], [10, 0, 0, 0], True, 3, 4, [1.0] * 3, 1),
+        # unknown steal never triggers
+        ([1.0, 1.0, 1.0], [50] * 3, False, 3, 3, [1.0] * 3, 0),
+        # never more than 2 retries, the 3 fastest kept
+        ([3.0, 2.0, 5.0, 1.0, 4.0], [50] * 5, True, 3, 5, [1.0, 2.0, 3.0], 2),
+        # a 1-run row stays one run whatever its window read
+        ([9.0], [50], True, 1, 1, [9.0], None),
+    ]
+    for durations, steal_pcts, known, n_runs, calls, runs, retries in cases:
+        box = _FakeBox(durations, steal_pcts, known)
+        monkeypatch.setattr(bench, "QUERIES", {"q": (box.query, None)})
+        monkeypatch.setattr(bench, "_cpu_stat", box.cpu_stat)
+        monkeypatch.setattr(
+            bench, "time", types.SimpleNamespace(time=lambda: box.t)
+        )
+
+        med, evidence = bench.timed_row(MagicMock(), "/data/sf0.1", "q", n_runs)
+
+        assert box.calls == calls, durations
+        assert evidence["runs"] == runs
+        assert med == runs[len(runs) // 2]
+        assert evidence.get("rerun_retries") == retries
+        if retries is not None:
+            assert evidence["spread"] == round(runs[-1] / runs[0], 2)
+        if not known:
+            assert evidence["steal_pct"] is None

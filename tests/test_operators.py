@@ -602,8 +602,12 @@ def test_neardup_pairs_max_bucket_unchanged_on_non_degenerate_data(spark):
 def test_neardup_pairs_identical_flood_skipped_not_oom(spark):
     """An exact-duplicate flood (unsplittable by any content-defined
     function) is skipped by the kernel rather than pairing O(b²):
-    flood pairs are absent, pairs outside the flood survive."""
-    from w4h_integrated_toolkit_spark.operators.similarity import neardup_pairs
+    flood pairs are absent, pairs outside the flood survive, and the
+    counted form returns the skip so a recall-contractual caller can
+    tell "no near-dups" from "flood skipped"."""
+    from w4h_integrated_toolkit_spark.operators.similarity import (
+        neardup_pairs_counted,
+    )
 
     flood = [[7.0] + [1.0] * 7] * 30
     rows = [Row(vec_id=100 + i, embedding=v) for i, v in enumerate(flood)]
@@ -611,40 +615,30 @@ def test_neardup_pairs_identical_flood_skipped_not_oom(spark):
         Row(vec_id=1, embedding=[5.0, -3.0, 2.0, 1.0, 0.0, 0.0, 1.0, -1.0]),
         Row(vec_id=2, embedding=[5.0, -3.0, 2.0, 1.0, 0.0, 0.0, 1.0, -1.0]),
     ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = neardup_pairs(df, threshold=0.999, dim=8, n_planes=1, max_bucket=8)
-    pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
-    assert (1, 2) in pairs
-    assert not any(a >= 100 and b >= 100 for a, b in pairs)
-    # the drop is no longer silent: the result carries an accumulator
-    # counting skipped sub-buckets, so a recall-contractual caller can
-    # distinguish "no near-dups" from "flood skipped" (ADVICE r15 #2)
-    assert out.skipped_groups.value >= 1
+    schema = "vec_id long, embedding array<double>"
+    kw = dict(threshold=0.999, dim=8, n_planes=1, max_bucket=8)
 
-    # clean data: zero skips, the accumulator reads 0 after the action
-    clean = spark.createDataFrame(rows[-2:], "vec_id long, embedding array<double>")
-    ok = neardup_pairs(clean, threshold=0.999, dim=8, n_planes=1, max_bucket=8)
-    assert {(r["id_a"], r["id_b"]) for r in ok.collect()} == {(1, 2)}
-    assert ok.skipped_groups.value == 0
-
-    # the explicit-count wrapper (r16, ADVICE r15 #4): one action, the
-    # count arrives as a return value that survives chaining, and a
-    # SECOND action on the persisted result replays cache instead of
-    # re-running (and re-counting) the kernel
-    from w4h_integrated_toolkit_spark.operators.similarity import (
-        neardup_pairs_counted,
-    )
-
-    pairs_df, skipped = neardup_pairs_counted(
-        df, threshold=0.999, dim=8, n_planes=1, max_bucket=8
-    )
+    out, skipped = neardup_pairs_counted(spark.createDataFrame(rows, schema), **kw)
     try:
         assert skipped >= 1
-        chained = pairs_df.filter("id_a < id_b")  # chaining is now safe
+        pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
+        assert (1, 2) in pairs
+        assert not any(a >= 100 and b >= 100 for a, b in pairs)
+        # the count is a return value, so chaining keeps it
+        chained = out.filter("id_a < id_b")
         assert (1, 2) in {(r["id_a"], r["id_b"]) for r in chained.collect()}
-        assert int(pairs_df.skipped_groups.value) == skipped  # no double count
     finally:
-        pairs_df.unpersist()
+        out.unpersist()
+
+    # clean data: zero skips
+    ok, skipped = neardup_pairs_counted(
+        spark.createDataFrame(rows[-2:], schema), **kw
+    )
+    try:
+        assert skipped == 0
+        assert {(r["id_a"], r["id_b"]) for r in ok.collect()} == {(1, 2)}
+    finally:
+        ok.unpersist()
 
 
 def test_semantic_dedup_max_cluster_subsplit_and_flood_raise(spark):

@@ -832,12 +832,23 @@ def test_bench_query_lists_resolve_against_registry():
     the external driver's bench run and lose a round of perf signal —
     validate every name (headline + extra) against the live registry, and
     that the two lists don't overlap (an entry in both would double-count
-    wall time)."""
+    wall time). The spot-bench's list gets the same check: a renamed
+    entry would otherwise crash a factor-4/16 run only when it runs."""
+    import importlib.util
+
     import bench
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    spec = importlib.util.spec_from_file_location(
+        "spotbench", os.path.join(root, "scripts", "spotbench.py")
+    )
+    spotbench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(spotbench)
 
     missing = [
         n
         for n in bench.BENCH_QUERIES + bench.EXTRA_BENCH_QUERIES
+        + spotbench.QUERIES_TO_RUN
         if n not in QUERIES
     ]
     assert not missing, f"bench names not in registry: {missing}"

@@ -25,6 +25,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
+from pyspark import Accumulator
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -391,23 +392,33 @@ def neardup_pairs(
     whose sign bits refuse to spread (the +3 slack bits make that a
     tail event, not an impossibility) and the rare bystander pair
     sharing ALL the flood's sub-split bits (stress-pinned trade). The
-    pair-set output has no row to hang a flag on, so the skip is
-    counted on a Spark ACCUMULATOR instead: the returned DataFrame
-    carries it as ``.skipped_groups`` — after any full action,
-    ``result.skipped_groups.value`` is the number of dropped
-    sub-buckets (0 = every group was paired; a recall-contractual
-    caller asserts that, or raises ``max_bucket``/``n_planes`` until
-    no skip can trigger, or passes ``max_bucket=None`` to disable the
-    guard — the oracle-gated registry queries do exactly that: the
-    parity law needs the uncapped semantics). The count is a standard
-    Spark accumulator with accumulator semantics, so read it as a FLAG,
-    not a tally: task retries/speculation can over-count, every action
-    on the handle adds another full pass (two ``collect()`` calls
-    double it), and the attribute lives on THIS returned object only —
-    any further transformation (``.filter(...)`` etc.) returns a new
-    DataFrame without it, so grab the handle before chaining
-    (ADVICE r15 #2).
+    pair-set output has no row to hang a flag on: a caller that needs
+    to know whether any group was skipped uses
+    :func:`neardup_pairs_counted`, which returns the skip count next to
+    the pairs (0 = every group was paired). A recall-contractual caller
+    asserts 0, or raises ``max_bucket``/``n_planes`` until no skip can
+    trigger, or passes ``max_bucket=None`` to disable the guard — the
+    oracle-gated registry queries do exactly that: the parity law needs
+    the uncapped semantics.
     """
+    return _neardup_pairs(
+        df, threshold=threshold, dim=dim, n_planes=n_planes, id_col=id_col,
+        vec_col=vec_col, seed=seed, max_bucket=max_bucket,
+    )[0]
+
+
+def _neardup_pairs(
+    df: DataFrame,
+    threshold: float = 0.9,
+    dim: int = 64,
+    n_planes: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    max_bucket: int | None = 4096,
+) -> tuple[DataFrame, Accumulator]:
+    """:func:`neardup_pairs`'s body: the lazy pairs and the accumulator
+    its kernel adds 1 to for every skipped sub-bucket."""
     import numpy as np
 
     planes = hyperplanes(dim, n_planes, seed)
@@ -447,15 +458,12 @@ def neardup_pairs(
     out = b.groupBy(*group_cols).applyInPandas(
         block, "id_a long, id_b long, cos double"
     )
-    out.skipped_groups = skipped_acc
-    return out
+    return out, skipped_acc
 
 
 def neardup_pairs_counted(df: DataFrame, **kwargs) -> tuple[DataFrame, int]:
-    """:func:`neardup_pairs` with the skip count returned EXPLICITLY —
-    the robust form of the ``.skipped_groups`` attribute (r15 ADVICE:
-    the monkey-patched handle vanishes on any chained transformation
-    and over-counts on repeated actions).
+    """:func:`neardup_pairs` with the count of skipped sub-buckets
+    returned next to the pairs.
 
     Runs exactly one full action against a persisted result and reads
     the accumulator once: ``(pairs, skipped_count)``. Because the
@@ -466,8 +474,7 @@ def neardup_pairs_counted(df: DataFrame, **kwargs) -> tuple[DataFrame, int]:
     it as a flag: 0 means every group was paired). The caller owns the
     persist: ``pairs.unpersist()`` when done.
     """
-    pairs = neardup_pairs(df, **kwargs)
-    acc = pairs.skipped_groups
+    pairs, acc = _neardup_pairs(df, **kwargs)
     pairs = pairs.persist()
     pairs.count()
     return pairs, int(acc.value)
