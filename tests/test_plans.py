@@ -1847,3 +1847,16 @@ def test_dashboard_operator_job_budget(spark, dashboard_tables, name):
     assert rows, f"{name}: the fixture must produce rows"
     assert len(jobs) <= DASHBOARD_JOB_BUDGETS[name], (
         f"{name} ran {len(jobs)} jobs, budget {DASHBOARD_JOB_BUDGETS[name]}")
+
+
+def test_plans_queries_module_reached_through_importlib():
+    """``plans.queries`` is the registry's entry-point function and
+    shadows its own submodule; importlib reaches the module, whose
+    QUERIES is the package's."""
+    import importlib
+
+    from w4h_integrated_toolkit_spark import plans
+
+    mod = importlib.import_module("w4h_integrated_toolkit_spark.plans.queries")
+    assert mod.QUERIES is plans.QUERIES
+    assert plans.queries is mod.queries and callable(plans.queries)

@@ -87,8 +87,9 @@ def _file_stream(spark, tmp_path, rows, schema):
 
 
 def test_stateful_running_user_stats(spark, tmp_path):
-    """applyInPandasWithState: running per-user KPIs with constant-size
-    keyed state through the real streaming engine."""
+    """Running per-user KPIs (a native streaming aggregation: four
+    aggregates per user in the JVM state store) through the real
+    streaming engine."""
     from w4h_integrated_toolkit_spark.streaming.stateful import running_user_stats
 
     rows = [(1, _ts(m), float(m)) for m in range(4)] + [(2, _ts(0), 100.0)]
@@ -106,6 +107,125 @@ def test_stateful_running_user_stats(spark, tmp_path):
     assert res[1]["n"] == 4 and res[1]["mean"] == 1.5
     assert res[1]["min_value"] == 0.0 and res[1]["max_value"] == 3.0
     assert res[2]["n"] == 1 and res[2]["total"] == 100.0
+
+
+def test_running_user_stats_laws(spark, tmp_path, capsys):
+    """Over four micro-batches (one file each) in which users recur, each
+    batch emits one row per user it touched, and that row equals a
+    pure-Python count/sum/min/max over every file consumed so far. The
+    final row per user equals running_user_stats over the whole batch
+    frame. NULL and NaN values are skipped; an all-NULL/NaN user (9)
+    gets n = 0, total 0.0 and NULL mean/min/max. The output schema is
+    _STATS_OUT on both paths, and the started query's plan is a native
+    aggregation, with no Python state operator."""
+    import math
+
+    from w4h_integrated_toolkit_spark.streaming.stateful import (
+        _STATS_OUT,
+        running_user_stats,
+    )
+
+    nan = float("nan")
+    files = [  # each file's user set is distinct, so it names its batch
+        [(1, 1.0), (1, nan), (2, 5.0), (9, None)],
+        [(1, 4.0), (2, None), (3, -2.5), (9, nan)],
+        [(1, -1.5), (3, 7.0), (9, None), (1, 0.5)],
+        [(2, 10.0), (5, 3.0), (5, nan)],
+    ]
+    src = str(tmp_path / "src")
+    for rows in files:
+        spark.createDataFrame(
+            [(u, _ts(0), v) for u, v in rows],
+            "user_id long, ts timestamp, value double",
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    def model(rows):
+        out = {}
+        for u, v in rows:
+            n, total, mn, mx = out.get(u, (0, 0.0, None, None))
+            if v is not None and not math.isnan(v):
+                n, total = n + 1, total + v
+                mn = v if mn is None else min(mn, v)
+                mx = v if mx is None else max(mx, v)
+            out[u] = (n, total, mn, mx)
+        return {
+            u: (u, n, total, total / n if n else None, mn, mx)
+            for u, (n, total, mn, mx) in out.items()
+        }
+
+    batches = {}
+
+    def sink(df, batch_id):
+        assert df.schema == _STATS_OUT
+        batches[batch_id] = [tuple(r) for r in df.collect()]
+
+    sch = spark.read.parquet(src).schema
+    stream = spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(src)
+    q = (
+        running_user_stats(stream)
+        .writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    q.explain(True)
+    plan = capsys.readouterr().out
+    assert "StateStoreSave" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+
+    by_users = {frozenset(u for u, _ in rows): rows for rows in files}
+    seen, latest = [], {}
+    emitted = [rows for _, rows in sorted(batches.items()) if rows]
+    assert len(emitted) == len(files)
+    for rows in emitted:
+        users = [r[0] for r in rows]
+        assert len(users) == len(set(users)), "one row per user per batch"
+        seen += by_users[frozenset(users)]
+        want = model(seen)
+        assert {r[0]: r for r in rows} == {u: want[u] for u in users}
+        latest.update({r[0]: r for r in rows})
+
+    everything = model([r for rows in files for r in rows])
+    assert latest == everything
+    whole = spark.read.parquet(src)
+    batch_out = running_user_stats(whole)
+    assert batch_out.schema == _STATS_OUT
+    assert {r["user_id"]: tuple(r) for r in batch_out.collect()} == everything
+    assert everything[1] == (1, 4, 4.0, 1.0, -1.5, 4.0)  # the NaN is skipped
+    assert everything[9] == (9, 0, 0.0, None, None, None)
+
+
+def test_checkpoint_file_manager_pinned_on_local_masters_only(spark):
+    """Checkpoint files are renamed through FileSystem.rename on a local
+    master, so no commit forks a readlink: get_spark carries the class,
+    prepare_session sets it on a local[...] session, and leaves the conf
+    alone on a cluster master."""
+    from types import SimpleNamespace
+
+    from w4h_integrated_toolkit_spark.session import prepare_session
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    cls = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert spark.conf.get(key) == cls
+
+    local = spark.newSession()
+    local.conf.unset(key)
+    assert local.conf.get(key, None) is None
+    assert prepare_session(local).conf.get(key) == cls
+
+    confs = {}
+    cluster = SimpleNamespace(
+        conf=SimpleNamespace(set=confs.__setitem__),
+        sparkContext=SimpleNamespace(master="spark://h:7077", defaultParallelism=4),
+    )
+    prepare_session(cluster)
+    assert key not in confs
+    assert confs["spark.sql.session.timeZone"] == "UTC"
 
 
 def test_streaming_exact_dedup_emits_each_content_once(spark, tmp_path):

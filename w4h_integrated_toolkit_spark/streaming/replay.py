@@ -250,7 +250,12 @@ def python_state_partitions(spark: SparkSession, cap: int = 32) -> int:
     JVM-state ops measured the OPPOSITE direction (stream-stream join
     2.8 s at 8 → 7.0 s at 32 — four stores per partition), so this
     helper is only for Python-stateful drains. Scale-adaptive by
-    construction: an 8-core run derives 8."""
+    construction: an 8-core run derives 8.
+
+    ``stateful.running_user_stats`` is no longer Python-stateful: it is a
+    native streaming aggregation with JVM state, so this count is not
+    sized for it (a caller that still passes it gets a cores-sized JVM
+    state store)."""
     return max(1, min(cap, spark.sparkContext.defaultParallelism))
 
 

@@ -3,18 +3,23 @@
 The reference accumulates *all* streamed rows into client-side session
 frames and recomputes running KPIs and per-user trajectory paths each tick
 (viz.py:737-821) — unbounded memory by design. The Spark-native shape is
-keyed state in the state store via ``applyInPandasWithState``: per-key
-state is O(counters + tail), not O(rows seen), and it is partitioned
-across executors (the client-frame approach can never leave one machine).
+keyed state in the state store: per-key state is O(counters + tail), not
+O(rows seen), and it is partitioned across executors (the client-frame
+approach can never leave one machine).
 
 - :func:`running_user_stats` — T6: running n/mean/min/max per user,
   emitted every micro-batch (the "entire-so-far KPIs" the reference
-  recomputes from the full frame each tick).
+  recomputes from the full frame each tick). Its state is four
+  aggregates, so it is a native streaming aggregation: the state lives in
+  the JVM state store and no Python worker runs per trigger.
 - :func:`trajectory_tails` — T7: per-user trajectory tail (last K points,
   time-ordered), the map-polyline state, bounded at K points per user.
+  This and the other operators below keep state no built-in aggregate
+  can express, so they run ``applyInPandasWithState`` with an explicit
+  Spark SQL state schema (the state store serializes exactly those
+  columns).
 
-Both emit per micro-batch (update semantics). State schema is explicit
-Spark SQL types — the state store serializes exactly these columns.
+All emit per micro-batch (update semantics).
 """
 
 from __future__ import annotations
@@ -38,22 +43,15 @@ __all__ = [
     "streaming_ewma",
 ]
 
+# ``n`` and ``total`` are never NULL (a count, and a sum coalesced to 0.0)
 _STATS_OUT = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
+        T.StructField("n", T.LongType(), nullable=False),
+        T.StructField("total", T.DoubleType(), nullable=False),
         T.StructField("mean", T.DoubleType()),
         T.StructField("min_value", T.DoubleType()),
         T.StructField("max_value", T.DoubleType()),
-    ]
-)
-_STATS_STATE = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-        T.StructField("mn", T.DoubleType()),
-        T.StructField("mx", T.DoubleType()),
     ]
 )
 
@@ -61,47 +59,39 @@ _STATS_STATE = T.StructType(
 def running_user_stats(
     events: DataFrame, user: str = "user_id", value: str = "value"
 ) -> DataFrame:
-    """Running per-user KPIs over a *streaming* DataFrame.
+    """Running per-user KPIs (``_STATS_OUT``: user_id, n, total, mean,
+    min_value, max_value) over a streaming or a batch DataFrame.
 
-    One state row of four scalars per user — constant-size state however
-    long the stream runs (vs the reference's grow-forever frames). Keys are
-    hash-partitioned by the state store, so throughput scales with
-    executors.
+    A native ``groupBy().agg(count, sum, min, max)``: on a stream the
+    four aggregates per user are the state, kept in the JVM state store
+    and hash-partitioned by key — constant-size state however long the
+    stream runs (vs the reference's grow-forever frames), and no Python
+    worker on the trigger path. In update mode each micro-batch emits
+    one row per user it touched, with that user's totals so far; on a
+    batch frame the same plan gives the one-shot answer.
+
+    NULL and NaN values are skipped (NaN is mapped to NULL first, as
+    pandas skips it). ``n`` counts the values kept, ``total`` is 0.0 and
+    ``mean`` NULL while ``n`` is 0, and a user whose values are all
+    NULL/NaN gets NULL ``min_value``/``max_value``.
     """
+    from pyspark.sql import functions as F
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, total, mn, mx = state.get
-        else:
-            n, total, mn, mx = 0, 0.0, float("inf"), float("-inf")
-        for pdf in pdfs:
-            v = pdf[value]
-            n += int(v.count())
-            total += float(v.sum())
-            mn = min(mn, float(v.min()))
-            mx = max(mx, float(v.max()))
-        state.update((n, total, mn, mx))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n": [n],
-                "total": [total],
-                "mean": [total / n if n else None],
-                "min_value": [mn],
-                "max_value": [mx],
-            }
-        )
-
-    return events.groupBy(user).applyInPandasWithState(
-        update,
-        outputStructType=_STATS_OUT,
-        stateStructType=_STATS_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    v = F.col(value).cast("double")
+    kept = F.when(~F.isnan(v), v)
+    stats = events.groupBy(F.col(user).cast("long").alias("user_id")).agg(
+        F.count(kept).alias("n"),
+        F.coalesce(F.sum(kept), F.lit(0.0)).alias("total"),
+        F.min(kept).alias("min_value"),
+        F.max(kept).alias("max_value"),
+    )
+    return stats.select(
+        "user_id",
+        "n",
+        "total",
+        F.when(F.col("n") > 0, F.col("total") / F.col("n")).alias("mean"),
+        "min_value",
+        "max_value",
     )
 
 
