@@ -1849,6 +1849,39 @@ def test_dashboard_operator_job_budget(spark, dashboard_tables, name):
         f"{name} ran {len(jobs)} jobs, budget {DASHBOARD_JOB_BUDGETS[name]}")
 
 
+# Jobs each near-dup builder launches BEFORE any action (localCheckpoint
+# barriers and their AQE stages), measured at this fixture's scale with
+# documents opened first. A barrier added or removed shows up here; name
+# any change to this map, and why, in CHANGES.md.
+NEARDUP_BUILD_JOB_BUDGETS = {
+    "bloom_decontaminate": 4,
+    "containment_pairs": 0,
+    "dedup_clusters": 12,
+    "dedup_keep_best": 12,
+    "incremental_dedup": 6,
+    "minhash_lsh_pairs": 10,
+    "ngram_jaccard_pairs": 0,
+}
+
+
+def test_neardup_build_job_budget(spark):
+    from w4h_integrated_toolkit_spark.plans.queries import _t, _tw
+
+    # the first open of a table runs a schema-inference job of its own
+    _t(spark, SF_DIR, "documents")
+    _tw(spark, SF_DIR, "documents")
+    census = {
+        name: len(jobs_in(spark, lambda: QUERIES[name][0](spark, SF_DIR))[1])
+        for name in NEARDUP_BUILD_JOB_BUDGETS
+    }
+    over = {
+        n: (c, NEARDUP_BUILD_JOB_BUDGETS[n])
+        for n, c in census.items()
+        if c > NEARDUP_BUILD_JOB_BUDGETS[n]
+    }
+    assert not over, f"build jobs over budget (jobs, budget): {over}; census {census}"
+
+
 def test_plans_queries_module_reached_through_importlib():
     """``plans.queries`` is the registry's entry-point function and
     shadows its own submodule; importlib reaches the module, whose

@@ -266,6 +266,76 @@ def test_streaming_exact_dedup_emits_each_content_once(spark, tmp_path):
     assert keep[md5("aaa")] in (1, 4)
 
 
+def test_pandas_state_operators_pin_schema_on_empty_and_null_batches(
+    spark, tmp_path
+):
+    """Every ``applyInPandasWithState`` operator keeps its declared output
+    schema, and the Python types of its values, on a bounded replay of a
+    zero-row file plus a file whose value columns are all NULL. Those are
+    the batches that reach pyspark's serializer as empty or all-NA pandas
+    frames (the pandas ``FutureWarning`` on concatenating them), so a
+    pandas upgrade that changes their dtypes fails here first."""
+    from w4h_integrated_toolkit_spark.streaming import stateful as S
+    from w4h_integrated_toolkit_spark.streaming.replay import (
+        drain_memory_sink,
+        file_stream,
+        python_state_partitions,
+    )
+
+    schema = (
+        "doc_id long, text string, user_id long, event_id long, "
+        "event_type string, ts timestamp, value double, lat double, lon double"
+    )
+    src = str(tmp_path / "src")
+    spark.createDataFrame([], schema).coalesce(1).write.parquet(src)
+    spark.createDataFrame(
+        [(i, None, i % 2, i, "tap", _ts(i), None, None, None) for i in range(6)],
+        schema,
+    ).coalesce(1).write.mode("append").parquet(src)
+
+    cases = {
+        # name: (operator, output mode, declared schema, expected row count,
+        #        Python type (or None) per column over the emitted rows)
+        "exact_dedup": (
+            S.streaming_exact_dedup, "update", S._DEDUP_OUT, 1,
+            (type(None), int),
+        ),
+        "trajectory_tails": (
+            lambda st: S.trajectory_tails(st, tail=3), "update", S._TRAJ_OUT, 2,
+            (int, int, list),
+        ),
+        "anomaly_flags": (
+            S.streaming_anomaly_flags, "append", S._ANOM_OUT, 0, (),
+        ),
+        "debounce": (
+            S.streaming_debounce, "update", S._DEBOUNCE_OUT, 2,
+            (int, str, int, int),
+        ),
+        "ewma": (
+            S.streaming_ewma, "update", S._EWMA_OUT, 6,
+            (int, int, int, type(None), type(None)),
+        ),
+    }
+    got = {}
+    for name, (op, mode, declared, n_rows, types) in cases.items():
+        stream, stage = file_stream(
+            spark, src, state_partitions=python_state_partitions(spark)
+        )
+        out = drain_memory_sink(
+            op(stream), mode, name_prefix=f"w4h_pin_{name}_", stage_dir=stage
+        )
+        assert out.schema == declared, (name, out.schema)
+        got[name] = out.collect()
+        assert len(got[name]) == n_rows, (name, got[name])
+        for r in got[name]:
+            assert tuple(type(v) for v in r) == types, (name, r)
+    # points without coordinates are counted but never drawn
+    assert sorted(tuple(r) for r in got["trajectory_tails"]) == [
+        (0, 3, []),
+        (1, 3, []),
+    ]
+
+
 def test_stateful_trajectory_tails(spark, tmp_path):
     from w4h_integrated_toolkit_spark.streaming.stateful import trajectory_tails
 
@@ -1421,54 +1491,45 @@ def test_bounded_replay_session_clone_isolation(spark, tmp_path):
 
 
 def test_bounded_replay_session_clone_cache(spark):
-    """Clone reuse contract: while the parent's runtime conf map is
-    unchanged, bounded_replay_session returns the SAME clone (the py4j
-    conf-copy loop was the dominant bounded-replay cost); any parent
-    conf change forces a fresh clone that carries the new value;
-    distinct pins get distinct cache slots; and an unpinned clone
-    (``state_partitions=None``) inherits the parent's count."""
+    """Clone contract per call: the clone carries the parent's runtime
+    conf as it is at the call (a later parent change shows up in the
+    next clone), each call applies its own pin, an unpinned clone
+    (``state_partitions=None``) inherits the parent's count, and the
+    ``ns_long`` toggle stays on the clone it was asked for."""
     from w4h_integrated_toolkit_spark.streaming.replay import (
         bounded_replay_session,
     )
 
-    a = bounded_replay_session(spark)
-    b = bounded_replay_session(spark)
-    assert a is b, "unchanged parent conf must hit the clone cache"
-
+    key = "spark.sql.shuffle.partitions"
     spark.conf.set("spark.w4h.test.cacheMarker", "v1")
     try:
         c = bounded_replay_session(spark)
-        assert c is not a, "parent conf change must rebuild the clone"
         assert c.conf.get("spark.w4h.test.cacheMarker") == "v1"
-        d = bounded_replay_session(spark)
-        assert d is c
+        spark.conf.set("spark.w4h.test.cacheMarker", "v2")
+        assert (
+            bounded_replay_session(spark).conf.get("spark.w4h.test.cacheMarker")
+            == "v2"
+        )
         e = bounded_replay_session(spark, state_partitions=4)
-        assert e is not c
-        assert e.conf.get("spark.sql.shuffle.partitions") == "4"
-        assert c.conf.get("spark.sql.shuffle.partitions") != "4"
+        assert e.conf.get(key) == "4"
+        assert c.conf.get(key) != "4"
     finally:
         spark.conf.unset("spark.w4h.test.cacheMarker")
 
-    key = "spark.sql.shuffle.partitions"
     unpinned = bounded_replay_session(spark, state_partitions=None)
     assert unpinned.conf.get(key) == spark.conf.get(key), (
         "unpinned clone must inherit"
     )
 
-    # ns_long (the file_stream ns-source path): its OWN cache slot with
-    # the toggle baked pre-cache — repeat ns streams hit the cache, and
-    # the toggle never appears in the non-ns slot's clone
-    base = bounded_replay_session(spark)
-    ns1 = bounded_replay_session(spark, ns_long=True)
-    ns2 = bounded_replay_session(spark, ns_long=True)
-    assert ns1 is ns2 and ns1 is not base
-    assert ns1.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
-    assert (
-        bounded_replay_session(spark).conf.get(
-            "spark.sql.legacy.parquet.nanosAsLong", "false"
+    # ns_long (the file_stream ns-source path): the toggle is set on that
+    # clone only, never on the parent or on a clone made without it
+    ns = bounded_replay_session(spark, ns_long=True)
+    assert ns.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    for other in (bounded_replay_session(spark), spark):
+        assert (
+            other.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+            != "true"
         )
-        != "true"
-    )
 
 
 def test_stream_url_frontier_matches_batch_dedup(spark, tmp_path):
@@ -1524,9 +1585,9 @@ def test_python_state_partitions_pin_isolated_and_scale_adaptive(
     """r17 conf-leak regression (the r10 lesson, re-pinned for the
     cores-sized Python-stateful pin): (a) python_state_partitions tracks
     defaultParallelism capped at 32; (b) a debounce drain carrying that
-    pin mutates NOTHING on the parent session; (c) the clone cache keys
-    on the pin, so a default (JVM-state, 8) clone requested after the
-    cores-pinned drain still carries 8 — no cross-query pin poisoning."""
+    pin mutates NOTHING on the parent session; (c) a default (JVM-state,
+    8) clone requested after the cores-pinned drain still carries 8 — no
+    cross-query pin poisoning."""
     from w4h_integrated_toolkit_spark.streaming.replay import (
         BOUNDED_REPLAY_STATE_PARTITIONS,
         bounded_replay_session,
@@ -1546,8 +1607,8 @@ def test_python_state_partitions_pin_isolated_and_scale_adaptive(
     assert out.count() > 0
     assert spark.conf.get(key) == before, "pin leaked to the parent session"
 
-    # the default JVM-state clone is a DIFFERENT cache entry and still
-    # carries the 8-partition pin after the cores-pinned drain ran
+    # the default JVM-state clone still carries the 8-partition pin
+    # after the cores-pinned drain ran
     default_clone = bounded_replay_session(spark)
     assert default_clone.conf.get(key) == str(
         BOUNDED_REPLAY_STATE_PARTITIONS

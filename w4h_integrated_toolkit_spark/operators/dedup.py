@@ -20,6 +20,28 @@ Scale design notes (the point of each variant):
   candidates are verified with exact Jaccard. Hash functions are the
   portable rolling-hash family so the DuckDB oracle can reproduce the exact
   signatures (Spark's builtin hash is engine-specific).
+- **Signature forms: one per execution mode.** Batch builders
+  (``minhash_signatures``, ``lsh_band_rows``, ``minhash_lsh_pairs``,
+  ``incremental_neardup_pairs``) take the per-permutation min as ONE
+  groupBy-min aggregate over hashed shingle rows (``_signatures_inner``):
+  the hash runs once per shingle in codegen and the permutations are plain
+  arithmetic. A stream cannot aggregate per document, so
+  ``streaming.dedup_stream.rowwise_band_rows`` folds each row's own gram
+  array instead (``array_min(transform(...))``). Both forms feed
+  ``_band_rows``, the one definition of the band key, so a stored
+  ``lsh_band_rows`` index and the streaming probe cannot drift. The
+  row-local fold stays out of batch plans: its permutations run as
+  interpreted ``transform`` lambdas, where the groupBy-min is codegen'd
+  arithmetic. A probe on 4 vCPU put the fold (in its earlier form, which
+  also re-hashed every gram once per permutation) inside today's batch
+  plan: ``minhash_lsh_pairs`` went from 0.61–0.72 s to 2.5–2.8 s and
+  ``minhash_signatures`` from 0.31 s to 2.1–2.4 s.
+- **One definition per near-dup decision.** ``_band_rows`` (band keys),
+  ``corpus_shingle_sets`` (per-doc shingle sets), ``_jaccard_at_least``
+  (the exact-Jaccard check), ``_shared_shingle_counts`` (shingle pair
+  counting for the Jaccard and containment metrics) and ``_bloom_probe``
+  (the Bloom bit test) are each written once and called from every
+  batch and streaming path that makes that decision.
 - **simhash32** — 32-bit SimHash from word hashes as 32 conditional sums in
   one hash aggregate; near-dups differ in few bits.
 """
@@ -172,6 +194,41 @@ def _ordered_pairs(docs: Column) -> Column:
     )
 
 
+def _shared_shingle_counts(
+    df: DataFrame, n: int, text: str, id_col: str, max_doc_freq: int | None
+) -> DataFrame:
+    """(id_a, id_b, n_common, size_a, size_b) for every doc pair sharing at
+    least one distinct shingle — the candidate half of the set-overlap
+    metrics; :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs` each apply their own metric on top.
+    The plan and its rejected alternatives are in ngram_jaccard_pairs'
+    docstring."""
+    rows = distinct_shingle_rows(df, n, text, id_col)
+    idx = rows.groupBy("shingle").agg(
+        F.sort_array(F.collect_set(id_col)).alias("docs")
+    )
+    sizes = (
+        idx.select(F.explode("docs").alias(id_col))
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("set_size"))
+    )
+    buckets = idx.filter(F.size("docs") > 1)
+    if max_doc_freq is not None:
+        buckets = buckets.filter(F.size("docs") <= max_doc_freq)
+    common = (
+        buckets.select(F.explode(_ordered_pairs(F.col("docs"))).alias("p"))
+        .select(F.col("p.id_a"), F.col("p.id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    with_a = sizes.join(
+        F.broadcast(common), sizes[id_col] == common["id_a"]
+    ).select("id_a", "id_b", "n_common", F.col("set_size").alias("size_a"))
+    return sizes.join(
+        F.broadcast(with_a), sizes[id_col] == with_a["id_b"]
+    ).select("id_a", "id_b", "n_common", "size_a", F.col("set_size").alias("size_b"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     n: int = 5,
@@ -206,32 +263,8 @@ def ngram_jaccard_pairs(
     exchange (ReuseExchange, verified in executedPlan) at parity with (a)'s
     local speed, without its broadcast hazard.
     """
-    rows = distinct_shingle_rows(df, n, text, id_col)
-    idx = rows.groupBy("shingle").agg(
-        F.sort_array(F.collect_set(id_col)).alias("docs")
-    )
-    sizes = (
-        idx.select(F.explode("docs").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("set_size"))
-    )
-    buckets = idx.filter(F.size("docs") > 1)
-    if max_doc_freq is not None:
-        buckets = buckets.filter(F.size("docs") <= max_doc_freq)
-    common = (
-        buckets.select(F.explode(_ordered_pairs(F.col("docs"))).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    with_a = sizes.join(
-        F.broadcast(common), sizes[id_col] == common["id_a"]
-    ).select("id_a", "id_b", "n_common", F.col("set_size").alias("size_a"))
-    with_b = sizes.join(
-        F.broadcast(with_a), sizes[id_col] == with_a["id_b"]
-    ).select("id_a", "id_b", "n_common", "size_a", F.col("set_size").alias("size_b"))
     return (
-        with_b.withColumn(
+        _shared_shingle_counts(df, n, text, id_col, max_doc_freq).withColumn(
             "jaccard",
             F.col("n_common")
             / (F.col("size_a") + F.col("size_b") - F.col("n_common")).cast("double"),
@@ -255,6 +288,16 @@ def _perm_params(num_perm: int) -> list[tuple[int, int]]:
         pb = x
         params.append((pa, pb))
     return params
+
+
+def _permuted_hash_sql(num_perm: int) -> list[str]:
+    """SQL text of each permutation (a_i·h + b_i) mod p over a BIGINT
+    column or lambda variable ``h`` — shared by the batch groupBy-min and
+    the streaming row fold."""
+    return [
+        f"({pa}L * h + {pb}L) % {ROLLING_HASH_MOD}L"
+        for pa, pb in _perm_params(num_perm)
+    ]
 
 
 def _signatures_inner(
@@ -284,10 +327,55 @@ def _signatures_inner(
     # for 8 perms; the bench times builder construction inside every
     # run, and three registry queries build these signatures).
     aggs = [
-        F.expr(f"min(({pa}L * h + {pb}L) % {ROLLING_HASH_MOD}L) AS mh_{i}")
-        for i, (pa, pb) in enumerate(_perm_params(num_perm))
+        F.expr(f"min({perm}) AS mh_{i}")
+        for i, perm in enumerate(_permuted_hash_sql(num_perm))
     ]
     return hashed.groupBy(id_col).agg(*aggs)
+
+
+def _band_rows(
+    sig: DataFrame, id_col: str, num_perm: int, bands: int, carry: tuple = ()
+) -> DataFrame:
+    """(id, *carry, bk) — one row per (doc, band) over a signature frame
+    (``mh_0..mh_{num_perm-1}`` columns), ``bk = struct(band, key)``. THE
+    definition of the LSH band key (the band's rows joined with ``_``): the
+    stored :func:`lsh_band_rows` index, the streaming probe
+    (``rowwise_band_rows``) and :func:`minhash_lsh_pairs`' buckets all read
+    it, so a format drift can never silently empty a stored-index probe.
+    Consumers project (lsh_band_rows, rowwise_band_rows) or group
+    (minhash_lsh_pairs) on :func:`_band_key`. Grouping on the struct fields
+    rather than on a projected (band, key) frame keeps minhash_lsh_pairs'
+    executed plan as it was: a projected frame would rename its aggregate
+    keys from ``_groupingexpression`` to ``band``/``key``."""
+    rows_per_band = num_perm // bands
+    band_cols = []
+    for b in range(bands):
+        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
+        band_cols.append(
+            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *parts).alias("key"))
+        )
+    return sig.select(
+        F.col(id_col), *carry, F.explode(F.array(*band_cols)).alias("bk")
+    )
+
+
+def _band_key() -> list[Column]:
+    """The (band, key) columns of a :func:`_band_rows` frame."""
+    return [F.col("bk.band").alias("band"), F.col("bk.key").alias("key")]
+
+
+def _jaccard_at_least(
+    pairs: DataFrame, sh_a: str, sh_b: str, threshold: float
+) -> DataFrame:
+    """THE exact-Jaccard check: ``pairs`` plus a ``jaccard`` column (|A∩B|
+    / |A∪B| over the shingle-set array columns ``sh_a``/``sh_b``, computed
+    in-row), keeping rows at or above ``threshold``. Empty sets give NaN,
+    which the filter drops."""
+    inter = F.size(F.array_intersect(F.col(sh_a), F.col(sh_b)))
+    union = F.size(F.col(sh_a)) + F.size(F.col(sh_b)) - inter
+    return pairs.withColumn(
+        "jaccard", inter.cast("double") / union.cast("double")
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_signatures(
@@ -337,8 +425,14 @@ def minhash_lsh_pairs(
     per-doc shingle-set join: collect each candidate doc's distinct shingle
     set once, broadcast-join both pair sides, intersect arrays in-row. This
     is the 100 TB-shaped plan: candidates ~ O(n·near dups), never O(n²), and
-    the verification pass touches only candidate docs."""
-    rows_per_band = num_perm // bands
+    the verification pass touches only candidate docs.
+
+    The two ``localCheckpoint`` barriers below stay, and so does the
+    batch groupBy-min signature. Probes on 4 vCPU: one lazy plan with no
+    barrier builds 0 jobs instead of 10 but runs 2.6–2.9 s at sf0.1
+    against 1.0–1.5 s, and the streaming path's row-local signatures
+    (hashing once per permutation) put inside this plan took it from
+    0.61–0.72 s to 2.5–2.8 s."""
     # INNER signatures (no sentinel rows): documents shorter than n words
     # would all share the identical all-sentinel signature, colliding into
     # ONE band bucket — an O(m²) skew bomb when a corpus has many tiny
@@ -347,15 +441,9 @@ def minhash_lsh_pairs(
     # output-identical and removes the hazard. The public
     # minhash_signatures keeps sentinel rows for signature consumers.
     sig = _signatures_inner(df, n, num_perm, text, id_col)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *parts).alias("key"))
-        )
     buckets = (
-        sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bk"))
-        .groupBy(F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        _band_rows(sig, id_col, num_perm, bands)
+        .groupBy(*_band_key())
         .agg(F.sort_array(F.collect_set(id_col)).alias("docs"))
         .filter(F.size("docs") > 1)
     )
@@ -384,9 +472,7 @@ def minhash_lsh_pairs(
     )
     cand_docs = df.join(F.broadcast(cand_ids), id_col, "left_semi")
     sets = (
-        distinct_shingle_rows(cand_docs, n, text, id_col)
-        .groupBy(id_col)
-        .agg(F.collect_set("shingle").alias("shingles"))
+        corpus_shingle_sets(cand_docs, n, text, id_col)
         # second materialization barrier: ``sets`` feeds BOTH broadcast sides
         # below, and each broadcast exchange evaluates its subtree
         # independently — without this the executed plan contains TWO full
@@ -399,14 +485,9 @@ def minhash_lsh_pairs(
     )
     sets_a = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     sets_b = sets.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        cand.join(F.broadcast(sets_a), "id_a")
-        .join(F.broadcast(sets_b), "id_b")
-        .withColumn("jaccard", inter.cast("double") / union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    pairs = cand.join(F.broadcast(sets_a), "id_a").join(F.broadcast(sets_b), "id_b")
+    return _jaccard_at_least(pairs, "sh_a", "sh_b", threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -424,17 +505,8 @@ def lsh_band_rows(
     the stored index instead of re-hashing petabytes
     (:func:`incremental_neardup_pairs` accepts them via ``corpus_bands``).
     """
-    rows_per_band = num_perm // bands
     sig = _signatures_inner(df, n, num_perm, text, id_col)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *parts).alias("key"))
-        )
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    return _band_rows(sig, id_col, num_perm, bands).select(id_col, *_band_key())
 
 
 def corpus_shingle_sets(
@@ -640,33 +712,24 @@ def incremental_neardup_pairs(
         )
         .select("new_id", "corpus_id")
         .distinct()
-        # same barrier rationale as minhash_lsh_pairs: the candidate set
+        # same barrier rationale as minhash_lsh_pairs (and the same probe:
+        # a barrier-free lazy plan runs slower there): the candidate set
         # feeds three consumers below; candidates are O(near-dups)
         .localCheckpoint(eager=True)
     )
 
-    def _sets(side: DataFrame, ids: DataFrame) -> DataFrame:
+    def _sets(side: DataFrame, side_id: str, sh: str) -> DataFrame:
+        ids = cand.select(F.col(side_id).alias(id_col)).distinct()
         docs = side.join(F.broadcast(ids), id_col, "left_semi")
-        return (
-            distinct_shingle_rows(docs, n, text, id_col)
-            .groupBy(id_col)
-            .agg(F.collect_set("shingle").alias("shingles"))
+        return corpus_shingle_sets(docs, n, text, id_col).select(
+            F.col(id_col).alias(side_id), F.col("shingles").alias(sh)
         )
 
-    inc_sets = _sets(
-        increment, cand.select(F.col("new_id").alias(id_col)).distinct()
-    ).select(F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_n"))
-    cor_sets = _sets(
-        corpus, cand.select(F.col("corpus_id").alias(id_col)).distinct()
-    ).select(F.col(id_col).alias("corpus_id"), F.col("shingles").alias("sh_c"))
-    inter = F.size(F.array_intersect(F.col("sh_n"), F.col("sh_c")))
-    union = F.size(F.col("sh_n")) + F.size(F.col("sh_c")) - inter
-    return (
-        cand.join(F.broadcast(inc_sets), "new_id")
-        .join(F.broadcast(cor_sets), "corpus_id")
-        .withColumn("jaccard", inter.cast("double") / union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "jaccard")
+    pairs = cand.join(F.broadcast(_sets(increment, "new_id", "sh_n")), "new_id").join(
+        F.broadcast(_sets(corpus, "corpus_id", "sh_c")), "corpus_id"
+    )
+    return _jaccard_at_least(pairs, "sh_n", "sh_c", threshold).select(
+        "new_id", "corpus_id", "jaccard"
     )
 
 
@@ -741,6 +804,38 @@ def _validate_bloom_params(m_bits: int, k: int) -> None:
     # the mod and probe garbage positions
     if not 1 <= k <= _BLOOM_MAX_K:
         raise ValueError(f"k must be in [1, {_BLOOM_MAX_K}], got {k}")
+
+
+def _bloom_probe(
+    grams: DataFrame, bitmap: list[int], m_bits: int, k: int
+) -> tuple[DataFrame, Column]:
+    """THE Bloom membership test over a frame of ``shingle`` rows: checks
+    (bitmap, m_bits, k) agree, then returns ``grams`` with the k positions
+    (``_pos``) and the packed bitmap literal (``_bm``, int64 words
+    little-endian, so global bit p lives at byte p/8, bit p%8) attached,
+    plus the Column that is true when all k bits are set."""
+    _validate_bloom_params(m_bits, k)
+    if len(bitmap) * 64 != m_bits:
+        raise ValueError(
+            f"bitmap has {len(bitmap)} words but m_bits={m_bits} needs "
+            f"{m_bits // 64} — (bitmap, m_bits, k) must come from the same "
+            "gram_bloom_bitmap call"
+        )
+    packed = b"".join(w.to_bytes(8, "little", signed=True) for w in bitmap)
+    # materialize the k positions ONCE into an array column (the two
+    # hashes evaluate once each), then test bits with a forall over it —
+    # byte fetch is substring-on-binary + hex/conv (no direct binary
+    # bit_get in Spark); variable shift amounts live in an expr because
+    # the PySpark shift wrappers only accept literal shift counts
+    all_set = F.expr(
+        "forall(_pos, p -> "
+        "(shiftright(CAST(conv(hex(substring(_bm, CAST(p / 8 AS INT) + 1, 1)), "
+        "16, 10) AS INT), CAST(p % 8 AS INT)) & 1) = 1)"
+    )
+    probed = grams.withColumn(
+        "_pos", F.array(*_bloom_positions(F.col("shingle"), m_bits, k))
+    ).withColumn("_bm", F.lit(packed))
+    return probed, all_set
 
 
 def gram_bloom_bitmap(
@@ -822,29 +917,11 @@ def bloom_contamination(
     pre-built plan, identical execution). A single binary literal is
     O(1) to analyze at any m_bits.
     """
-    _validate_bloom_params(m_bits, k)
-    if len(bitmap) * 64 != m_bits:
-        raise ValueError(
-            f"bitmap has {len(bitmap)} words but m_bits={m_bits} needs "
-            f"{m_bits // 64} — (bitmap, m_bits, k) must come from the same "
-            "gram_bloom_bitmap call"
-        )
-    packed = b"".join(w.to_bytes(8, "little", signed=True) for w in bitmap)
-    # materialize the k positions ONCE into an array column (the two
-    # hashes evaluate once each), then test bits with a forall over it —
-    # byte fetch is substring-on-binary + hex/conv (no direct binary
-    # bit_get in Spark); variable shift amounts live in an expr because
-    # the PySpark shift wrappers only accept literal shift counts
-    all_set = F.expr(
-        "forall(_pos, p -> "
-        "(shiftright(CAST(conv(hex(substring(_bm, CAST(p / 8 AS INT) + 1, 1)), "
-        "16, 10) AS INT), CAST(p % 8 AS INT)) & 1) = 1)"
+    grams, all_set = _bloom_probe(
+        distinct_shingle_rows(corpus, n, text, id_col), bitmap, m_bits, k
     )
     return (
-        distinct_shingle_rows(corpus, n, text, id_col)
-        .withColumn("_pos", F.array(*_bloom_positions(F.col("shingle"), m_bits, k)))
-        .withColumn("_bm", F.lit(packed))
-        .filter(all_set)
+        grams.filter(all_set)
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_bloom_hits"))
     )
@@ -881,18 +958,8 @@ def contamination_with_bloom(
     the SAME gram rows, and one hash aggregate per doc emits both
     counts: 1 corpus gram pass, 1 exchange, no sort-merge join.
     """
-    _validate_bloom_params(m_bits, k)
-    if len(bitmap) * 64 != m_bits:
-        raise ValueError(
-            f"bitmap has {len(bitmap)} words but m_bits={m_bits} needs "
-            f"{m_bits // 64} — (bitmap, m_bits, k) must come from the same "
-            "gram_bloom_bitmap call"
-        )
-    packed = b"".join(w.to_bytes(8, "little", signed=True) for w in bitmap)
-    all_set = F.expr(
-        "forall(_pos, p -> "
-        "(shiftright(CAST(conv(hex(substring(_bm, CAST(p / 8 AS INT) + 1, 1)), "
-        "16, 10) AS INT), CAST(p % 8 AS INT)) & 1) = 1)"
+    grams, all_set = _bloom_probe(
+        distinct_shingle_rows(corpus, n, text, id_col), bitmap, m_bits, k
     )
     bench_grams = (
         shingle_rows(benchmark, n, text, id_col)
@@ -900,12 +967,8 @@ def contamination_with_bloom(
         .distinct()
         .withColumn("_exact", F.lit(1).cast("long"))
     )
-    per_gram = (
-        distinct_shingle_rows(corpus, n, text, id_col)
-        .withColumn("_pos", F.array(*_bloom_positions(F.col("shingle"), m_bits, k)))
-        .withColumn("_bm", F.lit(packed))
-        .withColumn("_bloom", all_set.cast("long"))
-        .join(F.broadcast(bench_grams), "shingle", "left")
+    per_gram = grams.withColumn("_bloom", all_set.cast("long")).join(
+        F.broadcast(bench_grams), "shingle", "left"
     )
     agg = per_gram.groupBy(id_col).agg(
         # sum over {1, NULL} is NULL when no gram matched — exactly the
@@ -1171,40 +1234,11 @@ def ngram_containment_pairs(
     quote-extraction dedup semantic (cf. Broder's resemblance vs
     containment distinction).
 
-    Same single-shingle-exchange shape as :func:`ngram_jaccard_pairs`
-    (per-doc-distinct rows -> ONE inverted-index aggregate feeding both
-    set sizes and in-bucket pair counts; the O(candidates) pair relation
-    broadcasts against the O(docs) sizes relation, never the reverse) —
-    kept as a separate function rather than a metric flag so the gated
-    Jaccard path stays untouched; the duplication is the ~15 plan lines,
-    the rationale lives there.
+    Same single-shingle-exchange shape as :func:`ngram_jaccard_pairs`:
+    both apply their metric to :func:`_shared_shingle_counts`.
     """
-    rows = distinct_shingle_rows(df, n, text, id_col)
-    idx = rows.groupBy("shingle").agg(
-        F.sort_array(F.collect_set(id_col)).alias("docs")
-    )
-    sizes = (
-        idx.select(F.explode("docs").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("set_size"))
-    )
-    buckets = idx.filter(F.size("docs") > 1)
-    if max_doc_freq is not None:
-        buckets = buckets.filter(F.size("docs") <= max_doc_freq)
-    common = (
-        buckets.select(F.explode(_ordered_pairs(F.col("docs"))).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    with_a = sizes.join(
-        F.broadcast(common), sizes[id_col] == common["id_a"]
-    ).select("id_a", "id_b", "n_common", F.col("set_size").alias("size_a"))
-    with_b = sizes.join(
-        F.broadcast(with_a), sizes[id_col] == with_a["id_b"]
-    ).select("id_a", "id_b", "n_common", "size_a", F.col("set_size").alias("size_b"))
     return (
-        with_b.withColumn(
+        _shared_shingle_counts(df, n, text, id_col, max_doc_freq).withColumn(
             "containment",
             F.col("n_common")
             / F.least(F.col("size_a"), F.col("size_b")).cast("double"),

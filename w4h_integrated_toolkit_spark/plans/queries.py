@@ -912,7 +912,8 @@ SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM votes
 
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 for query vectors (vec_id < 8):
-    broadcast queries, JVM array arithmetic, deterministic tiebreaks."""
+    broadcast queries, each (query, corpus) pair scored in the
+    ``similarity._cosine_batch`` pandas UDF, deterministic tiebreaks."""
     emb = _t(spark, sf_dir, "embeddings")
     out = SIM.cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
     return out.select(

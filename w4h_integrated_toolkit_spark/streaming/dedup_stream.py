@@ -10,11 +10,13 @@ its sink.
 Why this composition is fully streaming-legal (and scale-shaped):
 
 - **Signatures are row-local.** MinHash over a document's own shingle set
-  needs no aggregation: per permutation, ``array_min(transform(grams,
-  s -> (a*hash(s)+b) % p))`` — pure Column math inside the scan stage, so
-  the stream needs no stateful signature operator at all (the batch path's
-  groupBy-min becomes an array fold over the row's gram array; equivalence
-  is pinned by test).
+  needs no aggregation: the row's grams are hashed once
+  (``transform(grams, portable_hash31)``), then per permutation
+  ``array_min(transform(hashes, h -> (a*h+b) % p))`` — pure Column math
+  inside the scan stage, so the stream needs no stateful signature
+  operator at all (the batch path's groupBy-min becomes an array fold over
+  the row's hashes; equivalence is pinned by test). Batch plans keep the
+  groupBy-min: see the ``dedup`` module docstring for why.
 - **Candidate generation is a stream-static equi join** on (band, key)
   against the stored band index (`dedup.lsh_band_rows` output). At fleet
   scale, store the index partitioned by band/key-prefix so the per-batch
@@ -38,8 +40,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import ROLLING_HASH_MOD
-from ..operators.dedup import _gram_expr, _perm_params
+from ..functions import portable_hash31
+from ..operators.dedup import (
+    _band_key,
+    _band_rows,
+    _gram_expr,
+    _jaccard_at_least,
+    _permuted_hash_sql,
+)
 from .replay import drain_memory_sink, file_stream
 
 __all__ = [
@@ -67,19 +75,14 @@ def _synthetic_event_time(id_col: str = "doc_id"):
 
 
 def _rowwise_minhash_cols(num_perm: int) -> list:
-    """mh_i columns from a ``_g`` gram-array column, computed row-locally:
-    min over the array of the permuted portable hash — identical values to
-    the batch groupBy-min (dedup._signatures_inner) by construction."""
-    h = (
-        "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT) % "
-        f"{ROLLING_HASH_MOD}"
-    )
+    """mh_i columns from a ``_h`` column (the row's gram array hashed with
+    ``portable_hash31``), computed row-locally: min over the array of each
+    permuted hash — identical values to the batch groupBy-min
+    (dedup._signatures_inner) by construction, from the same permutation
+    text."""
     return [
-        F.expr(
-            f"array_min(transform(_g, s -> ({pa} * ({h}) + {pb}) % "
-            f"{ROLLING_HASH_MOD}))"
-        ).alias(f"mh_{i}")
-        for i, (pa, pb) in enumerate(_perm_params(num_perm))
+        F.expr(f"array_min(transform(_h, h -> {perm}))").alias(f"mh_{i}")
+        for i, perm in enumerate(_permuted_hash_sql(num_perm))
     ]
 
 
@@ -93,36 +96,24 @@ def rowwise_band_rows(
     carry: list[str] | None = None,
 ) -> DataFrame:
     """(id, band, key [, carry...]) LSH band rows WITHOUT aggregation —
-    streaming-legal, value-identical to ``dedup.lsh_band_rows``. ``carry``
-    columns ride along (the streaming path carries the doc's distinct gram
-    array and event time for downstream verification/watermarking).
-    Documents shorter than ``n`` words emit no rows (no shingles — same
-    exclusion as the batch inner-signature path)."""
-    rows_per_band = num_perm // bands
+    streaming-legal, value-identical to ``dedup.lsh_band_rows`` (both band
+    through ``dedup._band_rows``). ``carry`` columns ride along (the
+    streaming path carries the doc's distinct gram array and event time
+    for downstream verification/watermarking). Documents shorter than
+    ``n`` words emit no rows (no shingles — same exclusion as the batch
+    inner-signature path). Each gram is hashed once per row, and the
+    permutations fold over that hash array."""
+    carry = tuple(carry or ())
     words = F.split(F.trim(F.col(text)), r"\s+")
-    with_g = (
+    with_h = (
         docs.withColumn("_w", words)
         .withColumn("_g", F.expr(_gram_expr(n)))
         .filter(F.size("_g") > 0)
+        .withColumn("_h", F.transform("_g", portable_hash31))
     )
-    sig = with_g.select(
-        F.col(id_col), *(carry or []), *_rowwise_minhash_cols(num_perm)
-    )
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *parts).alias("key"))
-        )
-    return sig.select(
-        F.col(id_col),
-        *(carry or []),
-        F.explode(F.array(*band_cols)).alias("bk"),
-    ).select(
-        id_col,
-        *(carry or []),
-        F.col("bk.band").alias("band"),
-        F.col("bk.key").alias("key"),
+    sig = with_h.select(F.col(id_col), *carry, *_rowwise_minhash_cols(num_perm))
+    return _band_rows(sig, id_col, num_perm, bands, carry).select(
+        id_col, *carry, *_band_key()
     )
 
 
@@ -181,12 +172,8 @@ def streaming_neardup_matches(
     sets = corpus_sets.select(
         F.col(id_col).alias("corpus_id"), F.col("shingles").alias("_sh_c")
     )
-    inter = F.size(F.array_intersect(F.col("_sh_n"), F.col("_sh_c")))
-    union = F.size("_sh_n") + F.size("_sh_c") - inter
-    matches = (
-        cand.join(sets, "corpus_id")
-        .withColumn("jaccard", inter.cast("double") / union.cast("double"))
-        .filter(F.col("jaccard") >= threshold)
+    matches = _jaccard_at_least(
+        cand.join(sets, "corpus_id"), "_sh_n", "_sh_c", threshold
     )
     # one row per pair, not per matching band; with ts the dedup state ages
     # out at the watermark, without it this is test-scale only

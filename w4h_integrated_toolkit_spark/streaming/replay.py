@@ -26,7 +26,6 @@ client frames unboundedly, viz.py:742-747).
 from __future__ import annotations
 
 import os
-import threading
 import uuid
 from collections.abc import Iterator
 from datetime import datetime
@@ -299,27 +298,6 @@ def _ephemeral_checkpoint_dir(master: str | None = None) -> str | None:
         return None
 
 
-# clone cache: (parent java-session identity hash, state_partitions,
-# ns toggle) -> (parent conf-map content digest, clone). Building a
-# clone costs ~3 py4j round-trips PER parent conf entry (hundreds of
-# entries → 0.3-0.4 s, measured as the r10 streaming-row regression); a
-# cache hit costs two py4j calls (getAllConfs + mkString) plus one md5. The
-# content key is a digest of the scala Map's full string rendering —
-# NOT its int hashCode, whose 32-bit collisions would hand a caller a
-# clone carrying a DIFFERENT conf set — so any runtime conf change on
-# the parent forces a fresh clone and the carried-parent-confs contract
-# stays exact. Bounded at 8 entries, oldest-first eviction (one per
-# live parent session in practice).
-_CLONE_CACHE: dict[
-    tuple[int, int | None, bool], tuple[str, SparkSession]
-] = {}
-_CLONE_CACHE_MAX = 8
-# guards the multi-step get/evict/insert sequences (the module supports
-# concurrent drains, and two racing evictors picking the same oldest
-# key would KeyError without it)
-_CLONE_CACHE_LOCK = threading.Lock()
-
-
 def bounded_replay_session(
     spark: SparkSession,
     state_partitions: int | None = BOUNDED_REPLAY_STATE_PARTITIONS,
@@ -333,69 +311,21 @@ def bounded_replay_session(
     touches a conf — a streaming query snapshots the SQLConf of the
     session its stream was built on at ``start()``.
 
-    ``newSession()`` initializes the clone's SQLConf from the context
-    defaults, NOT the parent's runtime values, so every explicitly-set
-    parent conf (session timezone, AQE toggles, test shuffle sweeps …)
-    is copied over first; entries that are static at this point are
-    skipped. The pin is then applied on top; ``state_partitions=None``
+    The clone is the JVM ``cloneSession()``: one call that copies the
+    parent's runtime SQLConf (session timezone, AQE toggles, test shuffle
+    sweeps …), the isolation Spark's own ``StreamExecution`` gives each
+    query. The pin is then applied on top; ``state_partitions=None``
     inherits the parent's count (a standing query sized to its state
-    volume).
-
-    Clones are CACHED per (parent session, pin, ns toggle) and reused
-    while the parent's runtime conf map is content-identical (digest of
-    a NUL-framed map rendering) — the copy loop's py4j round-trips were
-    the dominant cost of every bounded replay; reuse is safe because
-    every baked conf (pin, ``ns_long``) is part of the cache key and
-    never restored, so there is no cross-replay race, and any parent
-    conf change rebuilds the clone. ``ns_long=True`` bakes
-    ``spark.sql.legacy.parquet.nanosAsLong`` into the clone BEFORE it
-    is cached (``file_stream``'s ns-timestamp sources), so the toggle
-    can never leak into clones served for other keys. Callers must not
-    mutate the returned clone's conf: later replays share it.
+    volume). ``ns_long=True`` sets ``spark.sql.legacy.parquet.nanosAsLong``
+    on the clone (``file_stream``'s ns-timestamp sources) and never on the
+    parent. A fresh clone per call costs ~2-4 ms (4 vCPU), so nothing is
+    cached.
     """
-    import hashlib
-
-    confs = spark._jsparkSession.sessionState().conf().getAllConfs()
-    key = (spark._jsparkSession.hashCode(), state_partitions, ns_long)
-    # NUL-framed rendering: mkString("\x00") separates entries with
-    # a byte no real Spark conf value carries, unlike toString's
-    # ", " (a value containing ', x -> y' would make two DIFFERENT
-    # maps render identically and serve a wrong-conf clone)
-    conf_digest = hashlib.md5(
-        confs.mkString("\x00").encode("utf-8", "surrogatepass")
-    ).hexdigest()
-    with _CLONE_CACHE_LOCK:
-        hit = _CLONE_CACHE.get(key)
-    if hit is not None and hit[0] == conf_digest:
-        clone = hit[1]
-        # reference-equality context check: screens a stale clone
-        # whose context was stopped and replaced (its parent's
-        # identity hash could be reused by a new java object)
-        if clone._jsparkSession.sparkContext().equals(
-            spark._jsparkSession.sparkContext()
-        ):
-            return clone
-    clone = spark.newSession()
-    it = confs.iterator()
-    while it.hasNext():
-        kv = it.next()
-        try:
-            clone.conf.set(kv._1(), kv._2())
-        except Exception:
-            pass  # static (non-runtime-settable) entry — context-level anyway
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
     if state_partitions is not None:
         clone.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if ns_long:
         clone.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    with _CLONE_CACHE_LOCK:
-        # replace-in-place first so a same-key rebuild at capacity
-        # never evicts an unrelated hot entry; then oldest-first
-        # eviction (dicts preserve insertion order — a full clear()
-        # would drop every hot entry and re-pay the copy cost)
-        _CLONE_CACHE.pop(key, None)
-        while len(_CLONE_CACHE) >= _CLONE_CACHE_MAX:
-            del _CLONE_CACHE[next(iter(_CLONE_CACHE))]
-        _CLONE_CACHE[key] = (conf_digest, clone)
     return clone
 
 
@@ -569,10 +499,8 @@ def file_stream(
     from ..catalog import ns_timestamp_columns
 
     ns_cols = ns_timestamp_columns(path)
-    # ns-timestamp sources need the nanosAsLong toggle; it is baked into
-    # the clone BEFORE caching (part of the cache key), so repeat
-    # ns-source streams still hit the cache and the toggle can never
-    # leak into clones served for non-ns keys
+    # ns-timestamp sources need the nanosAsLong toggle; it is set on the
+    # private clone only, never on the caller's session
     spark = bounded_replay_session(
         spark, state_partitions=state_partitions, ns_long=bool(ns_cols)
     )

@@ -187,7 +187,10 @@ def trajectory_tails(
     order (the reference's map polyline, viz.py:814-821, with bounded state).
 
     Replay delivers batches time-ordered (stream_sim.py:147), so within-key
-    ordering only needs a per-batch sort; state truncates to the tail."""
+    ordering only needs a per-batch sort; state truncates to the tail.
+    A point with a NULL or NaN coordinate counts in ``n_points`` but never
+    enters the path: it has no position to draw, and a NULL inside the
+    emitted ``path`` array fails the JVM read of the Python output."""
 
     def update(
         key: tuple[Any, ...],
@@ -200,10 +203,10 @@ def trajectory_tails(
         else:
             lats, lons, n_total = [], [], 0
         for pdf in pdfs:
-            pdf = pdf.sort_values(ts)
+            n_total += len(pdf)
+            pdf = pdf.dropna(subset=[lat, lon]).sort_values(ts)
             lats.extend(float(x) for x in pdf[lat])
             lons.extend(float(x) for x in pdf[lon])
-            n_total += len(pdf)
         lats, lons = lats[-tail:], lons[-tail:]
         state.update((lats, lons, n_total))
         yield pd.DataFrame(
