@@ -5,9 +5,10 @@ sit at the fixed-overhead floor (32-vs-8-core scaling ratio <= 1), so
 §2/§3 optimizations on the heavy rows need a bigger lens. This harness
 materializes a deterministic "sf0.4-equivalent" directory by salted
 replication of the sf0.1 tables (factor 4 by default — replicas are
-token-disjoint via scripts/scale_common.replicate_salted, so near-dup /
-feature mass grows LINEARLY, the lesson recorded there) and times the
-top wall-clock queries at two core counts.
+token-disjoint via replicate_salted below, so near-dup / feature mass
+grows LINEARLY) and times the top wall-clock queries at two core counts.
+It is the repo's one scale harness: to measure another entry at factor
+N, add it to QUERIES_TO_RUN.
 
 Each row is timed by bench.timed_row, the bench's own row timer:
 median of 3, re-measured (at most 2 extra runs, 3 fastest kept) while the
@@ -25,15 +26,14 @@ Usage:
 """
 from __future__ import annotations
 
+import functools
 import os
+import string
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                    "scripts")
-)
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import bench  # noqa: E402
@@ -63,11 +63,33 @@ QUERIES_TO_RUN = [
 ]
 
 
+def _union(parts):
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def replicate_salted(df, factor):
+    """``factor`` copies of a documents frame with disjoint doc ids, every
+    token of copy i prefixed with a copy-unique two-letter salt. The salt
+    MUST be letters-only: a digit prefix glues onto numeric tokens and
+    changes their tokenization class, so copies stop being token-disjoint
+    and near-dup mass grows quadratically instead of linearly."""
+
+    def salt(i: int) -> str:
+        a, b = divmod(i, 26)
+        return "q" + string.ascii_lowercase[a] + string.ascii_lowercase[b]
+
+    return _union(
+        df.withColumn("doc_id", F.col("doc_id") + F.lit(i * 1_000_000))
+        .withColumn(
+            "text", F.regexp_replace(F.col("text"), r"(\S+)", f"{salt(i)}$1")
+        )
+        for i in range(factor)
+    )
+
+
 def gen(factor: int) -> None:
     from w4h_integrated_toolkit_spark.catalog import read_parquet
     from w4h_integrated_toolkit_spark.session import get_spark
-
-    from scale_common import replicate_salted
 
     spark = get_spark("spotgen", cpus=16, shuffle_partitions=16,
                       driver_memory="24g")
@@ -78,27 +100,19 @@ def gen(factor: int) -> None:
     ).coalesce(8).write.mode("overwrite").parquet(f"{SPOT_DIR}/documents.parquet")
 
     emb = read_parquet(spark, f"{SRC}/embeddings.parquet")
-    parts = [
+    _union(
         emb.withColumn("vec_id", F.col("vec_id") + F.lit(i * 1_000_000))
         for i in range(factor)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.coalesce(4).write.mode("overwrite").parquet(
+    ).coalesce(4).write.mode("overwrite").parquet(
         f"{SPOT_DIR}/embeddings.parquet"
     )
 
     ev = read_parquet(spark, f"{SRC}/events.parquet")
-    parts = [
+    _union(
         ev.withColumn("event_id", F.col("event_id") + F.lit(i * 1_000_000_000))
         .withColumn("user_id", F.col("user_id") + F.lit(i * 10_000_000))
         for i in range(factor)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.coalesce(8).write.mode("overwrite").parquet(f"{SPOT_DIR}/events.parquet")
+    ).coalesce(8).write.mode("overwrite").parquet(f"{SPOT_DIR}/events.parquet")
 
     # relational tables for the SMJ quartet: key-shifted coherent copies
     # (orders/lineitem shift orderkey together; customer keys shift with
@@ -120,10 +134,7 @@ def gen(factor: int) -> None:
         cu_parts.append(cu.withColumn("c_custkey", F.col("c_custkey") + ck))
     for name, ps in (("orders", o_parts), ("lineitem", li_parts),
                      ("customer", cu_parts)):
-        u = ps[0]
-        for p in ps[1:]:
-            u = u.unionByName(p)
-        u.coalesce(8).write.mode("overwrite").parquet(
+        _union(ps).coalesce(8).write.mode("overwrite").parquet(
             f"{SPOT_DIR}/{name}.parquet"
         )
     # small dims pass through unchanged

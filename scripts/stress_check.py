@@ -10,36 +10,48 @@ formulation), over randomized inputs built to hit the hard cases:
 
 - BPE fit + encode vs a textbook sequential trainer: equal-symbol runs
   ("aaaa"), frequent count ties (argmax lex tie-break), pair
-  exhaustion, NULL/empty texts.
+  exhaustion, empty texts.
 - scd2_apply fold law vs the one-shot rebuild across random three-way
   time splits: NULL attribute runs, new keys, empty batches.
-- kmeans_fit vs a pure-Python integer Lloyd model: half-away-from-zero
+- kmeans_fit vs the integer Lloyd model: half-away-from-zero
   quantization, argmin ties at coarse scales, floor-division of
   negative sums, empty-cluster drops, multi-iteration chaining.
-- duplicated_spans + strip vs a sequential window/island model: tiny
+- pagerank_fixed_point vs the integer recurrence at random damping,
+  scale and iteration counts.
+- duplicated_spans + strip vs the window/island model: tiny
   vocabularies (chance collisions), planted runs straddling k, intra-doc
   repeats, merge_gap overrides, whitespace soup, empty docs.
+- gopher_quality_flags + c4_clean_lines vs their rule models at
+  random thresholds; paragraph dedup, Hamming pairs, the embedding
+  bucket guard and unigram segmentation vs their own brute-force models.
 
-Exit code 0 iff every trial matches exactly (integer/bit equality).
-CI keeps the fast hypothesis variants (tests/test_properties.py); this
-script is the periodic deep sweep (run at least once per round; last
-green: r9, 40+25+20 trials).
+The BPE, PageRank, k-means, span, Gopher and C4 models are the ones the
+Hypothesis properties use (tests/reference_models.py); this script
+varies their parameters and budgets. Exit code 0 iff every trial
+matches exactly (integer/bit equality). Tier-1 runs every section once
+(tests/test_properties.py::test_stress_check_sections_run_clean); a full
+run is the periodic deep sweep.
 """
 
 from __future__ import annotations
 
-import collections
 import datetime as dt
-import math
 import os
 import random
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from tests.reference_models import (  # noqa: E402
+    bpe_model,
+    c4_model,
+    gopher_model,
+    kmeans_model,
+    pagerank_model,
+    spans_model,
+)
 from w4h_integrated_toolkit_spark.session import get_spark  # noqa: E402
 
 
@@ -56,35 +68,7 @@ def stress_bpe(spark, rnd, trials):
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
         )
-        wc = collections.Counter(
-            w for t in texts for w in re.findall(r"[a-z]+", t.lower())
-        )
-        vocab = {w: list(w) for w in wc}
-        expected = []
-        for rank in range(1, n_merges + 1):
-            pc = collections.Counter()
-            for w, syms in vocab.items():
-                for a, b in zip(syms, syms[1:]):
-                    pc[(a, b)] += wc[w]
-            if not pc:
-                break
-            top = max(pc.values())
-            pair = min(p for p, c in pc.items() if c == top)
-            expected.append((rank, pair[0], pair[1], pc[pair]))
-            for w, syms in vocab.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == pair[0]
-                        and syms[i + 1] == pair[1]
-                    ):
-                        out.append(pair[0] + pair[1])
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                vocab[w] = out
+        expected, tc = bpe_model(texts, n_merges=n_merges)
         got = [
             (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_count"])
             for r in bpe_learn(df, n_merges=n_merges)
@@ -94,10 +78,6 @@ def stress_bpe(spark, rnd, trials):
         if got != expected:
             bad += 1
             print("BPE MERGE MISMATCH", texts, got, expected)
-        tc = collections.Counter()
-        for w, syms in vocab.items():
-            for s in syms:
-                tc[s] += wc[w]
         got_e = {
             (r["token"], r["n"])
             for r in bpe_encode(df, n_merges=n_merges, k=None).collect()
@@ -155,35 +135,6 @@ def stress_scd2(spark, rnd, trials):
 def stress_kmeans(spark, rnd, trials):
     from w4h_integrated_toolkit_spark.operators.similarity import kmeans_fit
 
-    def q_half_away(x, scale):
-        v = x * scale
-        return int(math.copysign(math.floor(abs(v) + 0.5), v)) if v else 0
-
-    def py_fit(vecs, k, iterations, scale):
-        qv = {vid: [q_half_away(x, scale) for x in v] for vid, v in vecs.items()}
-        cents = {vid: list(qv[vid]) for vid in sorted(qv)[:k]}
-        cells = None
-        for _ in range(iterations):
-            members = {}
-            for vid in sorted(qv):
-                best = min(
-                    (
-                        sum((a - b) * (a - b) for a, b in zip(qv[vid], cents[c])),
-                        c,
-                    )
-                    for c in sorted(cents)
-                )
-                members.setdefault(best[1], []).append(vid)
-            cells, cents = [], {}
-            for cid, vids in members.items():
-                qc = []
-                for dim in range(len(next(iter(qv.values())))):
-                    s = sum(qv[v][dim] for v in vids)
-                    qc.append(s // len(vids))  # floor div == the SQL CASE
-                    cells.append((cid, dim, s // len(vids), len(vids)))
-                cents[cid] = qc
-        return sorted(cells)
-
     bad = 0
     for trial in range(trials):
         n, d = rnd.randrange(3, 30), rnd.randrange(1, 5)
@@ -204,7 +155,11 @@ def stress_kmeans(spark, rnd, trials):
             (r["centroid_id"], r["dim"], r["q_value"], r["n_members"])
             for r in kmeans_fit(df, k=k, iterations=iters, scale=scale).collect()
         )
-        if got != py_fit(vecs, k, iters, scale):
+        first_k = {vid: vecs[vid] for vid in sorted(vecs)[:k]}
+        want = kmeans_model(
+            vecs, first_k, iterations=iters, scale=scale, half_away_from_zero=True
+        )
+        if got != sorted(cell + v for cell, v in want.items()):
             bad += 1
             print("KMEANS MISMATCH", trial, dict(n=n, d=d, k=k, scale=scale))
     return bad
@@ -236,21 +191,7 @@ def stress_pagerank(spark, rnd, trials):
                 df, iterations=iters, damping_pct=damping, scale=scale
             ).collect()
         }
-        # literal python model of the integer fixed-point iteration
-        nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-        out = {}
-        for (s, _), w in edges.items():
-            out[s] = out.get(s, 0) + w
-        n = len(nodes)
-        teleport = ((100 - damping) * scale // 100) // n
-        rank = {v: scale // n for v in nodes}
-        for _ in range(iters):
-            inc = {}
-            for (s, d), w in edges.items():
-                inc[d] = inc.get(d, 0) + (rank[s] * w) // out[s]
-            rank = {
-                v: teleport + (damping * inc.get(v, 0)) // 100 for v in nodes
-            }
+        rank = pagerank_model(edges, iters, damping, scale)
         if got != rank:
             bad += 1
             print("PAGERANK MISMATCH", trial, edges, iters, damping, scale)
@@ -270,50 +211,6 @@ def stress_spans(spark, rnd, trials):
         duplicated_spans,
         strip_duplicated_spans,
     )
-
-    def ref(texts, k, within_doc, gap):
-        content_docs: dict[tuple, set] = {}
-        content_count = collections.Counter()
-        toks_by_doc = {}
-        for d, t in texts.items():
-            toks = t.strip().split()
-            toks_by_doc[d] = toks
-            for p in range(0, len(toks) - k + 1):
-                w = tuple(toks[p : p + k])
-                content_docs.setdefault(w, set()).add(d)
-                content_count[w] += 1
-        dup = {
-            w
-            for w, c in content_count.items()
-            if len(content_docs[w]) > 1 or (within_doc and c >= 2)
-        }
-        spans = set()
-        cut = {}
-        for d, toks in toks_by_doc.items():
-            pos = [
-                p
-                for p in range(0, len(toks) - k + 1)
-                if tuple(toks[p : p + k]) in dup
-            ]
-            islands: list[list[int]] = []
-            for p in pos:
-                if islands and p - islands[-1][-1] <= gap:
-                    islands[-1].append(p)
-                else:
-                    islands.append([p])
-            ivs = []
-            for isl in islands:
-                spans.add((d, isl[0], isl[-1] + k, len(isl)))
-                ivs.append((isl[0], isl[-1] + k))
-            if ivs:
-                cut[d] = " ".join(
-                    t
-                    for i, t in enumerate(toks)
-                    if not any(a <= i < b for a, b in ivs)
-                )
-            else:
-                cut[d] = texts[d]  # untouched docs stay byte-identical
-        return spans, cut
 
     bad = 0
     for trial in range(trials):
@@ -354,7 +251,6 @@ def stress_spans(spark, rnd, trials):
             texts[d] = " ".join(rep + toks[:mid] + rep + toks[mid:])
         within = rnd.random() < 0.5
         gap = rnd.choice([None, 0, k // 2, k, 2 * k])
-        eff_gap = k if gap is None else gap
         kw = {} if gap is None else {"merge_gap": gap}
 
         df = spark.createDataFrame(
@@ -369,7 +265,7 @@ def stress_spans(spark, rnd, trials):
             r.doc_id: r.text
             for r in strip_duplicated_spans(df, spans=spans_df).collect()
         }
-        exp_spans, exp_cut = ref(texts, k, within, eff_gap)
+        exp_spans, exp_cut = spans_model(texts, within, k=k, merge_gap=gap)
         if got_spans != exp_spans or got_cut != exp_cut:
             bad += 1
             print(
@@ -384,21 +280,18 @@ def stress_spans(spark, rnd, trials):
 
 
 def stress_text_gates(spark, rnd, trials):
-    """gopher_quality_flags + c4_clean_lines vs literal Python models
-    with RANDOMIZED thresholds (the hypothesis properties sweep inputs
-    at paper defaults; this sweeps the parameter space too): random
+    """gopher_quality_flags + c4_clean_lines vs their rule models, every
+    statistic and verdict, with RANDOMIZED thresholds (the hypothesis
+    properties sweep inputs at paper defaults; this sweeps the parameter
+    space too): random
     token soup (stopwords, letter runs, digits, #tags, ellipses,
     bullets, dots), duplicated lines, blank/whitespace lines, and
     leading/trailing whitespace soup around the whole document (the
     class of input that caught the F.trim-is-spaces-only bug)."""
-    import re
-
     from w4h_integrated_toolkit_spark.operators.text import (
         c4_clean_lines,
         gopher_quality_flags,
     )
-
-    stop = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
     def rand_line(rnd):
         n = rnd.randrange(0, 12)
@@ -444,83 +337,20 @@ def stress_text_gates(spark, rnd, trials):
             text = text + rnd.choice(["\n", " \n ", "\t"])
         return text
 
-    def gopher_ref(text, p):
-        t = text.strip()
-        words = re.split(r"\s+", t) if t else []
-        nw = len(words)
-        nonspace = len(re.sub(r"\s", "", t))
-        mean = nonspace / nw if nw else 0.0
-        nsym = len(re.findall(r"#", t)) + len(
-            re.findall(r"\.\.\.|\u2026", t))
-        sym = nsym / nw if nw else 0.0
-        lines = [x.strip() for x in text.split("\n")]
-        lines = [x for x in lines if x != ""]
-        nl = len(lines)
-        bullet = (sum(1 for x in lines
-                      if re.search(r"^[\u2022\u2023\u25aa\u25cf*-]", x))
-                  / nl if nl else 0.0)
-        ell = (sum(1 for x in lines
-                   if re.search(r"(\.\.\.|\u2026)$", x)) / nl
-               if nl else 0.0)
-        alpha = (sum(1 for w in words if re.search("[A-Za-z]", w)) / nw
-                 if nw else 0.0)
-        lw = {w.lower() for w in words}
-        hits = sum(1 for w in stop if w in lw)
-        s = sorted(lines)
-        dupc = sum(1 for i in range(1, len(s)) if s[i] == s[i - 1])
-        dupch = sum(len(s[i]) for i in range(1, len(s)) if s[i] == s[i - 1])
-        lchars = sum(len(x) for x in lines)
-        dupf = dupc / nl if nl else 0.0
-        dupcf = dupch / lchars if lchars else 0.0
-        reasons = []
-        if not (p["min_words"] <= nw <= p["max_words"]):
-            reasons.append("word_count")
-        if not (p["min_mean"] <= mean <= p["max_mean"]):
-            reasons.append("mean_word_len")
-        if not sym <= p["max_sym"]:
-            reasons.append("symbol_word_ratio")
-        if not bullet <= p["max_bullet"]:
-            reasons.append("bullet_lines")
-        if not ell <= p["max_ell"]:
-            reasons.append("ellipsis_lines")
-        if not alpha >= p["min_alpha"]:
-            reasons.append("alpha_words")
-        if not hits >= p["min_stop"]:
-            reasons.append("stopwords")
-        if not dupf <= p["max_dupf"]:
-            reasons.append("dup_lines")
-        if not dupcf <= p["max_dupcf"]:
-            reasons.append("dup_line_chars")
-        return sorted(reasons), not reasons
-
-    def c4_ref(text, q):
-        lines = [x.strip() for x in text.split("\n")]
-        lines = [x for x in lines if x != ""]
-        kept = [
-            x for x in lines
-            if re.search(r"[.!?\u2026][\"'\u201d\u2019)\]]*$", x)
-            and len(re.split(r"\s+", x)) >= q["min_line_words"]
-            and "javascript" not in x.lower()
-        ]
-        low = text.lower()
-        ok = (len(kept) >= q["min_lines"] and "lorem ipsum" not in low
-              and "{" not in low)
-        return ("\n".join(kept), len(kept), len(lines) - len(kept), ok)
-
     bad = 0
     for trial in range(trials):
         p = {
             "min_words": rnd.randrange(0, 20),
             "max_words": rnd.randrange(30, 200),
-            "min_mean": rnd.uniform(0.0, 3.0),
-            "max_mean": rnd.uniform(5.0, 15.0),
-            "max_sym": rnd.uniform(0.0, 0.3),
-            "max_bullet": rnd.uniform(0.2, 1.0),
-            "max_ell": rnd.uniform(0.1, 1.0),
-            "min_alpha": rnd.uniform(0.3, 1.0),
-            "min_stop": rnd.randrange(0, 3),
-            "max_dupf": rnd.uniform(0.1, 1.0),
-            "max_dupcf": rnd.uniform(0.1, 1.0),
+            "min_mean_word_len": rnd.uniform(0.0, 3.0),
+            "max_mean_word_len": rnd.uniform(5.0, 15.0),
+            "max_symbol_word_ratio": rnd.uniform(0.0, 0.3),
+            "max_bullet_line_frac": rnd.uniform(0.2, 1.0),
+            "max_ellipsis_line_frac": rnd.uniform(0.1, 1.0),
+            "min_alpha_word_frac": rnd.uniform(0.3, 1.0),
+            "min_stopword_hits": rnd.randrange(0, 3),
+            "max_dup_line_frac": rnd.uniform(0.1, 1.0),
+            "max_dup_line_char_frac": rnd.uniform(0.1, 1.0),
         }
         q = {
             "min_line_words": rnd.randrange(0, 6),
@@ -531,33 +361,18 @@ def stress_text_gates(spark, rnd, trials):
             [(d, t) for d, t in texts.items()], "doc_id long, text string"
         )
         got_g = {
-            r["doc_id"]: (sorted(r["fail_reasons"]), r["passes"])
-            for r in gopher_quality_flags(
-                df,
-                min_words=p["min_words"], max_words=p["max_words"],
-                min_mean_word_len=p["min_mean"],
-                max_mean_word_len=p["max_mean"],
-                max_symbol_word_ratio=p["max_sym"],
-                max_bullet_line_frac=p["max_bullet"],
-                max_ellipsis_line_frac=p["max_ell"],
-                min_alpha_word_frac=p["min_alpha"],
-                min_stopword_hits=p["min_stop"],
-                max_dup_line_frac=p["max_dupf"],
-                max_dup_line_char_frac=p["max_dupcf"],
-            ).collect()
+            r["doc_id"]: r.asDict() for r in gopher_quality_flags(df, **p).collect()
         }
         got_c = {
-            r["doc_id"]: (r["text"], r["n_lines_kept"],
-                          r["n_lines_dropped"], r["doc_kept"])
-            for r in c4_clean_lines(
-                df, min_line_words=q["min_line_words"],
-                min_lines=q["min_lines"],
-            ).collect()
+            r["doc_id"]: r.asDict() for r in c4_clean_lines(df, **q).collect()
         }
         for d, t in texts.items():
-            eg = gopher_ref(t, p)
-            ec = c4_ref(t, q)
-            if got_g[d] != eg or got_c[d] != ec:
+            eg = gopher_model(t, **p)
+            ec = c4_model(t, **q)
+            got_g[d]["fail_reasons"] = sorted(got_g[d]["fail_reasons"])
+            if any(got_g[d][c] != v for c, v in eg.items()) or any(
+                got_c[d][c] != v for c, v in ec.items()
+            ):
                 bad += 1
                 print(
                     f"  text trial {trial} doc {d}: "

@@ -18,6 +18,15 @@ from w4h_integrated_toolkit_spark.plans.history import specs_from_json
 import json
 from dataclasses import asdict
 
+from tests.reference_models import (
+    bpe_model,
+    c4_model,
+    gopher_model,
+    kmeans_model,
+    pagerank_model,
+    spans_model,
+)
+
 
 # ---- driver-side properties (no Spark jobs, run many examples) ----------
 
@@ -802,39 +811,24 @@ def test_conversion_lag_percentiles_match_sorted_model(spark, pairs):
     )
 )
 def test_pagerank_fixed_point_matches_integer_model(spark, edges):
-    """pagerank_fixed_point against a pure-Python replica of the exact
-    integer recurrence — for random tiny graphs dense with the
-    adversarial shapes: dangling nodes (dst with no out-edges, mass
-    dropped by contract), self-loops, duplicate edges, and input-row
-    permutation. The integer fixed point makes bit-equality the only
+    """pagerank_fixed_point against the exact integer recurrence
+    (reference_models.pagerank_model) — for random tiny graphs dense
+    with the adversarial shapes: dangling nodes (dst with no out-edges,
+    mass dropped by contract), self-loops, duplicate edges, and
+    input-row permutation. The integer fixed point makes bit-equality the only
     acceptable outcome."""
     from w4h_integrated_toolkit_spark.operators.graph import (
         pagerank_fixed_point,
     )
 
-    scale = 10**12
-    damping = 85
     iters = 3
     # collapse duplicate (src, dst) pairs like edges_from_event_sequence
     agg: dict = {}
     for s_, d_, w_ in edges:
-        agg[(s_, d_)] = agg.get((s_, d_), 0) + w_
-    rows = [(f"n{s_}", f"n{d_}", w_) for (s_, d_), w_ in agg.items()]
-
-    nodes = sorted({r[0] for r in rows} | {r[1] for r in rows})
-    n = len(nodes)
-    out = {}
-    for s_, _d, w_ in rows:
-        out[s_] = out.get(s_, 0) + w_
-    teleport = ((100 - damping) * scale // 100) // n
-    rank = {v: scale // n for v in nodes}
-    for _ in range(iters):
-        incoming = {v: 0 for v in nodes}
-        for s_, d_, w_ in rows:
-            incoming[d_] += (rank[s_] * w_) // out[s_]
-        rank = {
-            v: teleport + (damping * incoming[v]) // 100 for v in nodes
-        }
+        key = (f"n{s_}", f"n{d_}")
+        agg[key] = agg.get(key, 0) + w_
+    rows = [(s_, d_, w_) for (s_, d_), w_ in agg.items()]
+    rank = pagerank_model(agg, iters)
 
     for ordering in (rows, rows[::-1]):
         df = spark.createDataFrame(ordering, "src string, dst string, weight long")
@@ -879,38 +873,20 @@ def test_pagerank_overflow_guard_boundary(spark):
     )
 )
 def test_kmeans_iteration_matches_integer_model(spark, pts):
-    """kmeans_iteration against a pure-Python replica of the integer
-    Lloyd step — equidistant ties must break to the LOWEST centroid id,
-    empty clusters must vanish from the output (not emit zero rows),
-    negative component sums must floor toward -inf, and the result must
-    be invariant under input-row permutation."""
+    """kmeans_iteration against the integer Lloyd step
+    (reference_models.kmeans_model) — equidistant ties must break to the
+    LOWEST centroid id, empty clusters must vanish from the output (not
+    emit zero rows), negative component sums must floor toward -inf, and
+    the result must be invariant under input-row permutation."""
     from w4h_integrated_toolkit_spark.operators.similarity import (
         kmeans_iteration,
     )
 
-    scale = 10**6
     vec_rows = [
         (i, [x / 2.0, y / 2.0]) for i, (x, y) in enumerate(pts)
     ]
     cents = [(0, [0.0, 0.0]), (1, [1.0, 1.0]), (2, [0.0, 1.0])]
-
-    def q(x):
-        return round(x * scale)
-
-    assigned: dict = {}
-    for vid, v in vec_rows:
-        best = None
-        for cid, c in cents:
-            d = sum((q(a) - q(b)) ** 2 for a, b in zip(v, c))
-            if best is None or (d, cid) < best[:2]:
-                best = (d, cid)
-        assigned.setdefault(best[1], []).append([q(a) for a in v])
-    expected = {}
-    for cid, members in assigned.items():
-        nm = len(members)
-        for dim in range(2):
-            s_ = sum(m[dim] for m in members)
-            expected[(cid, dim)] = (s_ // nm, nm)   # python // floors
+    expected = kmeans_model(dict(vec_rows), dict(cents))
 
     for ordering in (vec_rows, vec_rows[::-1]):
         vdf = spark.createDataFrame(
@@ -1189,7 +1165,8 @@ def test_scd2_apply_fold_equals_rebuild(spark, events, cutoff, cut2):
     )
 )
 def test_bpe_learn_matches_python_model(spark, texts):
-    """bpe_learn == a literal sequential BPE trainer on random corpora.
+    """bpe_learn == the sequential BPE trainer (reference_models.bpe_model)
+    on random corpora.
 
     The alphabet forces the hard cases: equal-symbol runs ("aaaa" must
     greedily merge to ["aa","aa"], never ["a","aa","a"] — the Spark fold
@@ -1197,43 +1174,11 @@ def test_bpe_learn_matches_python_model(spark, texts):
     frequent count ties (argmax must break by lexicographic pair), and
     words that reduce to a single symbol (pair exhaustion → early stop).
     """
-    import collections
-    import re as _re
-
     from w4h_integrated_toolkit_spark.operators.bpe import bpe_learn
 
     rows = [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    wc = collections.Counter(
-        w for t in texts for w in _re.findall(r"[a-z]+", t.lower())
-    )
-    vocab = {w: list(w) for w in wc}
-    expected = []
-    for rank in range(1, 4):
-        pc = collections.Counter()
-        for w, syms in vocab.items():
-            for a, b in zip(syms, syms[1:]):
-                pc[(a, b)] += wc[w]
-        if not pc:
-            break
-        top = max(pc.values())
-        pair = min(p for p, c in pc.items() if c == top)
-        expected.append((rank, pair[0], pair[1], pc[pair]))
-        for w, syms in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if (
-                    i + 1 < len(syms)
-                    and syms[i] == pair[0]
-                    and syms[i + 1] == pair[1]
-                ):
-                    out.append(pair[0] + pair[1])
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            vocab[w] = out
+    expected, _ = bpe_model(texts)
 
     got = [
         (r["merge_rank"], r["left_sym"], r["right_sym"], r["pair_count"])
@@ -1772,13 +1717,14 @@ def test_pct_match_normalize_twins_property(spark, frags):
     st.booleans(),
 )
 def test_duplicated_spans_matches_python_model(spark, texts, within):
-    """duplicated_spans + strip vs the sequential window/island model at
-    CI budget (the deep randomized sweep is stress_check's fifth
-    section): the tiny a/b alphabet makes chance cross-doc and intra-doc
-    3-token windows common, exercising detection, the island merge and
-    the cut on naturally messy inputs rather than planted runs; the
-    tab/newline letters hit the leading/trailing non-space-whitespace
-    token shift ADVICE r14 #1 found (fixed by _ws_tokens)."""
+    """duplicated_spans + strip vs the sequential window/island model
+    (reference_models.spans_model, which scripts/stress_check.py also
+    sweeps at random k and merge gaps) at CI budget: the tiny a/b
+    alphabet makes chance cross-doc and intra-doc 3-token windows
+    common, exercising detection, the island merge and the cut on
+    naturally messy inputs rather than planted runs; the tab/newline
+    letters hit the leading/trailing non-space-whitespace token shift
+    ADVICE r14 #1 found (fixed by _ws_tokens)."""
     from w4h_integrated_toolkit_spark.operators.dedup import (
         duplicated_spans,
         strip_duplicated_spans,
@@ -1799,48 +1745,8 @@ def test_duplicated_spans_matches_python_model(spark, texts, within):
         for r in strip_duplicated_spans(df, spans=spans_df).collect()
     }
 
-    # sequential model (mirrors scripts/stress_check.py stress_spans)
-    docs_of: dict[tuple, set] = {}
-    count: dict[tuple, int] = {}
-    toks_by = {}
-    for d, t in enumerate(texts):
-        toks = t.strip().split()
-        toks_by[d] = toks
-        for p in range(len(toks) - k + 1):
-            w = tuple(toks[p : p + k])
-            docs_of.setdefault(w, set()).add(d)
-            count[w] = count.get(w, 0) + 1
-    dup = {
-        w
-        for w in count
-        if len(docs_of[w]) > 1 or (within and count[w] >= 2)
-    }
-    exp = set()
-    for d, toks in toks_by.items():
-        pos = [
-            p
-            for p in range(len(toks) - k + 1)
-            if tuple(toks[p : p + k]) in dup
-        ]
-        islands: list[list[int]] = []
-        for p in pos:
-            if islands and p - islands[-1][-1] <= k:
-                islands[-1].append(p)
-            else:
-                islands.append([p])
-        ivs = [(i[0], i[-1] + k) for i in islands]
-        for isl in islands:
-            exp.add((d, isl[0], isl[-1] + k, len(isl)))
-        want = (
-            " ".join(
-                t
-                for i, t in enumerate(toks)
-                if not any(a <= i < b for a, b in ivs)
-            )
-            if ivs
-            else texts[d]
-        )
-        assert cut[d] == want, (d, cut[d], want)
+    exp, want_cut = spans_model(dict(enumerate(texts)), within, k=k)
+    assert cut == want_cut
     assert got == exp
 
 
@@ -1862,80 +1768,6 @@ _GQ_LINE_POOL = [
 ]
 
 
-def _gopher_py_model(text: str) -> dict:
-    """Literal re-derivation of every gopher_quality_flags statistic and
-    rule (paper-default thresholds) — same regexes, same integer/double
-    arithmetic, so equality is exact, not approximate."""
-    import re
-
-    stop = ["the", "be", "to", "of", "and", "that", "have", "with"]
-    t = text.strip()
-    words = re.split(r"\s+", t) if t else []
-    n_words = len(words)
-    nonspace = len(re.sub(r"\s", "", t))
-    mean_wlen = nonspace / n_words if n_words else 0.0
-    n_sym = len(re.findall(r"#", t)) + len(re.findall(r"\.\.\.|…", t))
-    sym = n_sym / n_words if n_words else 0.0
-    lines = [x.strip() for x in text.split("\n")]
-    lines = [x for x in lines if x != ""]
-    n_lines = len(lines)
-    bullet = (
-        sum(1 for x in lines if re.search(r"^[•‣▪●*-]", x)) / n_lines
-        if n_lines
-        else 0.0
-    )
-    ell = (
-        sum(1 for x in lines if re.search(r"(\.\.\.|…)$", x)) / n_lines
-        if n_lines
-        else 0.0
-    )
-    alpha = (
-        sum(1 for w in words if re.search(r"[A-Za-z]", w)) / n_words
-        if n_words
-        else 0.0
-    )
-    lw = {w.lower() for w in words}
-    hits = sum(1 for w in stop if w in lw)
-    s = sorted(lines)
-    dup_cnt = sum(1 for i in range(1, len(s)) if s[i] == s[i - 1])
-    dup_chars = sum(len(s[i]) for i in range(1, len(s)) if s[i] == s[i - 1])
-    line_chars = sum(len(x) for x in lines)
-    dup_f = dup_cnt / n_lines if n_lines else 0.0
-    dup_cf = dup_chars / line_chars if line_chars else 0.0
-    reasons = []
-    if not (50 <= n_words <= 100_000):
-        reasons.append("word_count")
-    if not (3.0 <= mean_wlen <= 10.0):
-        reasons.append("mean_word_len")
-    if not sym <= 0.1:
-        reasons.append("symbol_word_ratio")
-    if not bullet <= 0.9:
-        reasons.append("bullet_lines")
-    if not ell <= 0.3:
-        reasons.append("ellipsis_lines")
-    if not alpha >= 0.8:
-        reasons.append("alpha_words")
-    if not hits >= 2:
-        reasons.append("stopwords")
-    if not dup_f <= 0.3:
-        reasons.append("dup_lines")
-    if not dup_cf <= 0.2:
-        reasons.append("dup_line_chars")
-    return {
-        "n_words": n_words,
-        "mean_word_len": mean_wlen,
-        "symbol_word_ratio": sym,
-        "bullet_line_frac": bullet,
-        "ellipsis_line_frac": ell,
-        "alpha_word_frac": alpha,
-        "stopword_hits": hits,
-        "dup_line_frac": dup_f,
-        "dup_line_char_frac": dup_cf,
-        "fail_reasons": sorted(reasons),
-        "passes": not reasons,
-    }
-
-
 @settings(max_examples=6, deadline=None)
 @given(
     st.lists(
@@ -1946,9 +1778,10 @@ def _gopher_py_model(text: str) -> dict:
 )
 def test_gopher_quality_flags_matches_python_model(spark, docs):
     """Every statistic, every rule verdict, and the composite pass flag
-    equal the literal Python re-derivation — same regexes, same int
-    counts, same double divisions, so the comparison is EXACT (the only
-    tolerated difference is fail_reasons order, canonicalized by sort).
+    equal the literal Python re-derivation (reference_models.gopher_model)
+    — same regexes, same int counts, same double divisions, so the
+    comparison is EXACT (the only tolerated difference is fail_reasons
+    order, canonicalized by sort).
     Sampling lines with repetition exercises the sorted-predecessor
     duplicate-line path on naturally colliding inputs."""
     from w4h_integrated_toolkit_spark.operators.text import gopher_quality_flags
@@ -1961,7 +1794,7 @@ def test_gopher_quality_flags_matches_python_model(spark, docs):
     got = {r["doc_id"]: r.asDict() for r in gopher_quality_flags(df).collect()}
     assert len(got) == len(texts)
     for i, t in enumerate(texts):
-        want = _gopher_py_model(t)
+        want = gopher_model(t)
         g = got[i]
         for k, v in want.items():
             if k == "fail_reasons":
@@ -1987,30 +1820,6 @@ _C4_LINE_POOL = [
 ]
 
 
-def _c4_py_model(text: str) -> dict:
-    import re
-
-    lines = [x.strip() for x in text.split("\n")]
-    lines = [x for x in lines if x != ""]
-    kept = [
-        x
-        for x in lines
-        if re.search(r"[.!?…][\"'”’)\]]*$", x)
-        and len(re.split(r"\s+", x)) >= 5
-        and "javascript" not in x.lower()
-    ]
-    low = text.lower()
-    doc_kept = (
-        len(kept) >= 3 and "lorem ipsum" not in low and "{" not in low
-    )
-    return {
-        "text": "\n".join(kept),
-        "n_lines_kept": len(kept),
-        "n_lines_dropped": len(lines) - len(kept),
-        "doc_kept": doc_kept,
-    }
-
-
 @settings(max_examples=6, deadline=None)
 @given(
     st.lists(
@@ -2021,9 +1830,10 @@ def _c4_py_model(text: str) -> dict:
 )
 def test_c4_clean_lines_matches_python_model(spark, docs):
     """Cleaned text, line counts and the document verdict all equal the
-    literal Python re-derivation exactly, over documents assembled from
-    a pool that exercises every rule (terminal punct incl. quote/ellipsis
-    tails, short lines, both markers, code braces, blank lines)."""
+    literal Python re-derivation (reference_models.c4_model) exactly,
+    over documents assembled from a pool that exercises every rule
+    (terminal punct incl. quote/ellipsis tails, short lines, both
+    markers, code braces, blank lines)."""
     from w4h_integrated_toolkit_spark.operators.text import c4_clean_lines
 
     texts = ["\n".join(lines) for lines in docs]
@@ -2034,7 +1844,7 @@ def test_c4_clean_lines_matches_python_model(spark, docs):
     got = {r["doc_id"]: r.asDict() for r in c4_clean_lines(df).collect()}
     assert len(got) == len(texts)
     for i, t in enumerate(texts):
-        want = _c4_py_model(t)
+        want = c4_model(t)
         for k, v in want.items():
             assert got[i][k] == v, (i, t, k, got[i][k], v)
 
@@ -2141,3 +1951,32 @@ def test_dsir_matches_python_model(spark, tgt_texts, raw_texts, k):
     ).collect()
     assert [r["doc_id"] for r in got] == exp_sel[: len(got)]
     assert len(got) == min(k, len(scored))
+
+
+# ---- the deep stress sweep, one trial per section -------------------------
+
+def test_stress_check_sections_run_clean(spark):
+    """Every section of scripts/stress_check.py runs one trial on the
+    fixture session and matches its model exactly. Nothing else runs the
+    deep sweep, so this keeps its sections (and their imports of the
+    shared reference models) from rotting between full runs. main() is
+    not called: it builds its own session and stops it."""
+    import importlib.util
+    import inspect
+    import os
+    import random
+
+    spec = importlib.util.spec_from_file_location(
+        "stress_check",
+        os.path.join(os.path.dirname(__file__), "..", "scripts", "stress_check.py"),
+    )
+    stress_check = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(stress_check)
+    sections = [
+        fn
+        for name, fn in inspect.getmembers(stress_check, inspect.isfunction)
+        if name.startswith("stress_")
+    ]
+    assert sections
+    bad = {fn.__name__: fn(spark, random.Random(20260815), 1) for fn in sections}
+    assert bad == dict.fromkeys(bad, 0)

@@ -97,6 +97,24 @@ def _cosine_batch(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(num / den)
 
 
+def _rank_topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """Keep each query's ``k`` best neighbors as (query_id, neighbor_id,
+    rank, ``score``): rank by ``score`` descending, ties to the smaller
+    neighbor id, so the result is deterministic. The window is ONE parsed
+    OVER expression: the same WindowExpression as a Window-spec chain
+    (DESC/ASC null ordering defaults match the Column API's), built with
+    fewer driver calls."""
+    return scored.select(
+        "query_id",
+        "neighbor_id",
+        F.expr(
+            "row_number() OVER (PARTITION BY query_id "
+            f"ORDER BY {score} DESC, neighbor_id ASC) AS rank"
+        ),
+        score,
+    ).filter(f"rank <= {k}")
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -122,18 +140,7 @@ def cosine_topk(
     )
     if exclude_self:
         scored = scored.filter("query_id != neighbor_id")
-    # the window is ONE parsed OVER expression (identical WindowExpression —
-    # DESC/ASC null ordering defaults match the Column API's) instead of a
-    # Window-spec object chain: r16 construction pass, same executed plan
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        F.expr(
-            "row_number() OVER (PARTITION BY query_id "
-            "ORDER BY cos DESC, neighbor_id ASC) AS rank"
-        ),
-        "cos",
-    ).filter(f"rank <= {k}")
+    return _rank_topk(scored, "cos", k)
 
 
 def ivf_topk(
@@ -230,16 +237,7 @@ def ivf_topk(
     )
     if exclude_self:
         scored = scored.filter("query_id != neighbor_id")
-    # one parsed OVER expression — r16 construction pass, identical plan
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        F.expr(
-            "row_number() OVER (PARTITION BY query_id "
-            "ORDER BY cos DESC, neighbor_id ASC) AS rank"
-        ),
-        "cos",
-    ).filter(f"rank <= {k}")
+    return _rank_topk(scored, "cos", k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -508,16 +506,7 @@ def lsh_topk(
         .filter("query_id != neighbor_id")
         .withColumn("cos", _cosine_batch(F.col("qv"), F.col("cv")))
     )
-    # one parsed OVER expression — r16 construction pass, identical plan
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        F.expr(
-            "row_number() OVER (PARTITION BY query_id "
-            "ORDER BY cos DESC, neighbor_id ASC) AS rank"
-        ),
-        "cos",
-    ).filter(f"rank <= {k}")
+    return _rank_topk(scored, "cos", k)
 
 
 def semantic_dedup(
@@ -713,21 +702,8 @@ def quantized_topk(
     if exclude_self:
         scored = scored.filter("query_id != neighbor_id")
     # NULL scores are dropped BEFORE ranking (zero-norm vectors must not
-    # consume rank slots); the window is one parsed OVER expression — r16
-    # construction pass, identical executed plan
-    return (
-        scored.filter("qcos IS NOT NULL")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.expr(
-                "row_number() OVER (PARTITION BY query_id "
-                "ORDER BY qcos DESC, neighbor_id ASC) AS rank"
-            ),
-            "qcos",
-        )
-        .filter(f"rank <= {k}")
-    )
+    # consume rank slots)
+    return _rank_topk(scored.filter("qcos IS NOT NULL"), "qcos", k)
 
 
 def kmeans_iteration(

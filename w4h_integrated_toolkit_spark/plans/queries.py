@@ -870,22 +870,31 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.minhash_signatures(_tw(spark, sf_dir, "documents"), n=3, num_perm=8)
 
 
-def _minhash_sql(num_perm: int = 8) -> str:
+def _shingle_hash_ctes() -> str:
+    """words -> sh (each doc's word-3-gram shingles) -> h (their portable
+    MD5-prefix hashes): the CTE chain every MinHash oracle starts from."""
     rolling = _MD5H31_IN_SQL.format(s="s")
-    mh_cols = ", ".join(
-        f"coalesce(list_min([({pa}*h + {pb}) % 2147483647 for h in hs]), 2147483647) AS mh_{i}"
-        for i, (pa, pb) in enumerate(_perm_params(num_perm))
-    )
-    return rf"""
-WITH words AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
+    return rf"""words AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
 sh AS (
   SELECT doc_id,
          CASE WHEN len(w) >= 3
               THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]
               ELSE [] END AS shingles
   FROM words),
-h AS (SELECT doc_id, [{rolling} for s in shingles] AS hs FROM sh)
-SELECT doc_id, {mh_cols} FROM h
+h AS (SELECT doc_id, [{rolling} for s in shingles] AS hs FROM sh)"""
+
+
+def _minhash_cols(num_perm: int) -> str:
+    return ", ".join(
+        f"coalesce(list_min([({pa}*h + {pb}) % 2147483647 for h in hs]), 2147483647) AS mh_{i}"
+        for i, (pa, pb) in enumerate(_perm_params(num_perm))
+    )
+
+
+def _minhash_sql(num_perm: int = 8) -> str:
+    return f"""
+WITH {_shingle_hash_ctes()}
+SELECT doc_id, {_minhash_cols(num_perm)} FROM h
 """
 
 
@@ -1404,12 +1413,10 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b", _r(F.col("jaccard"), 6).alias("jaccard"))
 
 
-def _minhash_lsh_sql(num_perm: int = 8, bands: int = 4, threshold: float = 0.5) -> str:
-    rolling = _MD5H31_IN_SQL.format(s="s")
-    mh_cols = ", ".join(
-        f"coalesce(list_min([({pa}*h + {pb}) % 2147483647 for h in hs]), 2147483647) AS mh_{i}"
-        for i, (pa, pb) in enumerate(_perm_params(num_perm))
-    )
+def _lsh_bucket_ctes(num_perm: int, bands: int) -> str:
+    """The shingle-hash chain, then sig (the MinHash signature) and
+    buckets (one (doc_id, band, key) row per band): the candidate side
+    of the LSH oracles."""
     rpb = num_perm // bands
     band_selects = "\n  UNION ALL ".join(
         "SELECT doc_id, {b} AS band, {key} AS key FROM sig".format(
@@ -1420,23 +1427,26 @@ def _minhash_lsh_sql(num_perm: int = 8, bands: int = 4, threshold: float = 0.5) 
         )
         for b in range(bands)
     )
-    return rf"""
-WITH words AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= 3
-              THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]
-              ELSE [] END AS shingles
-  FROM words),
-h AS (SELECT doc_id, [{rolling} for s in shingles] AS hs FROM sh),
-sig AS (SELECT doc_id, {mh_cols} FROM h),
+    return f"""{_shingle_hash_ctes()},
+sig AS (SELECT doc_id, {_minhash_cols(num_perm)} FROM h),
 buckets AS (
-  {band_selects}),
+  {band_selects})"""
+
+
+def _shingle_set_ctes() -> str:
+    """shx (each doc's distinct shingles) and sizes (their count): the
+    exact-Jaccard side of the LSH oracles."""
+    return """shx AS (SELECT doc_id, unnest(list_distinct(shingles)) AS shingle FROM sh),
+sizes AS (SELECT doc_id, count(*) AS set_size FROM shx GROUP BY doc_id)"""
+
+
+def _minhash_lsh_sql(num_perm: int = 8, bands: int = 4, threshold: float = 0.5) -> str:
+    return f"""
+WITH {_lsh_bucket_ctes(num_perm, bands)},
 cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM buckets a JOIN buckets b USING (band, key) WHERE a.doc_id < b.doc_id),
-shx AS (SELECT doc_id, unnest(list_distinct(shingles)) AS shingle FROM sh),
-sizes AS (SELECT doc_id, count(*) AS set_size FROM shx GROUP BY doc_id),
+{_shingle_set_ctes()},
 common AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
   FROM shx a JOIN shx b USING (shingle) WHERE a.doc_id < b.doc_id GROUP BY 1, 2)
@@ -1495,39 +1505,13 @@ def _incremental_dedup_sql(
     """Oracle: replay the LSH pipeline with the corpus/increment split; the
     candidate join crosses sides only (corpus band rows x increment band
     rows), verification is exact Jaccard over distinct shingles."""
-    rolling = _MD5H31_IN_SQL.format(s="s")
-    mh_cols = ", ".join(
-        f"coalesce(list_min([({pa}*h + {pb}) % 2147483647 for h in hs]), 2147483647) AS mh_{i}"
-        for i, (pa, pb) in enumerate(_perm_params(num_perm))
-    )
-    rpb = num_perm // bands
-    band_selects = "\n  UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {key} AS key FROM sig".format(
-            b=b,
-            key=" || '_' || ".join(
-                f"CAST(mh_{b * rpb + r} AS VARCHAR)" for r in range(rpb)
-            ),
-        )
-        for b in range(bands)
-    )
-    return rf"""
-WITH words AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(w) >= 3
-              THEN [array_to_string(w[i:i+2], ' ') for i in range(1, len(w) - 1)]
-              ELSE [] END AS shingles
-  FROM words),
-h AS (SELECT doc_id, [{rolling} for s in shingles] AS hs FROM sh),
-sig AS (SELECT doc_id, {mh_cols} FROM h),
-buckets AS (
-  {band_selects}),
+    return f"""
+WITH {_lsh_bucket_ctes(num_perm, bands)},
 cand AS (
   SELECT DISTINCT i.doc_id AS new_id, c.doc_id AS corpus_id
   FROM buckets c JOIN buckets i USING (band, key)
   WHERE c.doc_id % 5 <> 0 AND i.doc_id % 5 = 0),
-shx AS (SELECT doc_id, unnest(list_distinct(shingles)) AS shingle FROM sh),
-sizes AS (SELECT doc_id, count(*) AS set_size FROM shx GROUP BY doc_id),
+{_shingle_set_ctes()},
 common AS (
   SELECT i.doc_id AS new_id, c.doc_id AS corpus_id, count(*) AS n_common
   FROM shx c JOIN shx i USING (shingle)
