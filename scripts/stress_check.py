@@ -156,9 +156,7 @@ def stress_kmeans(spark, rnd, trials):
             for r in kmeans_fit(df, k=k, iterations=iters, scale=scale).collect()
         )
         first_k = {vid: vecs[vid] for vid in sorted(vecs)[:k]}
-        want = kmeans_model(
-            vecs, first_k, iterations=iters, scale=scale, half_away_from_zero=True
-        )
+        want = kmeans_model(vecs, first_k, iterations=iters, scale=scale)
         if got != sorted(cell + v for cell, v in want.items()):
             bad += 1
             print("KMEANS MISMATCH", trial, dict(n=n, d=d, k=k, scale=scale))

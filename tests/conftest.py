@@ -41,13 +41,11 @@ def ddb():
 
 def half_away_1e9(x: float) -> int:
     """HALF_UP 1e-9 scaling — the test-side twin of the operators'
-    ``F.round(weight * 1e9)`` (python ``round()`` is banker's, Spark's
-    round is HALF_UP). ONE copy so every model that mirrors the
-    integer-dot law pins the same rounding."""
-    import math
+    ``F.round(weight * 1e9)``. ONE rounding rule (reference_models.half_away)
+    so every model that mirrors the integer-dot law pins the same rounding."""
+    from tests.reference_models import half_away
 
-    y = x * 1e9
-    return int(math.floor(y + 0.5) if y >= 0 else -math.floor(-y + 0.5))
+    return half_away(x, 1e9)
 
 
 def jobs_in(spark, fn):

@@ -84,26 +84,27 @@ def pagerank_model(edges, iterations=3, damping=85, scale=10**12):
     return rank
 
 
-def kmeans_model(
-    vecs, centroids, iterations=1, scale=10**6, half_away_from_zero=False
-):
+def half_away(x, scale):
+    """``x * scale`` rounded half away from zero to an int: the test-side
+    twin of the operators' HALF_UP ``F.round(x * scale)`` (Python's
+    ``round()`` rounds half to even)."""
+    y = x * scale
+    return int(math.floor(y + 0.5) if y >= 0 else -math.floor(-y + 0.5))
+
+
+def kmeans_model(vecs, centroids, iterations=1, scale=10**6):
     """The integer Lloyd step, chained ``iterations`` times. ``vecs`` and
     ``centroids`` map ids to float vectors; both are quantized to
-    ``x * scale`` rounded (Python's half-to-even ``round``, or half away
-    from zero as Spark's ``round``). A vector joins the nearest centroid
-    by squared integer distance, ties to the lowest centroid id; a new
-    centroid is the floor-divided member sum, and a centroid with no
-    members vanishes. Returns ``{(centroid_id, dim): (q_value, n_members)}``
-    of the last step."""
+    ``x * scale`` rounded half away from zero, as Spark's ``round`` does.
+    A vector joins the nearest centroid by squared integer distance, ties
+    to the lowest centroid id; a new centroid is the floor-divided member
+    sum, and a centroid with no members vanishes. Returns
+    ``{(centroid_id, dim): (q_value, n_members)}`` of the last step."""
 
-    def q(x):
-        v = x * scale
-        if half_away_from_zero:
-            return int(math.copysign(math.floor(abs(v) + 0.5), v)) if v else 0
-        return round(v)
-
-    qv = {vid: [q(x) for x in v] for vid, v in vecs.items()}
-    cents = {cid: [q(x) for x in c] for cid, c in centroids.items()}
+    qv = {vid: [half_away(x, scale) for x in v] for vid, v in vecs.items()}
+    cents = {
+        cid: [half_away(x, scale) for x in c] for cid, c in centroids.items()
+    }
     cells = {}
     for _ in range(iterations):
         members = {}
